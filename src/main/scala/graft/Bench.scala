@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     // ERROR, not WARN: the driver's round artifact keeps only a ~2000-char
     // stdout TAIL, and at WARN the pinned global-window queries emit enough
     // `WindowExec: No Partition Defined` lines per pass to crowd every byte
@@ -57,9 +49,8 @@ object Bench {
     // question the third pass used to buy. Recorded numbers stay
     // comparable with the 142 s r1 baseline: every recorded sample is
     // still a WARM min.
-    // parse hardened like GRAFT_CLOSURE_FAST_BUDGET: a typo'd value must
-    // name the variable, not abort after the warmups with a bare
-    // NumberFormatException
+    // a typo'd value must name the variable, not abort after the warmups
+    // with a bare NumberFormatException
     val runs = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_RUNS").map { s =>
         try s.trim.toInt

@@ -15,6 +15,7 @@ import graft.meta.Catalog
   * graft.Main -action load     -dsn <tableDir | jdbc:...> -path <artifactDir>
   * graft.Main -action describe -dsn <tableDir> -table <name>
   * graft.Main -action query    -dsn <tableDir> -query <operator> [-path <outDir>]
+  * graft.Main -action explain  -dsn <tableDir> -query <operator | "SELECT ...">
   * graft.Main -action compact  -path <artifactDir> [-table <name>]
   * graft.Main -action merge    -path <baseDir> -delta <deltaDir>
   * graft.Main -action profile  -path <artifactDir> | -dsn <tableDir> -table <name>
@@ -103,11 +104,23 @@ object Main {
     if (cli.version) { out(s"graft version ${BuildInfo.version}"); return 0 }
     val config = Option(cli.conf).filter(_.nonEmpty)
       .orElse(sys.env.get("GRAFT_CONF"))
-      .map(p => ExtractConfig.fromJson(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(p))))
+      .map(ExtractConfig.fromFile)
       .getOrElse(ExtractConfig())
     val engine = new Engine(spark, Catalog.tpch,
       t => Tables(spark, cli.dsn, t), config)
+    // ad-hoc SQL front door (query, explain): every <dsn>/<table>.parquet
+    // becomes a temp view (events through the schema-adaptive Tables
+    // read), so the statement runs through the full Catalyst stack — with
+    // GraftExtensions' functions and optimizer rule when the session was
+    // built with them. Returns the registered view names.
+    def registerDsnViews(): Seq[String] = {
+      val tables = Option(new java.io.File(cli.dsn).listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.endsWith(".parquet"))
+        .map(_.getName.stripSuffix(".parquet")).sorted.toSeq
+      tables.foreach(t => Tables(spark, cli.dsn, t).createOrReplaceTempView(t))
+      tables
+    }
+    def isAdHocSql: Boolean = cli.query.trim.matches("(?is)(select|with)\\b.*")
 
     cli.action match {
       case "extract" =>
@@ -172,18 +185,8 @@ object Main {
         }
         if (cli.query.isEmpty || cli.dsn.isEmpty) { out(usage); 2 }
         else SparkEntry.queries.get(cli.query) match {
-          case None if cli.query.trim.matches("(?is)(select|with)\\b.*") =>
-            // ad-hoc SQL front door: every <dsn>/<table>.parquet becomes a
-            // temp view (events through the schema-adaptive Tables read),
-            // then the statement runs through the full Catalyst stack —
-            // with GraftExtensions' functions and optimizer rule when the
-            // session was built with them
-            val dir = new java.io.File(cli.dsn)
-            val tables = Option(dir.listFiles()).getOrElse(Array.empty)
-              .filter(f => f.getName.endsWith(".parquet"))
-              .map(_.getName.stripSuffix(".parquet")).sorted
-            tables.foreach(t =>
-              Tables(spark, cli.dsn, t).createOrReplaceTempView(t))
+          case None if isAdHocSql =>
+            val tables = registerDsnViews()
             if (cli.verbose) out(s"views: ${tables.mkString(", ")}")
             emit("sql", spark.sql(cli.query))
           case None =>
@@ -235,20 +238,15 @@ object Main {
             out(s"$t: merged ($n rows)") }
           0
         }
-      // ANALYZE-style stats over an artifact's tables (or one parquet
-      // the plan a query WOULD run — the tuning loop's first tool, for
-      // registered operators and ad-hoc SQL alike
+      // print the plan a query WOULD run — the tuning loop's first tool,
+      // for registered operators and ad-hoc SQL alike
       case "explain" =>
         if (cli.query.isEmpty || cli.dsn.isEmpty) { out(usage); 2 }
         else {
           val df = SparkEntry.queries.get(cli.query) match {
             case Some(fn) => Some(fn(spark, cli.dsn))
-            case None if cli.query.trim.matches("(?is)(select|with)\\b.*") =>
-              val dir = new java.io.File(cli.dsn)
-              Option(dir.listFiles()).getOrElse(Array.empty)
-                .filter(_.getName.endsWith(".parquet"))
-                .map(_.getName.stripSuffix(".parquet"))
-                .foreach(t => Tables(spark, cli.dsn, t).createOrReplaceTempView(t))
+            case None if isAdHocSql =>
+              registerDsnViews()
               Some(spark.sql(cli.query))
             case None => None
           }
@@ -261,6 +259,7 @@ object Main {
               out(s"unknown query '${cli.query}'"); 2
           }
         }
+      // ANALYZE-style stats over an artifact's tables (or one parquet
       // table): the first look a migration/pipeline user takes at data
       // they just extracted — row/null/distinct counts, min/max
       case "profile" =>
@@ -430,14 +429,7 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val cli = parse(args)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel(if (cli.verbose) "INFO" else "WARN")
     try sys.exit(run(spark, cli)) finally spark.stop()
   }

@@ -11,14 +11,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val n = args(1).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     for (q <- args.drop(2)) {
       val fn = SparkEntry.queries(q)

@@ -1,18 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local mimic of the driver's t1 smoke gate: SparkEntry.entry rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -883,21 +883,12 @@ object ClosureExtractor {
     * anyway. 0 disables the fast path (specs use this to pin
     * local == distributed).
     */
-  val FastPathBudget: Long =
-    sys.env.get("GRAFT_CLOSURE_FAST_BUDGET").map { s =>
-      // a bare .toLong here would surface a typo'd env value as an
-      // ExceptionInInitializerError far from the setting; fail with the
-      // variable named instead
-      try s.trim.toLong
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"GRAFT_CLOSURE_FAST_BUDGET must be an integer row budget, got '$s'")
-      }
-    }.getOrElse(200000L)
+  val FastPathBudget: Long = 200000L
 
   /** Upper bound on any single fast-path probe await — see the bounded
     * await in [[tryRunAllLocal]]. Generous by construction: the whole
-    * fast path is capped at [[FastPathBudget]] rows.
+    * fast path is capped at [[FastPathBudget]] rows. Other waits on
+    * seed-bounded key-set collects reuse it.
     */
   val ProbeAwaitMax: scala.concurrent.duration.FiniteDuration =
     scala.concurrent.duration.Duration(15, java.util.concurrent.TimeUnit.MINUTES)

@@ -193,6 +193,8 @@ class Engine(
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(4, extracted.size)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    // unbounded on purpose: export time grows with the data, so any fixed
+    // bound would fail a legitimate large export
     try Await.result(
       Future.sequence(extracted.map { case (t, df) => Future {
         val n = JsonTableIO.write(pgEncoded(t, df), outDir, t, compression)

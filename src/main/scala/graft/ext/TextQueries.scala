@@ -2721,14 +2721,6 @@ object TextQueries {
       .select(col("word"), col("n"), col("within_envelope"))
       .orderBy(col("n").desc, col("word"))
 
-  /** Raw-estimate form (stored counter + error bound exposed;
-    * order-dependent, hence unregistered).
-    */
-  def vocabHeavyHittersRaw(spark: SparkSession, dir: String): DataFrame =
-    vocabHeavyHittersCore(spark, dir)
-      .select(col("word"), col("n"), col("est"), col("err"))
-      .orderBy(col("n").desc, col("word"))
-
   private def vocabHeavyHittersCore(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.HeavyHitters._
     val toks = Tables(spark, dir, "documents")

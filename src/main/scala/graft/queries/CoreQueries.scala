@@ -627,17 +627,18 @@ object CoreQueries {
     // key-set collects (SEED-bounded: 5 customers' closure, never
     // corpus rows) are independent single-task jobs, so they run
     // overlapped from a small driver pool (guide §2.6) and land as
-    // LocalRelations that broadcast for free in the prune joins.
+    // LocalRelations that broadcast for free in the prune joins. Being
+    // seed-bounded, the wait takes the fast-path probe bound rather than
+    // blocking forever on a stuck job.
     val prevLocal: Map[String, (org.apache.spark.sql.types.StructType,
         Array[org.apache.spark.sql.Row])] = {
       import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       try Await.result(
         Future.traverse(engine.deltaBaseline(prevDir).toSeq) { case (t, df) =>
           Future(t -> (df.schema, df.collect()))
-        }, Duration.Inf).toMap
+        }, ClosureExtractor.ProbeAwaitMax).toMap
       finally pool.shutdown()
     }
     val prevKeys: Map[String, org.apache.spark.sql.DataFrame] =

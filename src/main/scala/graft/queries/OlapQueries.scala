@@ -413,13 +413,6 @@ object OlapQueries {
     tableProfileApproxCore(Tables(spark, dir, "orders"), uniqueCol = Some("o_orderkey"),
       emitEstimate = false)
 
-  /** Raw-estimate profile (approx `n_distinct` exposed; engine-specific,
-    * hence unregistered — the registered [[tableProfile]] is the
-    * deterministic envelope form with the same plan).
-    */
-  def tableProfileRaw(spark: SparkSession, dir: String): DataFrame =
-    tableProfileApproxCore(Tables(spark, dir, "orders"), uniqueCol = Some("o_orderkey"))
-
   /** Exact-NDV profile (ANALYZE semantics, oracle-gated). Plans through
     * the Expand — test-scale/small-table use only; the shipped
     * [[tableProfile]] is the approx form.

@@ -28,10 +28,6 @@ object StreamingOps {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** File-source stream over an events directory (parquet). */
-  def readEvents(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.schema(eventSchema).parquet(path)
-
   /** Tumbling 1-day counts per event type, 10-minute watermark. */
   def tumblingCounts(events: DataFrame): DataFrame =
     events.withWatermark("ts", "10 minutes")

@@ -86,4 +86,25 @@ class StaticAuditSpec extends AnyFunSuite {
     } yield s"${mainRoot.relativize(p)}: $n"
     assert(hits.isEmpty, "banned driver-side idiom:\n" + hits.mkString("\n"))
   }
+
+  private def filesWith(needle: String): Map[String, Int] =
+    scalaFiles.map(p => mainRoot.relativize(p).toString -> countIn(p, needle))
+      .filter(_._2 > 0).toMap
+
+  // every entry point runs on Sessions.local(); a second builder or a
+  // second SPARK_GRAFT_CPUS parse is how their settings drifted apart
+  test("one session factory: SparkSession.builder only in Sessions") {
+    assert(filesWith("SparkSession.builder") == Map(
+      "graft/Sessions.scala" -> 1,
+      // Scaladoc usage example for withExtensions, not a call
+      "graft/functions/GraftExtensions.scala" -> 1))
+  }
+
+  test("SPARK_GRAFT_CPUS is read only by Sessions") {
+    assert(filesWith("SPARK_GRAFT_CPUS").keySet == Set("graft/Sessions.scala"))
+  }
+
+  test("the closure fast-path budget has no env override") {
+    assert(filesWith("GRAFT_CLOSURE_FAST_BUDGET").isEmpty)
+  }
 }
