@@ -200,7 +200,6 @@ class ClosureExtractor(
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.StructType
     val spark = seeds.headOption.map(_._2.sparkSession).getOrElse(return None)
-    val t0 = System.nanoTime()
     // thread-safe remaining budget: probes within an iteration run
     // CONCURRENTLY (independent scans of different tables — against a
     // 100 TB lake each probe is a real-latency scan, and an iteration's
@@ -448,8 +447,6 @@ class ClosureExtractor(
           }
         }
         frontier = nextFrontier.toMap
-        if (sys.env.contains("GRAFT_BFS_PROF"))
-          System.err.println(f"[bfs-local] depth=$depth elapsed=${(System.nanoTime() - t0) / 1e9}%.2fs frontier=${frontier.view.mapValues(_._1.size).toMap}")
         depth += 1
       }
       val result: Map[String, DataFrame] = acc.iterator.map { case (t, ks) =>
@@ -459,14 +456,9 @@ class ClosureExtractor(
         t -> spark.createDataFrame(rows, schema)
       }.toMap
       val sizes = acc.iterator.map { case (t, ks) => t -> ks.size.toLong }.toMap
-      if (sys.env.contains("GRAFT_BFS_PROF"))
-        System.err.println(f"[bfs-local] done elapsed=${(System.nanoTime() - t0) / 1e9}%.2fs sizes=$sizes budgetLeft=$budget")
       Some((result, sizes))
     } catch {
-      case a: ClosureExtractor.FastPathAbort =>
-        if (sys.env.contains("GRAFT_BFS_PROF"))
-          System.err.println(s"[bfs-local] fallback to distributed: ${a.why}")
-        None
+      case _: ClosureExtractor.FastPathAbort => None
     } finally {
       // kill, don't drain: on an abort the in-flight probes' Spark jobs
       // would otherwise run to completion and compete for cores with
@@ -614,8 +606,6 @@ class ClosureExtractor(
           .persist(StorageLevel.MEMORY_AND_DISK))
 
     while (frontier.nonEmpty) {
-      val iterT0 = System.nanoTime()
-
       val next = scala.collection.mutable.Map.empty[String, DataFrame]
       // chain inputs: every key set PRODUCED this iteration for a
       // chainable table (frontier tables at depth ≥ 1 were chained the
@@ -840,8 +830,6 @@ class ClosureExtractor(
         else { if (sizes.getOrElse(t, 0L) == 0L) df.unpersist(); None }
       }
       frontierSizes = sizes
-      if (sys.env.contains("GRAFT_BFS_PROF"))
-        System.err.println(f"[bfs] depth=$depth elapsed=${(System.nanoTime() - iterT0) / 1e9}%.2fs fresh=${sizes} frontier=${frontier.keys.toSeq.sorted}")
       depth += 1
     }
     // Materialize the final per-table key sets (small: key columns only),
@@ -937,6 +925,6 @@ object ClosureExtractor {
     * unsupported shape — fall back to the distributed BFS. Stackless:
     * thrown on expected paths, never diagnostic.
     */
-  private[closure] final class FastPathAbort(val why: String)
+  private[closure] final class FastPathAbort(why: String)
     extends RuntimeException(why, null, false, false)
 }

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.closure.{ClosureExtractor, ConfigQuery, TraversalPolicy}
 import graft.conf.ExtractConfig
@@ -132,24 +133,32 @@ class Engine(
     * artifact dir. Tables unknown to the catalog are skipped (they
     * cannot appear in a new closure either), and so are ZERO-COUNT
     * tables — a delta export routinely contains them, and JSON schema
-    * inference on an empty artifact throws. A catalog with column
-    * metadata gives the read an explicit schema (no inference pass —
-    * the hidden full-scan cost [[JsonTableIO.read]] warns about);
-    * otherwise the source table's own schema serves.
+    * inference on an empty artifact throws. The read runs under
+    * [[artifactReadSchema]], sparing the inference pass (the hidden
+    * full-scan cost [[JsonTableIO.read]] warns about) wherever it can.
     */
   def deltaBaseline(prevDir: String): Map[String, DataFrame] =
     JsonTableIO.listTables(prevDir).flatMap { t =>
       catalog.tables.get(t)
         .filter(_ => JsonTableIO.readManifest(prevDir, t).count > 0L)
         .map { meta =>
-          val schema =
-            if (meta.columns.nonEmpty)
-              Some(graft.io.PgTypeCodecs.artifactSchemaFor(meta))
-            else scala.util.Try(loadTable(t).schema).toOption
-          t -> JsonTableIO.read(spark, prevDir, t, schema)
+          t -> JsonTableIO.read(spark, prevDir, t, artifactReadSchema(t))
             .select(meta.primaryKey.map(org.apache.spark.sql.functions.col): _*)
         }
     }.toMap
+
+  /** Schema to read table `t`'s artifact under. A catalog with pg type
+    * strings (static or introspected via JdbcIntrospect/PgIntrospect)
+    * gives an EXPLICIT artifact schema — no JSON inference pass. Else
+    * the source table's schema is a best-effort optimization; absent a
+    * readable source (e.g. loading into a JDBC target with no parquet
+    * dir) this is None and the read falls back to inference.
+    */
+  private def artifactReadSchema(t: String): Option[StructType] =
+    catalog.tables.get(t).filter(_.columns.nonEmpty) match {
+      case Some(meta) => Some(graft.io.PgTypeCodecs.artifactSchemaFor(meta))
+      case None => scala.util.Try(loadTable(t).schema).toOption
+    }
 
   /** Apply the config's sanitize rules for `table` (no-op without rules). */
   def sanitized(table: String, df: DataFrame): DataFrame =
@@ -167,22 +176,20 @@ class Engine(
     * into `<outDir>/media` (`etl/engine.go:166-175`, `etl/util.go:48-72`);
     * download failures are logged-not-fatal like the reference's.
     */
-  def extractTo(seedQuery: String, outDir: String,
-      compression: Option[String] = None): Map[String, Long] =
-    writeAll(extract(seedQuery).toSeq, outDir, compression)
+  def extractTo(seedQuery: String, outDir: String): Map[String, Long] =
+    writeAll(extract(seedQuery).toSeq, outDir)
 
   /** [[extractDelta]] + the export loop: write only the rows NEW since
     * the previous export at `prevDir` (CLI: `-action extract -delta`;
     * `-delta-full` selects `incremental = false`).
     */
   def extractDeltaTo(seedQuery: String, outDir: String, prevDir: String,
-      compression: Option[String] = None,
       incremental: Boolean = true): Map[String, Long] =
     writeAll(extractDelta(seedQuery, deltaBaseline(prevDir), incremental).toSeq,
-      outDir, compression)
+      outDir)
 
-  private def writeAll(extracted: Seq[(String, DataFrame)], outDir: String,
-      compression: Option[String]): Map[String, Long] = {
+  private def writeAll(extracted: Seq[(String, DataFrame)],
+      outDir: String): Map[String, Long] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     // per-table exports are independent Spark jobs — submit them from a
@@ -197,7 +204,7 @@ class Engine(
     // bound would fail a legitimate large export
     try Await.result(
       Future.sequence(extracted.map { case (t, df) => Future {
-        val n = JsonTableIO.write(pgEncoded(t, df), outDir, t, compression)
+        val n = JsonTableIO.write(pgEncoded(t, df), outDir, t)
         for {
           sc <- config.schemaFor(t).toSeq
           c <- sc.columns if df.columns.contains(c.name)
@@ -262,22 +269,12 @@ class Engine(
     */
   def load(outDir: String): Map[String, DataFrame] =
     JsonTableIO.listTables(outDir).map { t =>
-      catalog.tables.get(t).filter(_.columns.nonEmpty) match {
-        // a catalog with pg type strings (static or introspected via
-        // JdbcIntrospect/PgIntrospect) gives the artifact an EXPLICIT
-        // schema — no JSON inference pass — and re-parses the columns
-        // whose artifact representation is a literal (timestamp arrays)
-        case Some(meta) =>
-          val df = JsonTableIO.read(spark, outDir, t,
-            Some(graft.io.PgTypeCodecs.artifactSchemaFor(meta)))
-          t -> df.select(meta.columns.map(c => graft.io.PgTypeCodecs
-            .decodeFromArtifact(c.dataType, df(c.name)).as(c.name)): _*)
-        case None =>
-          // source schema is a best-effort optimization (skips JSON
-          // inference); absent a readable source — e.g. loading into a
-          // JDBC target with no parquet dir — fall back to inference
-          val schema = scala.util.Try(loadTable(t).schema).toOption
-          t -> JsonTableIO.read(spark, outDir, t, schema)
+      val df = JsonTableIO.read(spark, outDir, t, artifactReadSchema(t))
+      // pg-typed columns whose artifact representation is a literal
+      // (timestamp arrays) are re-parsed
+      t -> catalog.tables.get(t).filter(_.columns.nonEmpty).fold(df) { meta =>
+        df.select(meta.columns.map(c => graft.io.PgTypeCodecs
+          .decodeFromArtifact(c.dataType, df(c.name)).as(c.name)): _*)
       }
     }.toMap
 

@@ -366,29 +366,27 @@ object DedupIndex {
     */
   def ingest(spark: SparkSession, batch: DataFrame, dir: String,
       maintainBloom: Boolean = false): DataFrame = {
-    def lap[T](tag: String)(f: => T): T =
-      graft.SparkUtil.lap("  ingest.", tag)(f)
     val r = root(dir)
     val st = state(dir)
     val gen = SegmentLog.nextGen(Some(st))
     val seg = SegmentLog.segName(gen)
     val pen = SegmentLog.extraName("pending", gen)
-    val idx = lap("idx-plan")(rows(spark, dir))
+    val idx = rows(spark, dir)
     // the batch's md5-per-shingle pipeline runs ONCE into a narrow
     // checkpoint; text rides along for the emit/pending rows
-    val b = lap("fpSig-plan")(DedupQueries.fpSig(batch)
+    val b = DedupQueries.fpSig(batch)
       .join(batch.select("doc_id", "text"), Seq("doc_id"))
       .select("doc_id", "text", "fp", "sig")
-      .localCheckpoint(false))
-    val pendingOld = lap("pending-plan")(st.extras.get("pending")
+      .localCheckpoint(false)
+    val pendingOld = st.extras.get("pending")
       .map(_ => spark.read.parquet(st.extraPath(r, "pending")))
       .getOrElse(spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), b.schema)))
+        new java.util.ArrayList[org.apache.spark.sql.Row](), b.schema))
     // resolved BEFORE the bucket frame is built: the crossing check only
     // ever runs with a non-empty pending set, so this single small-read
     // count decides whether that second consumer exists at all
     val mayCross = st.extras.contains("pending") &&
-      !lap("pending-isEmpty")(pendingOld.isEmpty)
+      !pendingOld.isEmpty
     val unioned =
       idx.select(col("doc_id"), lit(true).as("is_old"), col("fp"), col("sig"))
         .unionByName(b.select(col("doc_id"), lit(false).as("is_old"),
@@ -401,15 +399,14 @@ object DedupIndex {
     // check will actually read it a second time — with an empty pending
     // set the near rule stays the single consumer and no per-batch
     // bucket materialization is paid.
-    val buckets = lap("parts-plan") {
+    val buckets = {
       val raw = DedupQueries.bucketMembers(unioned)
       if (mayCross) raw.localCheckpoint(false) else raw
     }
-    val (survivors, nearOnly) = lap("core-plan")(
-      DedupQueries.dedupIncrementalParts(
-        unioned, DedupQueries.nearDroppedFromBuckets(buckets)))
-    lap("seg-write")(b.select("doc_id", "fp", "sig").withColumn("seed", lit(false))
-      .write.mode("overwrite").parquet(s"$r/$seg"))
+    val (survivors, nearOnly) = DedupQueries.dedupIncrementalParts(
+      unioned, DedupQueries.nearDroppedFromBuckets(buckets))
+    b.select("doc_id", "fp", "sig").withColumn("seed", lit(false))
+      .write.mode("overwrite").parquet(s"$r/$seg")
     def bandsOf(df: DataFrame) = DedupQueries.bandedKeys(
       df.filter(col("sig").isNotNull).select("doc_id", "sig"))
     val resurrected: DataFrame =
@@ -418,25 +415,25 @@ object DedupIndex {
         // ([2,64]) and the batch pushed the union past the cap; tot > 64
         // with oc ≤ 64 implies the batch touched it, so no separate
         // touched-bucket semi-join is needed
-        val crossed = lap("crossed")(buckets
+        val crossed = buckets
           .select(col("band"), col("bucket"),
             expr("size(filter(ds, m -> m.is_old))").as("oc"),
             size(col("ds")).as("tot"))
           .filter(col("oc").between(2, 64) && col("tot") > 64)
           .select("band", "bucket")
-          .localCheckpoint(false))
+          .localCheckpoint(false)
         // steady state (no bucket crossed — the designed regime) exits
         // here for the cost of one count over the shared bucket frame;
         // the pending-candidate pipeline below runs only when a crossing
         // can actually strand candidates
-        if (lap("crossed-isEmpty")(crossed.isEmpty)) pendingOld.limit(0)
+        if (crossed.isEmpty) pendingOld.limit(0)
         else {
-        val candidates = lap("cands")(pendingOld.join(
+        val candidates = pendingOld.join(
             bandsOf(pendingOld).join(crossed, Seq("band", "bucket"), "left_semi")
               .select("doc_id").distinct(),
             Seq("doc_id"), "left_semi")
-          .localCheckpoint(false))
-        if (lap("cands-isEmpty")(candidates.isEmpty)) candidates
+          .localCheckpoint(false)
+        if (candidates.isEmpty) candidates
         else {
           val newIdx = idx.unionByName(
             b.select("doc_id", "fp", "sig").withColumn("seed", lit(false)))
@@ -457,27 +454,24 @@ object DedupIndex {
       } else pendingOld.limit(0)
     // eager: the emit rows read the OLD pending file, which the commit
     // below supersedes and cleanup deletes
-    val emitted = lap("emit-ckpt")(b.join(survivors, Seq("doc_id"), "left_semi")
+    val emitted = b.join(survivors, Seq("doc_id"), "left_semi")
       .select("doc_id", "text")
       .unionByName(resurrected.select("doc_id", "text"))
-      .localCheckpoint(true))
-    lap("pending-write")(
-      pendingOld.join(resurrected.select("doc_id"), Seq("doc_id"), "left_anti")
-        .unionByName(b.join(nearOnly, Seq("doc_id"), "left_semi"))
-        .select("doc_id", "text", "fp", "sig")
-        .write.mode("overwrite").parquet(s"$r/$pen"))
-    lap("commit+cleanup") {
-      SegmentLog.commit(r, SegmentLog.State(gen, st.segments :+ seg,
-        st.extras + ("pending" -> pen)))
-      SegmentLog.cleanup(r)
-    }
+      .localCheckpoint(true)
+    pendingOld.join(resurrected.select("doc_id"), Seq("doc_id"), "left_anti")
+      .unionByName(b.join(nearOnly, Seq("doc_id"), "left_semi"))
+      .select("doc_id", "text", "fp", "sig")
+      .write.mode("overwrite").parquet(s"$r/$pen")
+    SegmentLog.commit(r, SegmentLog.State(gen, st.segments :+ seg,
+      st.extras + ("pending" -> pen)))
+    SegmentLog.cleanup(r)
     // per-batch sketch maintenance, folded in HERE so the fingerprints
     // come from the already-checkpointed batch frame instead of a
     // re-read of the just-written segment (growBloomLatest's shape);
     // runs after the commit above, so the commit-then-fold contract
     // growBloom documents holds
     if (maintainBloom)
-      lap("grow-bloom")(growBloom(spark, dir, b.select("fp"), b.count()))
+      growBloom(spark, dir, b.select("fp"), b.count())
     if (mayCross) graft.SparkUtil.release(buckets)
     graft.SparkUtil.release(b)
     emitted

@@ -388,6 +388,10 @@ object GraphQueries {
     */
   private[ext] def bfsHopsOn(e0: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
+    // localCheckpoint cuts the lineage: its blocks live only on the
+    // executor that computed them and are lost with it, so on a cluster
+    // a lost executor fails this query instead of recomputing the edge
+    // list (local mode has no such loss; lpaOn's edge list shares it)
     val e = e0.repartition(col("s")).localCheckpoint(true)
     try {
       var seen = seeds.select(col("node"), lit(0).as("hop"))
@@ -772,16 +776,16 @@ object GraphQueries {
       for (_ <- 1 to HitsRounds) {
         // per side: the raw-score aggregate feeds both the 1-row max
         // and the renormalized projection inside ONE checkpoint job.
-        // persist() makes the two consumers share ONE physical tower:
-        // the broadcast-max subquery executes first (broadcasts are
-        // prepared before the main stages submit), materializing the
-        // node-scale aggregate into the cache, and the renormalized
-        // projection then reads the cached rows instead of re-running
-        // the edge join + aggregate (guide §2.4: two consumers of one
-        // subtree share one computation). Unpersisted right after the
-        // eager checkpoint — nothing leaks past the round. (A
-        // driver-scalar variant with collect round-trips re-measured
-        // +0.8 s in r16; this form keeps the single-job round shape.)
+        // persist() lets the two consumers share ONE physical tower:
+        // whichever of the broadcast-max subquery and the renormalized
+        // projection runs second reads the cached node-scale aggregate
+        // instead of re-running the edge join + aggregate (guide §2.4:
+        // two consumers of one subtree share one computation); Spark
+        // does not fix their order, and either order dedups. Unpersisted
+        // right after the eager checkpoint — nothing leaks past the
+        // round. (A driver-scalar variant with collect round-trips
+        // re-measured +0.8 s in r16; this form keeps the single-job
+        // round shape.)
         val a0 = e.join(hub, Seq("p"))
           .groupBy("s").agg(sum("h").as("a")).persist()
         val amax = a0.agg(max("a").as("mx"))

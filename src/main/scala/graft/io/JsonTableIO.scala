@@ -1,7 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, explode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, count, explode, lit}
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructType}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -61,33 +61,66 @@ object JsonTableIO {
     */
   private val DataDirName = raw"data(?:-g\d+)?".r
 
-  private def renderManifest(tableName: String, count: Long,
-      dataDir: String, staleDir: Option[String] = None): String = {
+  private def renderManifest(m: Manifest): String = {
     val dd =
-      if (dataDir == "data") ""
-      else s""", "data_dir": ${quote(dataDir)}"""
-    val sd = staleDir.fold("")(s => s""", "stale_dir": ${quote(s)}""")
-    s"""{"table_name": ${quote(tableName)}, "count": $count$dd$sd}"""
+      if (m.dataDir == "data") ""
+      else s""", "data_dir": ${quote(m.dataDir)}"""
+    val sd = m.staleDir.fold("")(s => s""", "stale_dir": ${quote(s)}""")
+    s"""{"table_name": ${quote(m.tableName)}, "count": ${m.count}$dd$sd}"""
   }
 
-  /** Atomic manifest replace: write-to-temp + single rename. This IS the
-    * commit — everything else (data generations, cleanup) is reader-
-    * invisible until or after this call.
+  /** THE commit every writer ends in. `stage` does the reader-invisible
+    * work (writing a generation, counting) and returns the manifest to
+    * publish; one atomic replace of the one-line manifest then commits
+    * it. If anything fails before that replace lands, the `uncommitted`
+    * generation is deleted — it was never referenced, and a full-size
+    * orphan must not outlive a failed op. Once the pointer swapped it is
+    * the LIVE generation and survives even if the sweep below throws:
+    * older generations and crash orphans go (only unreferenced dirs, so
+    * a crash mid-sweep strands orphans for the next op, never a
+    * dangling pointer), then the stale envelope (readers already prefer
+    * the manifest).
     */
-  private def writeManifestAtomic(outDir: String, tableName: String,
-      json: String): Unit = {
-    val dir = Paths.get(s"$outDir/$tableName")
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(".manifest.json.tmp")
-    Files.writeString(tmp, json)
-    try Files.move(tmp, dir.resolve("manifest.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(tmp, dir.resolve("manifest.json"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+  private def commit(outDir: String, tableName: String,
+      uncommitted: Option[Path])(stage: => Manifest): Manifest = {
+    val m =
+      try {
+        val m = stage
+        SegmentLog.replaceAtomically(
+          Paths.get(s"$outDir/$tableName/manifest.json"), renderManifest(m))
+        m
+      } catch {
+        case e: Throwable =>
+          uncommitted.foreach(p => SegmentLog.deleteRecursively(p.toString))
+          throw e
+      }
+    cleanupDataDirs(outDir, tableName, keep = Set(m.dataDir) ++ m.staleDir)
+    Files.deleteIfExists(singleFilePath(outDir, tableName))
+    m
+  }
+
+  /** The counted write behind [[write]], [[writeGen]] and [[compact]]:
+    * refuse foreign data, write `rows` into `target` as `format` part
+    * files, then [[commit]] `manifestFor(rowCount)`. The count rides on
+    * the write itself via an Observation — no second computation of the
+    * rows and no re-scan of the written files (both full extra passes
+    * at scale). A fresh `data-gN` target is rolled back on failure; the
+    * plain `data` dir [[write]] overwrites in place is never deleted.
+    */
+  private def writeCounted(outDir: String, tableName: String, target: Path,
+      rows: DataFrame, format: String, compression: Option[String])(
+      manifestFor: Long => Manifest): Long = {
+    currentManifest(outDir, tableName)
+      .foreach(guardForeignData(outDir, tableName, _))
+    val obs = Observation(s"graft_write_${tableName}_${target.getFileName}")
+    commit(outDir, tableName,
+        Some(target).filter(_.getFileName.toString != "data")) {
+      val w = rows.observe(obs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).format(format)
+      compression.fold(w)(c => w.option("compression", c))
+        .save(target.toString)
+      manifestFor(obs.get("n").asInstanceOf[Long])
+    }.count
   }
 
   /** Delete every data generation not in `keep` (live + retained stale),
@@ -106,10 +139,10 @@ object JsonTableIO {
           DataDirName.matches(p.getFileName.toString) &&
           !keep.contains(p.getFileName.toString))
         finally s.close()
-      gens.foreach(deleteRecursively)
+      gens.foreach(p => SegmentLog.deleteRecursively(p.toString))
     }
-    deleteRecursively(oldDirPath(outDir, tableName))
-    deleteRecursively(Paths.get(s"$outDir/$tableName/.data.compacting"))
+    SegmentLog.deleteRecursively(oldDirPath(outDir, tableName).toString)
+    SegmentLog.deleteRecursively(s"$outDir/$tableName/.data.compacting")
   }
 
   /** The manifest of a partitioned artifact, when one exists. */
@@ -156,33 +189,14 @@ object JsonTableIO {
     */
   def write(df: DataFrame, outDir: String, tableName: String,
       compression: Option[String] = None): Long = {
-    val tableDir = s"$outDir/$tableName"
-    // the Overwrite below lands on the plain data dir — foreign rows
-    // there (resumed stream) must refuse, not be silently replaced
-    currentManifest(outDir, tableName)
-      .foreach(guardForeignData(outDir, tableName, _))
-    // the manifest count rides on the write itself via an Observation —
-    // no second computation of `df` and no re-scan of the written files
-    // (both full extra passes at scale)
-    val obs = org.apache.spark.sql.Observation(s"graft_write_$tableName")
-    val writer = df.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
-    compression.fold(writer)(c => writer.option("compression", c))
-      .json(s"$tableDir/data")
-    val count = obs.get("n").asInstanceOf[Long]
-    // the atomic manifest replace is the commit: it re-points a
-    // previously-compacted artifact (data_dir data-gN) back at the fresh
-    // plain `data` dir in the same instant it publishes the new count.
-    // The replaced generation is retained one cycle for in-flight readers.
+    // the commit re-points a previously-compacted artifact (data_dir
+    // data-gN) back at the fresh plain `data` dir in the same instant it
+    // publishes the new count; the replaced generation is retained one
+    // cycle for in-flight readers
     val prevLive = currentManifest(outDir, tableName)
       .map(_.dataDir).filter(_ != "data")
-    writeManifestAtomic(outDir, tableName,
-      renderManifest(tableName, count, "data", prevLive))
-    cleanupDataDirs(outDir, tableName, keep = Set("data") ++ prevLive)
-    // stale-envelope hygiene (readers already prefer the manifest)
-    Files.deleteIfExists(singleFilePath(outDir, tableName))
-    count
+    writeCounted(outDir, tableName, Paths.get(s"$outDir/$tableName/data"),
+        df, "json", compression)(Manifest(tableName, _, "data", prevLive))
   }
 
   private def singleFilePath(outDir: String, tableName: String): Path =
@@ -267,18 +281,14 @@ object JsonTableIO {
     currentManifest(outDir, tableName)
       .foreach(guardForeignData(outDir, tableName, _))
     val live = dataPath(outDir, tableName)
-    val liveName = live.getFileName.toString
-    // a pinned throwaway schema skips JSON schema inference — otherwise
-    // the "one count job" would be TWO full scans (inference + count);
-    // in PERMISSIVE mode every line still counts as one record
-    val count = spark.read
-      .schema(new StructType().add("__count_only", StringType))
-      .json(live.toString).count()
-    writeManifestAtomic(outDir, tableName,
-      renderManifest(tableName, count, liveName))
-    cleanupDataDirs(outDir, tableName, keep = Set(liveName))
-    Files.deleteIfExists(singleFilePath(outDir, tableName))
-    Manifest(tableName, count, liveName)
+    commit(outDir, tableName, uncommitted = None) {
+      // a pinned throwaway schema skips JSON schema inference — otherwise
+      // the "one count job" would be TWO full scans (inference + count);
+      // in PERMISSIVE mode every line still counts as one record
+      Manifest(tableName, spark.read
+        .schema(new StructType().add("__count_only", StringType))
+        .json(live.toString).count(), live.getFileName.toString)
+    }
   }
 
   /** Compact an artifact's data dir to `targetParts` files — the
@@ -304,49 +314,23 @@ object JsonTableIO {
   def compact(spark: SparkSession, outDir: String, tableName: String,
       targetParts: Int, compression: Option[String] = None): Long = {
     recoverInterrupted(outDir, tableName)
-    currentManifest(outDir, tableName)
-      .foreach(guardForeignData(outDir, tableName, _))
     val cur = dataPath(outDir, tableName)
     require(Files.isDirectory(cur), s"no partitioned artifact at $cur")
     val next = nextGenPath(outDir, tableName)
-    var committed = false
-    try {
-      // BYTE-EXACT rewrite: JSON lines pass through as text, untouched.
-      // A parse-and-rewrite (spark.read.json) would (a) pay a full
-      // schema-inference scan, (b) silently re-type values (a
-      // decimal(18,4) survives as a double-rounded literal), and
-      // (c) crash on a legitimately empty artifact (empty inferred
-      // schema). Text lines have none of those failure modes.
-      val obs = org.apache.spark.sql.Observation(s"graft_compact_$tableName")
-      val w = spark.read.text(cur.toString)
-        .observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-        .coalesce(math.max(1, targetParts))
-        .write.mode(SaveMode.Overwrite)
-      compression.fold(w)(c => w.option("compression", c)).text(next.toString)
-      val n = obs.get("n").asInstanceOf[Long]
+    // BYTE-EXACT rewrite: JSON lines pass through as text, untouched.
+    // A parse-and-rewrite (spark.read.json) would (a) pay a full
+    // schema-inference scan, (b) silently re-type values (a
+    // decimal(18,4) survives as a double-rounded literal), and
+    // (c) crash on a legitimately empty artifact (empty inferred
+    // schema). Text lines have none of those failure modes.
+    writeCounted(outDir, tableName, next,
+        spark.read.text(cur.toString).coalesce(math.max(1, targetParts)),
+        "text", compression) { n =>
       val m = readManifest(outDir, tableName)
       require(n == m.count,
         s"compaction row count drifted: wrote $n, manifest says ${m.count}")
-      // THE commit: one atomic pointer replace; the replaced generation
-      // is recorded stale and RETAINED one maintenance cycle so readers
-      // that resolved the old pointer keep a complete dir
-      writeManifestAtomic(outDir, tableName,
-        renderManifest(m.tableName, m.count, next.getFileName.toString,
-          Some(cur.getFileName.toString)))
-      committed = true
-      // older generations + orphans of crashed runs; failure here
-      // strands only unreferenced dirs (next run sweeps), never pointers
-      cleanupDataDirs(outDir, tableName,
-        keep = Set(next.getFileName.toString, cur.getFileName.toString))
-      n
-    } catch {
-      // never leave a full-size orphaned copy behind on failure — but
-      // once the pointer swapped, `next` is the LIVE generation and must
-      // survive even if post-commit cleanup throws
-      case e: Throwable =>
-        if (!committed) deleteRecursively(next)
-        throw e
+      m.copy(dataDir = next.getFileName.toString,
+        staleDir = Some(cur.getFileName.toString))
     }
   }
 
@@ -390,12 +374,7 @@ object JsonTableIO {
       recoverInterrupted(outDir, tableName)
       val dataDir = dataPath(outDir, tableName)
       require(Files.isDirectory(dataDir), s"no partitioned artifact at $dataDir")
-      val s = Files.list(dataDir)
-      val existing =
-        try s.iterator().asScala.toSeq
-          .filter(p => Files.isRegularFile(p) &&
-            p.getFileName.toString.startsWith("part-"))
-        finally s.close()
+      val existing = partFiles(dataDir)
       val bytes = existing.map(Files.size).sum
       val codec = compression.orElse(inferCodec(existing))
       val nParts = parts.getOrElse(
@@ -411,15 +390,14 @@ object JsonTableIO {
         .collectFirst { case (ext, c) if n.endsWith(ext) => c }
     }.headOption
 
-  private def inferCodecIn(dir: Path): Option[String] =
-    if (!Files.isDirectory(dir)) None
+  /** The `part-*` files of a data dir (none when it does not exist). */
+  private def partFiles(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
     else {
       val s = Files.list(dir)
-      val parts =
-        try s.iterator().asScala.toSeq.filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.startsWith("part-"))
-        finally s.close()
-      inferCodec(parts)
+      try s.iterator().asScala.toList.filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.startsWith("part-"))
+      finally s.close()
     }
 
   /** [[write]] into a FRESH GENERATION with a pointer commit instead of
@@ -435,36 +413,13 @@ object JsonTableIO {
   def writeGen(df: DataFrame, outDir: String, tableName: String,
       compression: Option[String] = None): Long = {
     Files.createDirectories(Paths.get(s"$outDir/$tableName"))
-    currentManifest(outDir, tableName)
-      .foreach(guardForeignData(outDir, tableName, _))
     val cur = dataPath(outDir, tableName)
     val prevLive = Some(cur.getFileName.toString)
       .filter(_ => Files.isDirectory(cur))
-    val codec = compression.orElse(inferCodecIn(cur))
     val next = nextGenPath(outDir, tableName)
-    val obs = org.apache.spark.sql.Observation(
-      s"graft_writegen_${tableName}_${next.getFileName}")
-    var committed = false
-    try {
-      val writer = df.observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite)
-      codec.fold(writer)(c => writer.option("compression", c))
-        .json(next.toString)
-      val count = obs.get("n").asInstanceOf[Long]
-      writeManifestAtomic(outDir, tableName,
-        renderManifest(tableName, count, next.getFileName.toString, prevLive))
-      committed = true
-      cleanupDataDirs(outDir, tableName,
-        keep = Set(next.getFileName.toString) ++ prevLive)
-      Files.deleteIfExists(singleFilePath(outDir, tableName))
-      count
-    } catch {
-      // once the pointer swapped, `next` is the live generation and must
-      // survive even if post-commit cleanup throws
-      case e: Throwable =>
-        if (!committed) deleteRecursively(next)
-        throw e
+    writeCounted(outDir, tableName, next, df, "json",
+        compression.orElse(inferCodec(partFiles(cur)))) {
+      Manifest(tableName, _, next.getFileName.toString, prevLive)
     }
   }
 
@@ -505,14 +460,6 @@ object JsonTableIO {
   def hasPartitionedData(outDir: String, tableName: String): Boolean =
     Files.isDirectory(dataPath(outDir, tableName)) ||
       Files.isDirectory(oldDirPath(outDir, tableName))
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
 
   def readManifest(outDir: String, tableName: String): Manifest = {
     val sf = singleFilePath(outDir, tableName)
@@ -647,17 +594,12 @@ object JsonTableIO {
       else rows.map("\t\t" + _).mkString("[\n", ",\n", "\n\t]")
     val out = s"{\n\t\"table_name\": ${quote(tableName)}," +
       s"\n\t\"count\": ${rows.length},\n\t\"data\": $data\n}"
-    Files.createDirectories(Paths.get(outDir))
-    Files.writeString(singleFilePath(outDir, tableName), out)
+    // atomic like the manifest: a crash never leaves a truncated envelope
+    SegmentLog.replaceAtomically(singleFilePath(outDir, tableName), out)
     // mirror of write(): drop any partitioned artifact for this table so
     // the layouts can never disagree about its contents
-    val tableDir = Paths.get(s"$outDir/$tableName")
-    if (Files.isDirectory(tableDir)) {
-      val walk = Files.walk(tableDir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    if (Files.isDirectory(Paths.get(s"$outDir/$tableName")))
+      SegmentLog.deleteRecursively(s"$outDir/$tableName")
     rows.length.toLong
   }
 

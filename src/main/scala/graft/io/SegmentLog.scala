@@ -1,6 +1,7 @@
 package graft.io
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{AtomicMoveNotSupportedException, Files, LinkOption,
+  Path, Paths, StandardCopyOption}
 
 /** Crash-safe commit protocol for INDEX artifacts (DedupIndex,
   * ClusterIndex) — the [[JsonTableIO]] manifest-pointer discipline
@@ -96,22 +97,29 @@ object SegmentLog {
       require(ExtraKey.matches(k) && ExtraVal.matches(v),
         s"refusing to commit invalid extra '$k' -> '$v'")
     }
-    val d = Paths.get(dir)
-    Files.createDirectories(d)
     val segsJson = state.segments.map(s => s""""$s"""").mkString("[", ", ", "]")
     val extrasJson = state.extras.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
-    val json =
-      s"""{"gen": ${state.gen}, "segments": $segsJson, "extras": $extrasJson}"""
-    val tmp = d.resolve(".manifest.json.tmp")
-    Files.writeString(tmp, json)
-    try Files.move(tmp, manifestPath(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    replaceAtomically(manifestPath(dir),
+      s"""{"gen": ${state.gen}, "segments": $segsJson, "extras": $extrasJson}""")
+  }
+
+  /** Atomic file replace — write-to-temp + one rename — shared by every
+    * commit in this package: this manifest, [[JsonTableIO]]'s manifest
+    * pointer and its single-file envelope. A crash leaves the old file
+    * or the new one, never a truncated one (at worst a stray temp
+    * file). Filesystems without atomic rename fall back to a plain
+    * replace.
+    */
+  private[io] def replaceAtomically(target: Path, text: String): Unit = {
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
+    Files.writeString(tmp, text)
+    try Files.move(tmp, target,
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(tmp, manifestPath(dir),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      case _: AtomicMoveNotSupportedException =>
+        Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING)
     }
   }
 
@@ -133,15 +141,24 @@ object SegmentLog {
             (SegName.matches(n) || ExtraVal.matches(n)) && !live.contains(n)
           }
         } finally s.close()
-      stale.foreach(del)
+      stale.foreach(p => deleteRecursively(p.toString))
     }
   }
 
-  /** Recursive delete of a THROWAWAY tree (temp index dirs the replay
-    * queries build and discard) — not part of the commit protocol;
-    * committed roots are maintained through [[cleanup]] only.
+  /** Recursive delete (no-op when absent), children first; symlinks
+    * are removed, never followed. The one delete behind [[cleanup]],
+    * [[JsonTableIO]]'s generation sweep and rollback, and the throwaway
+    * trees (temp index dirs) the replay queries build and discard.
     */
-  def deleteRecursively(path: String): Unit = del(Paths.get(path))
+  def deleteRecursively(path: String): Unit = {
+    val p = Paths.get(path)
+    if (Files.exists(p, LinkOption.NOFOLLOW_LINKS)) {
+      val w = Files.walk(p)
+      try w.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.deleteIfExists(f))
+      finally w.close()
+    }
+  }
 
   /** Recursive file-copy of an artifact tree. Segment-log pointers are
     * root-relative, so a copied tree is a valid index — this is how a
@@ -151,24 +168,11 @@ object SegmentLog {
   def copyRecursively(src: String, dst: String): Unit = {
     val s = Paths.get(src)
     val d = Paths.get(dst)
-    val w = java.nio.file.Files.walk(s)
+    val w = Files.walk(s)
     try w.forEach { p =>
       val t = d.resolve(s.relativize(p))
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t)
+      if (Files.isDirectory(p)) Files.createDirectories(t)
+      else Files.copy(p, t)
     } finally w.close()
   }
-
-  private def del(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.toList.foreach(del)
-        } finally s.close()
-      }
-      Files.deleteIfExists(p)
-    }
 }

@@ -107,4 +107,26 @@ class StaticAuditSpec extends AnyFunSuite {
   test("the closure fast-path budget has no env override") {
     assert(filesWith("GRAFT_CLOSURE_FAST_BUDGET").isEmpty)
   }
+
+  // artifact and index commits share one atomic replace and one
+  // recursive delete in graft.io; a second copy is how the manifest
+  // writers drifted apart
+  test("ATOMIC_MOVE only in the shared atomic replace") {
+    assert(filesWith("ATOMIC_MOVE") == Map("graft/io/SegmentLog.scala" -> 1))
+  }
+
+  test("one recursive delete") {
+    assert(filesWith("def deleteRecursively") ==
+      Map("graft/io/SegmentLog.scala" -> 1))
+  }
+
+  test("no env-gated stderr tracers") {
+    assert(filesWith("GRAFT_BFS_PROF").isEmpty)
+    assert(filesWith("GRAFT_STREAM_PROF").isEmpty)
+  }
+
+  // Verify's per-query progress lines are the only stderr output
+  test("System.err only in Verify") {
+    assert(filesWith("System.err").keySet == Set("graft/Verify.scala"))
+  }
 }

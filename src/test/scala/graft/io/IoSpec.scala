@@ -206,6 +206,50 @@ class JsonTableIOSpec extends SparkSpec {
     assert(JsonTableIO.read(spark, out, "user").count() == 30L)
   }
 
+  test("a failed writeGen or compact rolls back: committed artifact untouched") {
+    val out = Files.createTempDirectory("jsonio-rollback").toString
+    assert(JsonTableIO.write(spark.range(0, 20).toDF("id").repartition(2),
+      out, "user") == 20L)
+    val tableDir = Paths.get(s"$out/user")
+    val manifest = tableDir.resolve("manifest.json")
+    def listed(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val s = Files.list(p)
+      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]).sorted
+      finally s.close()
+    }
+    // every file of the live dir, by name and bytes
+    def liveDir(): Seq[(String, Seq[Byte])] =
+      listed(tableDir.resolve("data"))
+        .map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq)
+    def generations(): Seq[String] = listed(tableDir)
+      .map(_.getFileName.toString).filter(_.matches(raw"data-g\d+"))
+    def assertUntouched(manifestBytes: Seq[Byte],
+        live: Seq[(String, Seq[Byte])]): Unit = {
+      assert(Files.readAllBytes(manifest).toSeq == manifestBytes)
+      assert(liveDir() == live)
+      assert(generations().isEmpty, s"uncommitted generation left: ${generations()}")
+    }
+    val m0 = Files.readAllBytes(manifest).toSeq
+    val live0 = liveDir()
+    // rows that throw mid-job: the half-written generation must go
+    intercept[Exception] {
+      JsonTableIO.writeGen(spark.range(0, 20).toDF("id").repartition(2)
+        .selectExpr("if(id = 5, raise_error('boom'), id) AS id"), out, "user")
+    }
+    assertUntouched(m0, live0)
+    assert(JsonTableIO.read(spark, out, "user").count() == 20L)
+    // a manifest count that disagrees with the rows: compact's drift
+    // check refuses after writing the generation, which must go too
+    Files.writeString(manifest,
+      Files.readString(manifest).replace("\"count\": 20", "\"count\": 21"))
+    val m1 = Files.readAllBytes(manifest).toSeq
+    val e = intercept[IllegalArgumentException] {
+      JsonTableIO.compact(spark, out, "user", 1)
+    }
+    assert(e.getMessage.contains("drifted"))
+    assertUntouched(m1, live0)
+  }
+
   test("finalizeManifest resolves the live generation; ambiguous state fails loudly") {
     val out = Files.createTempDirectory("jsonio-gen-fin").toString
     val df = spark.range(0, 40).toDF("id").repartition(4)
