@@ -203,8 +203,7 @@ object Bench {
     // UNCONDITIONALLY to a scratch sidecar (BENCH_OUT.json — never the
     // committed, opt-in BENCH_LOCAL record) so the full line survives
     // any stdout truncation. Best-effort, like the record write.
-    writeSidecar(json,
-      java.nio.file.Paths.get(sys.props.getOrElse("user.dir", ".")))
+    writeSidecar(json, outputDir(sys.props.get))
     // The driver's round artifact keeps only a ~2000-char stdout TAIL —
     // at 260+ queries most per-query entries fall off it (r9 lost all
     // entries before 'r'). The repo-local copy is the durable record:
@@ -223,11 +222,25 @@ object Bench {
     // invocation leaves the committed file untouched.
     if (shouldWriteLocal(only.isEmpty, sys.env.get))
       try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(sys.props.getOrElse("user.dir", "."))
-          .resolve("BENCH_LOCAL.json"), json + "\n")
+        outputDir(sys.props.get).resolve("BENCH_LOCAL.json"), json + "\n")
       catch { case NonFatal(_) => () }
     spark.stop()
   }
+
+  /** JVM system property naming the directory the bench writes its
+    * BENCH_OUT.json sidecar and BENCH_LOCAL.json record to. */
+  val OutputDirProperty = "graft.bench.outputDir"
+
+  /** Directory of both bench output files: [[OutputDirProperty]] when
+    * set, else the working directory (`user.dir`). A forked or relocated
+    * JVM can have a working directory outside the checkout, so a run
+    * that must write into the checkout names it explicitly. `props`
+    * reads system properties (a parameter so BenchJsonSpec can pin the
+    * resolution without setting them).
+    */
+  def outputDir(props: String => Option[String]): java.nio.file.Path =
+    java.nio.file.Paths.get(
+      props(OutputDirProperty).orElse(props("user.dir")).getOrElse("."))
 
   /** Whether this run may overwrite the repo-local BENCH_LOCAL.json
     * record: only a FULL suite (no SPARK_GRAFT_BENCH_ONLY filter) that

@@ -1,6 +1,6 @@
 package graft.closure
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -169,13 +169,15 @@ class ClosureExtractor(
     * iteration) with the key set pushed into the scan as an In filter
     * (parquet row-group/dictionary pruning applies), not a broadcast-
     * join fixpoint whose per-iteration scheduling barriers dwarf the
-    * data. Returns None — leaving the distributed BFS to run, untouched
-    * — the moment ANY collect would exceed `fastPathBudget` rows or a
-    * shape needs a composite-pk re-probe; large closures therefore
-    * always get the shuffling plan. Semantics are EXACTLY
-    * [[runAllWithSizes]]'s (FastPathParitySpec pins local ==
-    * distributed across random graphs, policies, preSeen, and config
-    * queries):
+    * data. The moment ANY collect would exceed `fastPathBudget` rows or
+    * a shape needs a composite-pk re-probe, it aborts and hands the
+    * distributed BFS its state at the last iteration boundary it
+    * completed ([[ClosureExtractor.LocalHandoff]]) — the finished
+    * iterations are not re-run; an abort before the first boundary
+    * restarts from the seeds. Semantics are EXACTLY
+    * [[runAllWithSizes]]'s (FastPathParitySpec pins local == handoff ==
+    * distributed at every abort point across policies, preSeen, and
+    * config queries; PropertySpec on random graphs):
     *
     *  - frontier KEYS drive reverse-key expansion — a phantom key (an
     *    FK value with no parent row) still probes its children, as the
@@ -193,13 +195,14 @@ class ClosureExtractor(
     *    reverse keys and config queries once at depth 0, exactly like
     *    the distributed incremental step.
     */
-  private def tryRunAllLocal(seeds: Seq[(String, DataFrame)],
-      preSeen: Map[String, DataFrame]):
-      Option[(Map[String, DataFrame], Map[String, Long])] = {
+  private[closure] def tryRunAllLocal(seeds: Seq[(String, DataFrame)],
+      preSeen: Map[String, DataFrame]): ClosureExtractor.LocalOutcome = {
     import scala.collection.mutable
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.StructType
-    val spark = seeds.headOption.map(_._2.sparkSession).getOrElse(return None)
+    import ClosureExtractor.{LocalDone, LocalHandoff, LocalRestart}
+    val spark = seeds.headOption.map(_._2.sparkSession)
+      .getOrElse(return LocalRestart)
     // thread-safe remaining budget: probes within an iteration run
     // CONCURRENTLY (independent scans of different tables — against a
     // 100 TB lake each probe is a real-latency scan, and an iteration's
@@ -237,14 +240,19 @@ class ClosureExtractor(
     def recordSchema(t: String, df: DataFrame): Unit =
       if (!pkSchema.contains(t))
         pkSchema(t) = StructType(catalog.pkOf(t).map(c => df.schema(c)))
+    def keysDf(t: String, keys: Iterable[Seq[Any]]): DataFrame = {
+      val schema = pkSchema.getOrElse(t, abort(s"no schema for $t"))
+      val rows = new java.util.ArrayList[Row](keys.size)
+      keys.foreach(k => rows.add(Row.fromSeq(k)))
+      spark.createDataFrame(rows, schema)
+    }
     // probe t's expansion columns with the filter pushed into the scan;
     // the DataFrame is BUILT here (driver-thread Catalyst work, schema
     // recording) — only the collect runs on the probe pool
     def probeDf(t: String, filterCol: String, values: Seq[Any]): DataFrame = {
       val df = loadTable(t).select(needed(t).map(col): _*)
-        .where(col(filterCol).isin(values: _*))
       recordSchema(t, df)
-      df
+      df.where(ClosureExtractor.inSet(df, filterCol, values))
     }
     def probe(t: String, filterCol: String, values: Seq[Any]): Array[Row] =
       if (values.isEmpty) Array.empty else take(probeDf(t, filterCol, values))
@@ -253,14 +261,19 @@ class ClosureExtractor(
     // submission); torn down with the run. Every probe job runs under a
     // run-unique job group with interruptOnCancel so an abort can KILL
     // in-flight probes — a plain shutdown() would let them run to
-    // completion and compete for cores with the distributed fallback
-    // BFS that starts immediately after the abort.
+    // completion and compete for cores with the distributed BFS that
+    // takes over right after the abort.
     val probePool = java.util.concurrent.Executors.newFixedThreadPool(4)
     val probeEc =
       scala.concurrent.ExecutionContext.fromExecutorService(probePool)
     val probeGroup = s"graft-closure-fastpath-${java.util.UUID.randomUUID()}"
     val seen = mutable.Map.empty[String, mutable.HashSet[Seq[Any]]]
     val acc = mutable.Map.empty[String, mutable.ArrayBuffer[Seq[Any]]]
+    var preSizes = Map.empty[String, Long]
+    // the last COMPLETED iteration boundary: its depth, and per table how
+    // many keys it appended to `acc` that are still unexpanded (the
+    // boundary's frontier is exactly that tail of each `acc` buffer)
+    var boundary: Option[(Int, Map[String, Int])] = None
     try {
       // seed key sets, deduped driver-side (== the distributed
       // union().distinct())
@@ -280,6 +293,7 @@ class ClosureExtractor(
         recordSchema(t, sel)
         t -> take(sel).iterator.map(_.toSeq).toSet
       }
+      preSizes = pre.map { case (t, ks) => t -> ks.size.toLong }
       // seen = seeds ∪ preSeen; acc starts from the delta seeds (every
       // seed table appears in the result, possibly with zero fresh keys)
       (seedKeys.keySet ++ pre.keySet).foreach { t =>
@@ -427,45 +441,59 @@ class ClosureExtractor(
             catch { case _: java.util.concurrent.TimeoutException =>
               abort("probe await timeout") })
         }
-        // fresh keys → seen/acc/next frontier; frontier rows are the
-        // collected probe rows when complete for every fresh key, else
-        // one by-pk re-probe
-        val nextFrontier = mutable.Map.empty[String, (Seq[Seq[Any]], Array[Row])]
+        // fresh keys → seen/acc for EVERY table before any re-probe:
+        // that completes the boundary, so an abort inside a re-probe
+        // below still hands a whole iteration to the distributed BFS
+        val fresh = mutable.LinkedHashMap.empty[String, Vector[Seq[Any]]]
         candKeys.foreach { case (t, ks) =>
           val s = seen.getOrElseUpdate(t, mutable.HashSet.empty)
-          val fresh = ks.iterator.filterNot(s.contains).toVector
-          if (fresh.nonEmpty) {
-            s ++= fresh
-            acc.getOrElseUpdate(t, mutable.ArrayBuffer.empty) ++= fresh
-            val freshSet = fresh.toSet
-            val rows =
-              if (rowsComplete.getOrElse(t, true))
-                candRows.getOrElse(t, mutable.ArrayBuffer.empty)
-                  .filter(r => freshSet.contains(keyOf(t, r))).toArray
-              else rowsFor(t, fresh)
-            nextFrontier(t) = (fresh, rows)
+          val f = ks.iterator.filterNot(s.contains).toVector
+          if (f.nonEmpty) {
+            s ++= f
+            acc.getOrElseUpdate(t, mutable.ArrayBuffer.empty) ++= f
+            fresh(t) = f
           }
         }
-        frontier = nextFrontier.toMap
         depth += 1
+        boundary = Some((depth, fresh.iterator.map { case (t, f) => t -> f.size }.toMap))
+        // frontier rows are the collected probe rows when complete for
+        // every fresh key, else one by-pk re-probe
+        frontier = fresh.iterator.map { case (t, f) =>
+          val rows =
+            if (rowsComplete.getOrElse(t, true)) {
+              val freshSet = f.toSet
+              candRows.getOrElse(t, mutable.ArrayBuffer.empty)
+                .filter(r => freshSet.contains(keyOf(t, r))).toArray
+            } else rowsFor(t, f)
+          t -> ((f: Seq[Seq[Any]], rows))
+        }.toMap
       }
-      val result: Map[String, DataFrame] = acc.iterator.map { case (t, ks) =>
-        val schema = pkSchema.getOrElse(t, abort(s"no schema for $t"))
-        val rows = new java.util.ArrayList[Row](ks.size)
-        ks.foreach(k => rows.add(Row.fromSeq(k)))
-        t -> spark.createDataFrame(rows, schema)
-      }.toMap
-      val sizes = acc.iterator.map { case (t, ks) => t -> ks.size.toLong }.toMap
-      Some((result, sizes))
+      LocalDone(acc.iterator.map { case (t, ks) => t -> keysDf(t, ks) }.toMap,
+        acc.iterator.map { case (t, ks) => t -> ks.size.toLong }.toMap,
+        collected = fastPathBudget - budget.get())
     } catch {
-      case _: ClosureExtractor.FastPathAbort => None
+      case _: ClosureExtractor.FastPathAbort => boundary match {
+        case None => LocalRestart
+        case Some((d, unexpanded)) =>
+          // acc is untouched since the boundary: only the update loop
+          // above appends to it, and it cannot abort
+          def split(keep: (mutable.ArrayBuffer[Seq[Any]], Int) => Iterable[Seq[Any]]) =
+            acc.iterator.map { case (t, ks) =>
+              val part = keep(ks, unexpanded.getOrElse(t, 0))
+              t -> ((keysDf(t, part), part.size.toLong))
+            }.toMap
+          LocalHandoff(d,
+            expanded = split(_.dropRight(_)),
+            frontier = split(_.takeRight(_)).filter(_._2._2 > 0),
+            preSizes = preSizes)
+      }
     } finally {
       // kill, don't drain: on an abort the in-flight probes' Spark jobs
       // would otherwise run to completion and compete for cores with
-      // the distributed fallback BFS. Order matters: shutdownNow FIRST
-      // stops queued pool tasks from starting (a task dequeued after a
-      // cancel would submit a fresh, uncancelled job into the group),
-      // THEN cancelJobGroup kills the jobs already submitted
+      // the distributed BFS. Order matters: shutdownNow FIRST stops
+      // queued pool tasks from starting (a task dequeued after a cancel
+      // would submit a fresh, uncancelled job into the group), THEN
+      // cancelJobGroup kills the jobs already submitted
       // (interruptOnCancel above interrupts their collect threads). On
       // a normal exit every probe was already awaited, so both are
       // no-ops.
@@ -473,6 +501,18 @@ class ClosureExtractor(
       spark.sparkContext.cancelJobGroup(probeGroup)
     }
   }
+
+  /** Rows the driver-local fast path collects for this closure (the
+    * smallest budget under which it finishes), or None when it does not
+    * finish within `fastPathBudget`. Specs use it to place an abort at
+    * every collect point.
+    */
+  private[graft] def fastPathRows(seeds: Seq[(String, DataFrame)],
+      preSeen: Map[String, DataFrame] = Map.empty): Option[Long] =
+    tryRunAllLocal(seeds, preSeen) match {
+      case d: ClosureExtractor.LocalDone => Some(d.collected)
+      case _ => None
+    }
 
   /** [[runAll]] plus each table's exact key count — free, because the
     * fixpoint's final checkpoint-forcing job is already a count.
@@ -518,17 +558,22 @@ class ClosureExtractor(
     // SMALL-CLOSURE FAST PATH: when the whole traversal fits the local
     // row budget, run it driver-side (tryRunAllLocal) — one pushed-down
     // In-filter scan per (edge, iteration) instead of per-edge
-    // broadcast/checkpoint jobs with their AQE stage barriers. Falls
-    // back here untouched the moment any probe overflows the budget.
-    if (fastPathBudget > 0)
-      tryRunAllLocal(seeds, preSeen).foreach(r => return r)
+    // broadcast/checkpoint jobs with their AQE stage barriers. The moment
+    // a probe overflows the budget it hands over its last completed
+    // iteration boundary, and the fixpoint below continues from there.
+    val handoff: Option[ClosureExtractor.LocalHandoff] =
+      if (fastPathBudget <= 0) None
+      else tryRunAllLocal(seeds, preSeen) match {
+        case d: ClosureExtractor.LocalDone => return (d.keys, d.sizes)
+        case h: ClosureExtractor.LocalHandoff => Some(h)
+        case ClosureExtractor.LocalRestart => None
+      }
     // Measured A/B at sf0.1: keeping AQE ON for the fixpoint wins — its
     // post-shuffle coalescing collapses the 32-partition iteration
     // shuffles to single tasks, which outweighs the extra stage-job
     // barriers. The exact-size broadcast hints below compose with it:
     // hinted joins skip the shuffle-and-measure step entirely.
-    var seen = Map.empty[String, DataFrame] // table -> distinct pk tuples
-    var seenSizes = Map.empty[String, Long]
+    //
     // Every intermediate persist is tracked and released after the final
     // key sets are eagerly checkpointed — a long-lived session must not
     // accumulate BFS state in the block manager across extract calls.
@@ -544,6 +589,7 @@ class ClosureExtractor(
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def hinted(df: DataFrame, size: Option[Long]): DataFrame =
       if (size.exists(_ <= BroadcastKeyLimit)) broadcast(df) else df
+    def unionOf(parts: Iterable[DataFrame]): DataFrame = parts.reduce(_.union(_))
     // incremental mode: each preSeen key set becomes its own checkpoint
     // leaf (an artifact read would otherwise re-plan and re-scan per
     // anti-join use, once per iteration) — a NEW checkpoint over a pk
@@ -552,47 +598,83 @@ class ClosureExtractor(
     val pre: Map[String, DataFrame] = preSeen.map { case (t, df) =>
       t -> track(df.select(catalog.pkOf(t).map(col): _*).localCheckpoint(false))
     }
-    var frontier: Map[String, DataFrame] = seeds.groupBy(_._1).map {
-      case (t, ss) =>
-        val pk = catalog.pkOf(t).map(col)
-        // lazy leaf like every later frontier; forced by the seed-count
-        // job just below
-        t -> track(ss.map(_._2.select(pk: _*)).reduce(_.union(_)).distinct()
-          .localCheckpoint(false))
-    }
-    // the one extra job this costs is repaid by every later join planning
-    // broadcast-side-known from depth 0; ONE job forces + counts the seed
-    // frontiers AND the preSeen leaves (the "f "/"p " prefixes are
-    // disjoint, so the label sets cannot collide)
-    val counted = countAll(
-      frontier.map { case (t, d) => ("f " + t, d) } ++
-        pre.map { case (t, d) => ("p " + t, d) })
-    var frontierSizes: Map[String, Long] =
-      counted.collect { case (k, n) if k.startsWith("f ") => k.drop(2) -> n }
-    val preSizes: Map[String, Long] =
-      counted.collect { case (k, n) if k.startsWith("p ") => k.drop(2) -> n }
-    // seen = seeds ∪ preSeen: the traversal prunes at both. Seeds are NOT
-    // pruned out of the frontier — every seed keeps its depth-0 expansion
-    // (see the exactness contract above); from depth 1 on, candidates
-    // anti-join the merged seen-set, so frontiers are delta-sized.
-    seen = (frontier.keySet ++ pre.keySet).map { t =>
-      t -> ((frontier.get(t), pre.get(t)) match {
-        case (Some(f), Some(p)) => f.union(p)
-        case (f, p) => f.orElse(p).get
-      })
-    }.toMap
-    // sizes are for broadcast hints only, so double-counting a key that
-    // is both a seed and preSeen merely makes the hint conservative
-    seenSizes = seen.keySet.map(t =>
-      t -> (frontierSizes.getOrElse(t, 0L) + preSizes.getOrElse(t, 0L))).toMap
-    // `acc` is the RESULT accumulator: only keys this run discovers
-    // beyond preSeen. Seed tables start from the delta seeds (a lazy
-    // anti-join over two checkpoint leaves, forced by the result job).
-    var acc: Map[String, DataFrame] = frontier.map { case (t, keys) =>
-      t -> pre.get(t).fold(keys)(p =>
-        keys.join(hinted(p, preSizes.get(t)), catalog.pkOf(t), "left_anti"))
-    }
+    // The fixpoint state. `seen` (table -> distinct pk tuples) is what
+    // the traversal prunes at; `acc` is the RESULT accumulator, only keys
+    // this run discovers beyond preSeen; `frontier` holds the keys whose
+    // expansions are still to run; `chainRaw` holds fresh keys whose
+    // forward FKs the first iteration's chain phase walks without the
+    // `seen` anti-join (they sit inside `seen` already). Sizes are exact
+    // counts, for the broadcast hints.
+    var seen, acc, frontier, chainRaw = Map.empty[String, DataFrame]
+    var seenSizes, frontierSizes, preSizes = Map.empty[String, Long]
     var depth = 0
+    handoff match {
+      case Some(h) =>
+        // continue at the fast path's last boundary: every driver-side
+        // key set enters Spark once, as a lazy checkpoint leaf of known
+        // size, forced by the first union-of-counts job. REFIRE does not
+        // run again (depth ≥ 1): it ran at local depth 0.
+        val leaf = (p: (DataFrame, Long)) => track(p._1.localCheckpoint(false))
+        val fresh = h.frontier.map { case (t, p) => t -> leaf(p) }
+        val expanded = h.expanded.collect {
+          case (t, p) if p._2 > 0 || !fresh.contains(t) => t -> leaf(p)
+        }
+        acc = (expanded.keySet ++ fresh.keySet).map(t =>
+          t -> unionOf(expanded.get(t) ++ fresh.get(t))).toMap
+        seen = (acc.keySet ++ pre.keySet).map(t =>
+          t -> unionOf(acc.get(t) ++ pre.get(t))).toMap
+        preSizes = h.preSizes
+        seenSizes = seen.keySet.map(t => t -> (preSizes.getOrElse(t, 0L) +
+          h.expanded.get(t).fold(0L)(_._2) + h.frontier.get(t).fold(0L)(_._2))).toMap
+        frontierSizes = h.frontier.map { case (t, p) => t -> p._2 }
+        // past depth 0 only tables with edges still to fire re-enter the
+        // frontier; chainable ones walk their forward FKs in the chain
+        frontier = fresh.filter { case (t, _) => needsIteration(t) }
+        chainRaw = fresh.filter { case (t, _) =>
+          chainable(t) && catalog.foreignKeysOf(t).nonEmpty }
+        depth = h.depth
+      case None =>
+        frontier = seeds.groupBy(_._1).map { case (t, ss) =>
+          val pk = catalog.pkOf(t).map(col)
+          // lazy leaf like every later frontier; forced by the seed-count
+          // job just below
+          t -> track(ss.map(_._2.select(pk: _*)).reduce(_.union(_)).distinct()
+            .localCheckpoint(false))
+        }
+        // the one extra job this costs is repaid by every later join
+        // planning broadcast-side-known from depth 0; ONE job forces +
+        // counts the seed frontiers AND the preSeen leaves (the "f "/"p "
+        // prefixes are disjoint, so the label sets cannot collide)
+        val counted = countAll(
+          frontier.map { case (t, d) => ("f " + t, d) } ++
+            pre.map { case (t, d) => ("p " + t, d) })
+        frontierSizes =
+          counted.collect { case (k, n) if k.startsWith("f ") => k.drop(2) -> n }
+        preSizes =
+          counted.collect { case (k, n) if k.startsWith("p ") => k.drop(2) -> n }
+        // seen = seeds ∪ preSeen: the traversal prunes at both. Seeds are
+        // NOT pruned out of the frontier — every seed keeps its depth-0
+        // expansion (see the exactness contract above); from depth 1 on,
+        // candidates anti-join the merged seen-set, so frontiers are
+        // delta-sized.
+        seen = (frontier.keySet ++ pre.keySet).map(t =>
+          t -> unionOf(frontier.get(t) ++ pre.get(t))).toMap
+        // sizes are for broadcast hints only, so double-counting a key
+        // that is both a seed and preSeen merely makes the hint
+        // conservative
+        seenSizes = seen.keySet.map(t =>
+          t -> (frontierSizes.getOrElse(t, 0L) + preSizes.getOrElse(t, 0L))).toMap
+        // seed tables start `acc` from the delta seeds (a lazy anti-join
+        // over two checkpoint leaves, forced by the result job)
+        acc = frontier.map { case (t, keys) =>
+          t -> pre.get(t).fold(keys)(p =>
+            keys.join(hinted(p, preSizes.get(t)), catalog.pkOf(t), "left_anti"))
+        }
+        // seeds are raw at depth 0: the delta seeds' forward FKs chain
+        // now (a previously-exported seed's parents are in preSeen
+        // already, by the exactness contract)
+        chainRaw = acc.filter { case (t, _) => chainable(t) }
+    }
 
     // Run-scoped cache of each table's key projection (pk + edge
     // columns): the BFS touches the same projections every iteration, and
@@ -605,11 +687,12 @@ class ClosureExtractor(
         loadTable(table).select(cols0.map(col): _*)
           .persist(StorageLevel.MEMORY_AND_DISK))
 
-    while (frontier.nonEmpty) {
+    while (frontier.nonEmpty || chainRaw.nonEmpty) {
       val next = scala.collection.mutable.Map.empty[String, DataFrame]
       // chain inputs: every key set PRODUCED this iteration for a
-      // chainable table (frontier tables at depth ≥ 1 were chained the
-      // iteration their keys appeared, so they never re-enter)
+      // chainable table (frontier tables past the first iteration were
+      // chained the iteration their keys appeared, so they never
+      // re-enter)
       val chainAcc = scala.collection.mutable.Map.empty[String, DataFrame]
       def addKeys(table: String, keys0: DataFrame): Unit = {
         // LAZY checkpoint per contribution: a produced key set feeds the
@@ -624,10 +707,6 @@ class ClosureExtractor(
         if (chainable(table))
           chainAcc.update(table,
             chainAcc.get(table).map(_.union(keys)).getOrElse(keys))
-      }
-      // seeds are raw at depth 0: their forward FKs chain now
-      if (depth == 0) frontier.foreach { case (t, keys) =>
-        if (chainable(t)) chainAcc.update(t, keys)
       }
 
       // J2 reverse lookup, batched: child rows whose FK is in `keys`.
@@ -747,32 +826,22 @@ class ClosureExtractor(
       // complete before the parent's turn (topo order; cyclic producers
       // contributed during the frontier pass above, before this loop).
       //
-      // Each chain input is anti-joined against `seen` FIRST (lazily, in
-      // the same job): a produced key that is already seen had its whole
-      // forward chain walked the iteration it first appeared, so
-      // expanding it again only re-runs every downstream semi-join on
+      // Each produced input is anti-joined against `seen` FIRST (lazily,
+      // in the same job): a produced key that is already seen had its
+      // whole forward chain walked the iteration it first appeared (or
+      // is a previously-exported key, whose parents are exported too),
+      // so expanding it again only re-runs every downstream semi-join on
       // stale keys — multi-level waste the candidate stage would cut one
-      // level too late. Seeds at depth 0 are fresh by definition — but
-      // they sit inside `seen`, so a seed table's depth-0 chain input
-      // must not anti-join the full seen-set (it would erase the seeds
-      // themselves); it anti-joins preSeen alone instead, which both
-      // keeps the seeds and stops refire-produced OLD children from
-      // re-walking a full forward-FK level over the previous export
-      // (an old row's parents are already exported by the contract).
+      // level too late. The first iteration's raw keys (delta seeds, or
+      // the keys a fast-path handoff left unexpanded) are fresh by
+      // definition but sit inside `seen`, so they skip that anti-join.
       chainOrder.foreach { t =>
-        chainAcc.get(t).foreach { keysT0 =>
+        val fks = catalog.foreignKeysOf(t)
+        if (fks.nonEmpty) {
           val pk = catalog.pkOf(t)
-          val fks = catalog.foreignKeysOf(t)
-          if (fks.nonEmpty) {
-            val keysT = seen.get(t) match {
-              case Some(s) if !(depth == 0 && frontier.contains(t)) =>
-                keysT0.distinct().join(hinted(s, seenSizes.get(t)), pk, "left_anti")
-              case _ => pre.get(t) match {
-                case Some(p) => keysT0.distinct()
-                  .join(hinted(p, preSizes.get(t)), pk, "left_anti")
-                case None => keysT0
-              }
-            }
+          val produced = chainAcc.get(t).map(keysT0 => seen.get(t).fold(keysT0)(s =>
+            keysT0.distinct().join(hinted(s, seenSizes.get(t)), pk, "left_anti")))
+          (chainRaw.get(t) ++ produced).reduceOption(_.union(_)).foreach { keysT =>
             val rows = keyProjection(t, (pk ++ fks.map(_.childCol)).distinct)
               .join(keysT, pk, "left_semi")
             fks.foreach { fk =>
@@ -785,6 +854,7 @@ class ClosureExtractor(
           }
         }
       }
+      chainRaw = Map.empty
       // anti-join out already-seen keys, then drop empty frontiers.
       // Emptiness is decided with ONE union-of-counts job for all tables
       // instead of a driver-serial isEmpty() per table.
@@ -864,12 +934,19 @@ object ClosureExtractor {
   /** Row budget for the driver-local BFS fast path (see
     * [[ClosureExtractor.runAllWithSizes]]): the local traversal may
     * collect at most this many key/edge tuples TOTAL across the whole
-    * run; one row more and it aborts to the distributed BFS, untouched.
-    * Calibrated well under [[graft.SparkUtil.BroadcastRowLimit]]: a key
-    * set this size is trivially broadcastable, so the local path never
-    * handles anything the distributed path wouldn't have broadcast
-    * anyway. 0 disables the fast path (specs use this to pin
-    * local == distributed).
+    * run; one row more and it aborts, handing its last completed
+    * iteration boundary to the distributed BFS. Calibrated well under
+    * [[graft.SparkUtil.BroadcastRowLimit]]: a key set this size is
+    * trivially broadcastable, so the local path never handles anything
+    * the distributed path wouldn't have broadcast anyway. 0 disables the
+    * fast path (specs use this to pin local == distributed).
+    *
+    * Why the fast path stays, measured on the lifecycle benchmark's sf0.1
+    * data (4 vCPUs, local[4]): point cones of about 470 rows take
+    * 0.7–1.2 s local against 4.0–5.3 s distributed, while 230k-row
+    * cones take 6.2–7.6 s local (with the budget raised to admit them)
+    * against 5.1–6.1 s distributed — so small closures run locally and
+    * large ones keep the shuffling plan, past the rows they share.
     */
   val FastPathBudget: Long = 200000L
 
@@ -920,6 +997,61 @@ object ClosureExtractor {
         params.toSeq.map(row => graft.sqlparse.SeedQuery.substitute(cq.template, row))
     }
   }
+
+  /** `df(column) IN values` as ONE Catalyst `InSet`, for fast-path
+    * probes. `isin(values: _*)` builds an `In` with a literal child per
+    * key: on the lifecycle benchmark's data a 36k-key probe took 0.4–1.0
+    * s of driver time to build that way, and about 15 ms as one `InSet`
+    * node. Parquet still receives the `InSet` as a pushed `In` filter. Values convert to the column's
+    * type exactly as the analyzer coerces them: a value of the column's
+    * type is used as is; integral values widen to a wider integral
+    * column, and against a narrower one (where the analyzer would widen
+    * the column) only the values inside its range can match, so the rest
+    * drop; any other type mix is left to `isin`. Nulls never match.
+    */
+  private[closure] def inSet(df: DataFrame, column: String, values: Seq[Any]): Column = {
+    import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.sql.types._
+    def integral(dt: DataType, v: Long): Option[Any] = dt match {
+      case LongType => Some(v)
+      case IntegerType => Option.when(v.isValidInt)(v.toInt)
+      case ShortType => Option.when(v.isValidShort)(v.toShort)
+      case ByteType => Option.when(v.isValidByte)(v.toByte)
+      case _ => None
+    }
+    def isIntegral(dt: DataType): Boolean = integral(dt, 0L).nonEmpty
+    val dt = df.schema(column).dataType
+    val lits = values.iterator.filter(_ != null).map(Literal(_)).toSeq
+    val set: Option[Set[Any]] =
+      if (lits.forall(_.dataType == dt)) Some(lits.iterator.map(_.value).toSet)
+      else if (isIntegral(dt) && lits.forall(l => isIntegral(l.dataType)))
+        Some(lits.iterator.flatMap(l =>
+          integral(dt, l.value.asInstanceOf[Number].longValue)).toSet)
+      else None
+    set.fold(df(column).isin(values: _*))(s =>
+      ColumnBridge.column(InSet(ColumnBridge.expression(df(column)), s)))
+  }
+
+  /** Where the driver-local fast path stopped ([[tryRunAllLocal]]). */
+  private[closure] sealed trait LocalOutcome
+  /** Finished within budget: result key sets, their sizes, and the rows
+    * the run collected. */
+  private[closure] final case class LocalDone(keys: Map[String, DataFrame],
+      sizes: Map[String, Long], collected: Long) extends LocalOutcome
+  /** Aborted after completing the iterations before `depth`. Per table
+    * (key set, exact size): `expanded` result keys have had every
+    * expansion run, `frontier` result keys (fresh at `depth`) have had
+    * none; `expanded` lists every result table, empty sets included.
+    * preSeen keys are not shipped (the distributed side re-reads them);
+    * `preSizes` are their exact distinct counts.
+    */
+  private[closure] final case class LocalHandoff(depth: Int,
+      expanded: Map[String, (DataFrame, Long)],
+      frontier: Map[String, (DataFrame, Long)],
+      preSizes: Map[String, Long]) extends LocalOutcome
+  /** Aborted before the first iteration boundary: start from the seeds. */
+  private[closure] case object LocalRestart extends LocalOutcome
 
   /** Control-flow signal: the local fast path hit its row budget or an
     * unsupported shape — fall back to the distributed BFS. Stackless:

@@ -131,6 +131,21 @@ class BenchJsonSpec extends AnyFunSuite {
     }
   }
 
+  test("both output files resolve through one directory: property, else user.dir") {
+    val dir = (m: Map[String, String]) => Bench.outputDir(m.get)
+    // an explicit directory wins over the working directory
+    assert(dir(Map(Bench.OutputDirProperty -> "/out", "user.dir" -> "/cwd")) ==
+      java.nio.file.Paths.get("/out"))
+    // unset: the working directory, as before
+    assert(dir(Map("user.dir" -> "/cwd")) == java.nio.file.Paths.get("/cwd"))
+    assert(dir(Map.empty) == java.nio.file.Paths.get("."))
+    // main() resolves both files through this one helper: the helper is
+    // the only reader of user.dir
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/Bench.scala"))
+    assert(src.split("\"user.dir\"", -1).length - 1 == 1)
+  }
+
   test("rendered line is parseable JSON (driver ingests it verbatim)") {
     // minimal structural check without a JSON lib: balanced braces and the
     // escape rules keep quotes paired

@@ -236,14 +236,16 @@ class PropertySpec extends SparkSpec {
         "t1" -> seedIds0.drop(2).intersect(g.data("t1").keySet)
       ).filter(_._2.nonEmpty)
       if (seeds.nonEmpty) {
-        // BOTH execution regimes against the model: the default budget
+        // every execution regime against the model: the default budget
         // runs the driver-local fast path, budget 0 forces the
-        // distributed BFS — random graphs keep each pinned to the same
-        // 25-line reference semantics
+        // distributed BFS, and half the fast path's rows aborts it
+        // mid-run — random graphs keep each pinned to the same 25-line
+        // reference semantics
+        val seedDfs = seeds.toSeq.map { case (t, ids) =>
+          t -> dfs(t).filter(col("id").isin(ids.toSeq: _*)) }
         def run(budget: Long) = new ClosureExtractor(cat, dfs(_), policy,
             fastPathBudget = budget)
-          .extractAll(seeds.toSeq.map { case (t, ids) =>
-            t -> dfs(t).filter(col("id").isin(ids.toSeq: _*)) })
+          .extractAll(seedDfs)
           .map { case (t, df) =>
             t -> df.select("id").collect().map(_.getLong(0)).toSet }
           .filter(_._2.nonEmpty)
@@ -254,6 +256,14 @@ class PropertySpec extends SparkSpec {
         val dist = run(0L)
         assert(dist == want,
           s"distributed mismatch: edges=${g.edges} seeds=$seeds policy=$policy\n got=$dist\nwant=$want")
+        // third regime: a budget that runs out halfway, so the fast path
+        // hands a mid-run boundary (or, early on, the seeds) over
+        val half = new ClosureExtractor(cat, dfs(_), policy)
+          .fastPathRows(seedDfs).map(_ / 2).getOrElse(1L) max 1L
+        val mid = run(half)
+        assert(mid == want,
+          s"mid-run abort (budget $half) mismatch: edges=${g.edges} seeds=$seeds " +
+            s"policy=$policy\n got=$mid\nwant=$want")
       }
     }
   }
@@ -378,14 +388,15 @@ class PropertySpec extends SparkSpec {
         val prevModel = modelClosure(g, Map("t0" -> prevIds), policy)
         val preSeen = prevModel.map { case (t, ids) =>
           t -> ids.toSeq.toDF("id") }
-        // both regimes: fast path (default budget) and distributed
-        // (budget 0) must each land on full-minus-prev with preSeen
-        // pruning and the REFIRE step engaged
+        // every regime — fast path (default budget), distributed
+        // (budget 0) and a mid-run abort (half the fast path's rows) —
+        // must land on full-minus-prev with preSeen pruning and the
+        // REFIRE step engaged
+        val seedDfs =
+          Seq("t0" -> dfs("t0").filter(col("id").isin(seedIds.toSeq: _*)))
         def run(budget: Long) = new ClosureExtractor(cat, dfs(_), policy,
             fastPathBudget = budget)
-          .extractAll(
-            Seq("t0" -> dfs("t0").filter(col("id").isin(seedIds.toSeq: _*))),
-            preSeen)
+          .extractAll(seedDfs, preSeen)
           .map { case (t, df) =>
             t -> df.select("id").collect().map(_.getLong(0)).toSet }
           .filter(_._2.nonEmpty)
@@ -401,6 +412,12 @@ class PropertySpec extends SparkSpec {
         assert(dist == want,
           s"distributed incremental != full minus prev: edges=${g.edges} " +
             s"seeds=$seedIds prev=$prevIds policy=$policy\n got=$dist\nwant=$want")
+        val half = new ClosureExtractor(cat, dfs(_), policy)
+          .fastPathRows(seedDfs, preSeen).map(_ / 2).getOrElse(1L) max 1L
+        val mid = run(half)
+        assert(mid == want,
+          s"mid-run incremental (budget $half) != full minus prev: edges=${g.edges} " +
+            s"seeds=$seedIds prev=$prevIds policy=$policy\n got=$mid\nwant=$want")
         if (full.exists { case (t, ids) =>
             ids.intersect(prevModel.getOrElse(t, Set.empty)).nonEmpty }) pruned += 1
       }

@@ -36,8 +36,9 @@ class StaticAuditSpec extends AnyFunSuite {
   // bounded metadata:
   //   Main            — CLI presentation of already-aggregated results
   //   ClosureExtractor— frontier COUNTS + config-query parameter tuples
-  //                     + the fast-path limit-guarded take (aborts to
-  //                     the distributed BFS one row past fastPathBudget)
+  //                     + the fast-path limit-guarded take (one row
+  //                     past fastPathBudget it aborts and hands its
+  //                     last completed iteration to the distributed BFS)
   //   AnnIndex        — probe shortlist (k×nprobe rows)
   //   DedupQueries    — bm25-feedback doc shortlist (≤10 ids)
   //   EventQueries    — calendar rollup + attribution transition matrix

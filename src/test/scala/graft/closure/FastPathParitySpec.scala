@@ -8,12 +8,14 @@ import graft.meta.{Catalog, FkEdge, TableMeta}
 /** Pins the driver-local fast path (`ClosureExtractor.tryRunAllLocal`)
   * to the distributed BFS: same catalog/seeds/policy/preSeen must yield
   * IDENTICAL key sets whether the traversal runs locally (default
-  * budget), distributed (`fastPathBudget = 0`), or aborts mid-run to
-  * distributed (a budget of a few rows). This is what keeps the
-  * distributed path — the 100 TB plan — covered now that every
-  * small-data test takes the fast path by default, and what makes the
-  * fast path safe to take: one row past the budget and the run falls
-  * back to the exact machinery this spec compares against.
+  * budget), distributed (`fastPathBudget = 0`), or aborts mid-run and
+  * hands its last completed iteration boundary to the distributed BFS.
+  * The abort budget sweeps every collect point of each fixture — before
+  * the first boundary (restart from the seeds), inside an iteration's
+  * probes, and inside a fresh-key re-probe — so every handoff state the
+  * fast path can produce is checked. This is what keeps the distributed
+  * path — the 100 TB plan — covered now that every small-data test takes
+  * the fast path by default, and what makes the fast path safe to take.
   */
 class FastPathParitySpec extends SparkSpec {
   import spark.implicits._
@@ -48,7 +50,7 @@ class FastPathParitySpec extends SparkSpec {
   private def tables: Map[String, DataFrame] =
     Map("user" -> user, "project" -> project, "comment" -> comment)
 
-  /** Key sets from all three execution regimes; asserts they agree and
+  /** Key sets from every execution regime; asserts they agree and
     * returns the (shared) result keyed by table.
     */
   private def allRegimes(
@@ -57,17 +59,23 @@ class FastPathParitySpec extends SparkSpec {
       preSeen: Map[String, DataFrame] = Map.empty,
       configQueries: Seq[ConfigQuery] = Nil,
       runQuery: String => DataFrame = null): Map[String, Set[Seq[Any]]] = {
-    def run(budget: Long): Map[String, Set[Seq[Any]]] =
+    def extractor(budget: Long) =
       new ClosureExtractor(cat, tbl, policy, configQueries, runQuery, budget)
-        .runAll(seeds, preSeen)
+    def run(budget: Long): Map[String, Set[Seq[Any]]] =
+      extractor(budget).runAll(seeds, preSeen)
         .map { case (t, df) => t -> df.collect().map(_.toSeq).toSet }
     val fast = run(ClosureExtractor.FastPathBudget)
     val dist = run(0L)
-    // a 3-row budget admits the seed collect at most, then aborts: the
-    // mid-run fallback must land on the identical distributed answer
-    val aborted = run(3L)
     assert(fast == dist, s"fast != distributed:\n fast=$fast\n dist=$dist")
-    assert(aborted == dist, s"aborted != distributed:\n ab=$aborted\n dist=$dist")
+    // one budget per collect point: budget b aborts at the first collect
+    // that takes the run past b rows, and `rows` is where it finishes
+    val rows = extractor(ClosureExtractor.FastPathBudget)
+      .fastPathRows(seeds, preSeen).getOrElse(fail("fast path did not finish"))
+    (1L until rows).foreach { b =>
+      val aborted = run(b)
+      assert(aborted == dist,
+        s"abort at budget $b of $rows != distributed:\n ab=$aborted\n dist=$dist")
+    }
     fast
   }
 
@@ -83,6 +91,37 @@ class FastPathParitySpec extends SparkSpec {
       val out = allRegimes(catalog, tables(_), p,
         Seq("user" -> user.filter(col("id") === 1)))
       assert(out("user").nonEmpty, s"empty closure under $p")
+    }
+  }
+
+  test("a mid-run abort hands its last completed boundary over") {
+    val seeds = Seq("user" -> user.filter(col("id") === 1))
+    def extractor(budget: Long) =
+      new ClosureExtractor(catalog, tables(_), fastPathBudget = budget)
+    val want = extractor(0L).runAll(seeds)
+      .map { case (t, df) => t -> df.collect().map(_.toSeq).toSet }
+    val rows = extractor(ClosureExtractor.FastPathBudget).fastPathRows(seeds).get
+    val outcomes = (1L until rows).map(b =>
+      extractor(b).tryRunAllLocal(seeds, Map.empty))
+    // aborts inside the seed collect restart; later ones hand over
+    assert(outcomes.contains(ClosureExtractor.LocalRestart))
+    val handoffs = outcomes.collect { case h: ClosureExtractor.LocalHandoff => h }
+    assert(handoffs.map(_.depth).distinct.size >= 2,
+      s"handoff depths: ${handoffs.map(_.depth)}")
+    handoffs.foreach { h =>
+      def keys(m: Map[String, (DataFrame, Long)]) = m.map { case (t, (df, n)) =>
+        val ks = df.collect().map(_.toSeq).toSet
+        assert(ks.size == n, s"size of $t at depth ${h.depth}")
+        t -> ks
+      }
+      val (done, fresh) = (keys(h.expanded), keys(h.frontier))
+      // the two parts are disjoint result keys of the closure
+      (done.keySet ++ fresh.keySet).foreach { t =>
+        val (d, f) = (done.getOrElse(t, Set.empty), fresh.getOrElse(t, Set.empty))
+        assert(d.intersect(f).isEmpty && (d ++ f).subsetOf(want(t)),
+          s"$t at depth ${h.depth}: expanded=$d frontier=$f want=${want(t)}")
+      }
+      assert(fresh.nonEmpty, s"empty frontier handed over at depth ${h.depth}")
     }
   }
 
