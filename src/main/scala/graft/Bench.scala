@@ -7,8 +7,8 @@ object Bench {
     // ERROR, not WARN: the driver's round artifact keeps only a ~2000-char
     // stdout TAIL, and at WARN the pinned global-window queries emit enough
     // `WindowExec: No Partition Defined` lines per pass to crowd every byte
-    // of diagnostic JSON out of a partial/killed run's tail (r14's rc=124
-    // tail was 100% WindowExec spam). The JSON lines below are the only
+    // of diagnostic JSON out of a partial/killed run's tail (a killed
+    // run's rc=124 tail was 100% WindowExec spam). The JSON lines below are the only
     // stdout this process should produce.
     spark.sparkContext.setLogLevel("ERROR")
     // warmup absorbs JVM/codegen/parquet-footer startup cost so the
@@ -38,16 +38,16 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     // n separated passes per query, MIN recorded: single-shot timings on a
     // busy host showed ≥2× per-query swings round-over-round that were pure
-    // scheduling noise (r5 recorded minhash_pairs at 6.9 s; re-measured
+    // scheduling noise (minhash_pairs once recorded 6.9 s; re-measured
     // warm it is 1.5 s on the same code).
     // floored at 1: runs=0 would make min() throw on an empty sequence and
     // abort the whole suite.
-    // DEFAULT 2 (was 3 through r14): at 310 queries the 3-pass suite's
-    // wall cost outgrew the driver's ~3600 s budget (r14's run was killed
-    // at the hour mark with no JSON). Min-of-2 still discards one stalled
+    // DEFAULT 2 (was 3): at 310 queries the 3-pass suite's wall cost
+    // outgrew the ~3600 s budget of a gate run (a 3-pass run was killed at
+    // the hour mark with no JSON). Min-of-2 still discards one stalled
     // pass, and the canary block now answers the drift-vs-regression
     // question the third pass used to buy. Recorded numbers stay
-    // comparable with the 142 s r1 baseline: every recorded sample is
+    // comparable with the 142 s baseline: every recorded sample is
     // still a WARM min.
     // a typo'd value must name the variable, not abort after the warmups
     // with a bare NumberFormatException
@@ -67,11 +67,11 @@ object Bench {
     // warmup of the same query. Spark's generated-class cache holds 100
     // plans and the JIT code cache is bounded, so nothing stays warm
     // across a 260+-query sweep; a fully interleaved timed sweep (tried
-    // in r12) measured every query cold and inflated the suite a
+    // once) measured every query cold and inflated the suite a
     // uniform ~2.2× (word_counts 0.15→0.43 s with zero code diff) —
     // incomparable with the warm-recorded baseline the gate is set
     // against. Warmth must be re-established per query, right before
-    // its timed run. WALL-BUDGET EXCEPTION (r15): in passes ≥2, a query
+    // its timed run. WALL-BUDGET EXCEPTION: in passes ≥2, a query
     // whose best earlier-pass sample is already < WarmSkipSecs runs
     // timed-only. Pass 1 always produced one warm sample for it, so the
     // recorded MIN is warm regardless of how cold the later sample runs;
@@ -82,9 +82,9 @@ object Bench {
     // STALL-ROBUST — the suite runs as `runs` SEPARATED full passes,
     // and the recorded value is the MIN of a query's warm samples
     // across passes. Back-to-back samples share any transient host
-    // stall: r10 recorded corr_matrix at 25.8 s on all three
-    // consecutive runs, and the identical code re-benched at 1.44 s in
-    // r11. With passes minutes apart a stall lands in at most one
+    // stall: corr_matrix once recorded 25.8 s on all three
+    // consecutive runs, and the identical code re-benched at 1.44 s
+    // the next time. With passes minutes apart a stall lands in at most one
     // sample, and min — the standard interference-free estimator —
     // discards it. A consistent regression shows in BOTH samples, so
     // min still reports it.
@@ -94,8 +94,8 @@ object Bench {
     // last. The code under the canary never changes within a session,
     // so canary_ratio = last/first is a pure host-speed signal: a
     // suite total that moved together with the canary is drift, one
-    // that moved against a flat canary is a regression. r13's gate
-    // number moved 181→246→265 s across runs of an UNCHANGED tree;
+    // that moved against a flat canary is a regression. The gate
+    // number once moved 181→246→265 s across runs of an UNCHANGED tree;
     // this puts the disambiguating number in the artifact itself.
     val WarmSkipSecs = 0.5
     def timedWarm(name: String, block: String): Option[Double] = {
@@ -105,7 +105,7 @@ object Bench {
       // ("first"/"last") and phase (":warm"/":timed") land in the label
       // so an event-log reader can tell exactly which jobs produced the
       // recorded canary sums — an unphased label made warmups and the
-      // two blocks indistinguishable (r16 advice).
+      // two blocks indistinguishable.
       spark.sparkContext.setJobDescription(s"canary:$block:$name:warm")
       spark.catalog.clearCache()
       try run(fn(spark, sfDir)) catch { case NonFatal(_) => () }
@@ -172,7 +172,7 @@ object Bench {
           spark.catalog.clearCache()
         }
         // :timed vs :warm in the label so an event-log reader can tell
-        // which jobs contributed to the recorded sample (r16 advice)
+        // which jobs contributed to the recorded sample
         spark.sparkContext.setJobDescription(s"bench:$name:timed")
         val t0 = System.nanoTime()
         val err = try { run(fn(spark, sfDir)); None }
@@ -184,7 +184,7 @@ object Bench {
       spark.sparkContext.setJobDescription(null)
       sweeps :+= sweep
       // checkpoint: a killed run must still leave a parseable number in
-      // the driver's stdout tail (r14's kill left only log spam). One
+      // the captured stdout tail (a killed run once left only log spam). One
       // full JSON line per completed pass, flagged "partial" so the
       // driver/judge can't mistake it for the certified total; the real
       // final line below is always printed last.
@@ -195,27 +195,27 @@ object Bench {
     val canary = canaryFirst.map(first => mkCanary(first, Some(canaryBlock("last"))))
     val json = renderJson(results(sweeps), sfDir, runs, canary)
     println(json)
-    // Tail-truncation armor (r16 verdict item 3): the driver's round
+    // Tail-truncation armor: the round
     // artifact keeps only a ~2000-char stdout TAIL, and sbt's [success]
     // epilogue prints AFTER this process exits — a tail capture can
-    // decapitate the contract line (it did to BENCH_r15, costing r16 its
-    // whole per-query PERF comparison). Mirror the final line
+    // decapitate the contract line (it did to BENCH_r15.json, costing
+    // the next round its whole per-query PERF comparison). Mirror the final line
     // UNCONDITIONALLY to a scratch sidecar (BENCH_OUT.json — never the
     // committed, opt-in BENCH_LOCAL record) so the full line survives
     // any stdout truncation. Best-effort, like the record write.
     writeSidecar(json, outputDir(sys.props.get))
     // The driver's round artifact keeps only a ~2000-char stdout TAIL —
-    // at 260+ queries most per-query entries fall off it (r9 lost all
-    // entries before 'r'). The repo-local copy is the durable record:
+    // at 260+ queries most per-query entries fall off it (one run lost
+    // all entries before 'r'). The repo-local copy is the durable record:
     // committed per round, it keeps round-over-round per-query
     // comparison possible from git history alone. Best-effort — a
     // read-only checkout must not fail the bench. FILTERED runs
     // (SPARK_GRAFT_BENCH_ONLY set) never touch it: a 2-query iteration
     // sweep must not clobber the committed full-suite record (it did,
-    // twice, in r13 — the sf1 sweep overwrote the r12 reference).
-    // OPT-IN ONLY (r16): the write additionally requires
+    // twice — an sf1 sweep overwrote the reference).
+    // OPT-IN ONLY: the write additionally requires
     // SPARK_GRAFT_BENCH_LOCAL=1 — the DRIVER's own full-suite gate run
-    // executes in the repo dir with no filter, and at r15 it silently
+    // executes in the repo dir with no filter, and once it silently
     // replaced the committed min-of-N record with its own
     // single-conditions number (provenance lost). The builder sets the
     // flag when promoting a run to the durable record; every other
@@ -275,12 +275,6 @@ object Bench {
     * excluded from BOTH sums so the ratio compares identical work).
     */
   final case class Canary(first: Double, last: Option[Double], errors: Int)
-
-  def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2)
-    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-  }
 
   /** One JSON result line. A failed query must NOT masquerade as a
     * near-zero timing: it goes into "errors" and is excluded from

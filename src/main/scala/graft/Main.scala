@@ -341,7 +341,7 @@ object Main {
             else { out("INTEGRITY VIOLATED"); 1 }
           }
         }
-      // persisted-index lifecycle (the product surface of the r8 index
+      // persisted-index lifecycle (the product surface of the index
       // tier): build / incremental append / compact / status for the
       // dedup fingerprint, near-dup cluster, and IVF-cell artifacts —
       // all committed through the crash-safe SegmentLog protocol

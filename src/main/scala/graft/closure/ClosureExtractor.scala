@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.meta.{Catalog, FkEdge}
+import graft.meta.Catalog
 
 /** Policy knobs for reference-key (reverse-edge) expansion, mirroring the
   * reference's traversal gating (`/root/reference/etl/extractor.go:40-50`):

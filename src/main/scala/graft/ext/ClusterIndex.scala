@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * fixpoint. At 100 TB the recurring cost is the batch scan plus joins
   * sized by the touched-bucket fringe.
   *
-  * CAP CONSISTENCY (r13): the ≤64 bucket cap — the LSH skew guard — is
+  * CAP CONSISTENCY: the ≤64 bucket cap — the LSH skew guard — is
   * RE-EVALUATED on append. The one-shot form drops an over-cap bucket
   * whole; an appended batch that pushes a previously small bucket past
   * the cap therefore RETRACTS that bucket's earlier edges: every
@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * "all old members stay connected", which is exactly what retraction
   * breaks. Clusters touched only by NEW pairs keep the cheap star-edge
   * path. This makes batch-by-batch == one-shot EXACTLY in every cap
-  * regime (the r12 sf1 rehearsal's 10×-replica corpus included), not
+  * regime (an sf1 rehearsal's 10×-replica corpus included), not
   * just the sub-cap one; the re-derivation cost is proportional to the
   * overflowed buckets' cluster fringe — zero when no bucket crosses,
   * which is the steady-state ingest case. Correctness of the

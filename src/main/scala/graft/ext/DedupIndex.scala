@@ -10,23 +10,22 @@ import org.apache.spark.sql.functions._
   * concrete. Lifecycle:
   *
   * {{{
-  * DedupIndex.build(corpusDocs, dir)          // once
-  * val kept = DedupIndex.dedupe(batch, dir)   // per batch: survivors
-  * DedupIndex.append(batch, dir)              // fold the WHOLE batch in
+  * DedupIndex.build(corpusDocs, dir)                 // once
+  * val kept = DedupIndex.ingest(spark, batch, dir)   // per batch: survivors,
+  *                                                   // WHOLE batch folded in
   * }}}
   *
-  * `append` takes the whole batch, not just survivors: the drop rule is
+  * The fold takes the whole batch, not just survivors: the drop rule is
   * near-ANY-earlier (kept or not — a dropped doc still blocks a later
   * doc that is near it but not near its keeper), so the index must
   * remember everything seen or batch-by-batch ingest would drift from
   * the one-shot result. Same contract as the batch rule in
   * [[DedupQueries.semDedup]] and the paper it follows.
   *
-  * `dedupe` runs [[DedupQueries.dedupIncrementalCore]] — the SAME
+  * `ingest` runs [[DedupQueries.dedupIncrementalParts]] — the SAME
   * algorithm as the oracle-gated `dedup_incremental` query, with the
-  * index standing in for the old rows (DedupIndexSpec proves
-  * survivor-set equality, and that batch-by-batch ingest equals the
-  * one-shot split). PRECISION CAVEAT: the core's ≤64 LSH bucket cap (the
+  * index standing in for the old rows (DedupIndexSpec proves that
+  * batch-by-batch ingest equals the one-shot split). PRECISION CAVEAT: the core's ≤64 LSH bucket cap (the
   * minhashPairs skew guard) skips the near rule for oversized buckets,
   * and bucket population differs between a growing index and the
   * one-shot frame — so the batch-by-batch == one-shot equality is exact
@@ -158,8 +157,8 @@ object DedupIndex {
     * driver. A fold that would push the count past capacity rebuilds
     * at a larger capacity AND merges the batch in, preserving both the
     * fp-rate guarantee and the no-false-negative contract. Works for
-    * both call orders: commit-then-fold (as [[growBloomLatest]] does)
-    * and fold-before-commit — the overflow rebuild's count header is
+    * both call orders: commit-then-fold (as [[ingest]] does) and
+    * fold-before-commit — the overflow rebuild's count header is
     * `max(committed rescan, old count + batch)`, so it never
     * understates sketch contents whichever order the caller used.
     * Returns the recorded covered count.
@@ -182,10 +181,10 @@ object DedupIndex {
       // caller has committed it as a segment yet. A plain writeBloom here
       // rebuilds from committed rows only, so a fold-before-append caller
       // would silently lose newFps from the sketch — false NEGATIVES,
-      // breaking the one-sided-error contract [[prefilter]] depends on.
+      // breaking the sketch's one-sided-error contract.
       // Rebuild from the committed index, then OR-merge the batch filter:
       // bitwise-idempotent if the batch was already committed (the rescan
-      // covered it — the [[growBloomLatest]] order), additive if not. The
+      // covered it — the [[ingest]] order), additive if not. The
       // recorded count is the committed rescan count — exact for the
       // documented commit-then-fold order; a contract-violating
       // fold-before-append caller undercounts by at most its one batch,
@@ -216,18 +215,6 @@ object DedupIndex {
     }
   }
 
-  /** [[growBloom]] over the LATEST live segment — the streaming-ingest
-    * convenience: [[ingest]] has just committed the batch as the
-    * newest segment, so its fp rows and footer count are exactly the
-    * fold input.
-    */
-  def growBloomLatest(spark: SparkSession, dir: String): Long = {
-    val st = state(dir)
-    val segPath = s"${root(dir)}/${st.segments.last}"
-    val fps = spark.read.parquet(segPath).select("fp")
-    growBloom(spark, dir, fps, spark.read.parquet(segPath).count())
-  }
-
   private def commitBloom(spark: SparkSession, dir: String,
       st: SegmentLog.State, bf: org.apache.spark.util.sketch.BloomFilter,
       cap: Long, count: Long): Unit = {
@@ -243,18 +230,6 @@ object DedupIndex {
       SegmentLog.State(gen, st.segments, st.extras + ("bloom" -> name)))
     SegmentLog.cleanup(r)
   }
-
-  /** Load the committed sketch artifact (driver-side: the serialized
-    * bits are the broadcast payload, ~1.2 MB per million fingerprints
-    * at 1% fp). A legacy/corrupt artifact is rebuilt in place from the
-    * committed fingerprint rows (they are authoritative) rather than
-    * hard-failing the read path on a format bump.
-    */
-  def loadBloom(spark: SparkSession, dir: String): org.apache.spark.util.sketch.BloomFilter =
-    loadBloomMetaRecovering(spark, dir) match {
-      case Some((_, _, bf)) => bf
-      case None => writeBloom(spark, dir); loadBloomMeta(spark, dir)._3
-    }
 
   /** [[loadBloomMeta]] that reports an unreadable (legacy-format or
     * corrupt) artifact as None instead of throwing, so maintenance
@@ -301,43 +276,6 @@ object DedupIndex {
     * current artifact from a legacy/corrupt one instead of misparsing.
     */
   val BloomMagic: Long = 0x47524146_54424C01L
-
-  /** EXACT-rule pre-gate: flag each batch doc whose content fingerprint
-    * the index has probably seen, as a pure projection through the
-    * broadcast sketch — no index scan, no shuffle. No false negatives,
-    * so `likely_seen = false` rows are definitively exact-fresh and can
-    * skip the fp join in [[dedupe]]; flagged rows still take the exact
-    * path (1% are false positives), and the NEAR rule's banded pipeline
-    * is untouched either way. This is the [[DedupQueries.dedupBloom]]
-    * shape wired to the persisted lifecycle.
-    */
-  def prefilter(spark: SparkSession, batch: DataFrame, dir: String): DataFrame = {
-    val bf = loadBloom(spark, dir)
-    batch
-      .withColumn("fp", DedupQueries.contentFp(col("text")))
-      .withColumn("likely_seen",
-        graft.functions.BloomMightContain.might_contain(spark, bf, col("fp")))
-      .select("doc_id", "fp", "likely_seen")
-  }
-
-  /** Surviving doc_ids of `batch` after dedup against the index AND
-    * earlier batch docs (greedy first-wins by doc_id).
-    */
-  def dedupe(spark: SparkSession, batch: DataFrame, dir: String): DataFrame = {
-    val idx = rows(spark, dir)
-      .withColumn("is_old", lit(true))
-    // the batch's md5-per-shingle pipeline runs ONCE into a narrow
-    // checkpoint — the core's three consumers would otherwise re-run it
-    // (the duplicate-subtree trap dedupIncremental documents); the index
-    // side stays a plain parquet scan, column-pruned per consumer
-    val b = DedupQueries.fpSig(batch)
-      .withColumn("is_old", lit(false))
-      .select("doc_id", "is_old", "fp", "sig")
-      .localCheckpoint(false)
-    DedupQueries.dedupIncrementalCore(
-        idx.select("doc_id", "is_old", "fp", "sig").unionByName(b))
-      .orderBy("doc_id")
-  }
 
   /** CAP-CONSISTENT streaming ingest step: dedupe `batch` against the
     * index, fold the whole batch in, and RESURRECT previously dropped
@@ -467,7 +405,7 @@ object DedupIndex {
     SegmentLog.cleanup(r)
     // per-batch sketch maintenance, folded in HERE so the fingerprints
     // come from the already-checkpointed batch frame instead of a
-    // re-read of the just-written segment (growBloomLatest's shape);
+    // re-read of the just-written segment;
     // runs after the commit above, so the commit-then-fold contract
     // growBloom documents holds
     if (maintainBloom)

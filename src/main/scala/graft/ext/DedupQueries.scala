@@ -31,9 +31,8 @@ object DedupQueries {
 
   /** THE canonical exact-content fingerprint — one definition shared by
     * every exact-dedup consumer (dedupExact, fpSig/DedupIndex,
-    * dedupBloom, DedupIndex.prefilter). The Bloom pre-gate's
-    * no-false-negative contract depends on the probe and the indexed fp
-    * being the SAME expression; an inline copy that drifted (e.g. to
+    * dedupBloom). A Bloom probe's no-false-negative contract depends on
+    * the probe and the indexed fp being the SAME expression; an inline copy that drifted (e.g. to
     * incorporate text_normalize) would silently pass true duplicates as
     * fresh.
     */
@@ -67,10 +66,6 @@ object DedupQueries {
   private val K = 8
   private val P = 2147483647L // 2^31 − 1
   private def affine(i: Int): (Long, Long) = (2 * i + 3L, 104729L * (i + 1))
-  private def sigExpr(i: Int): String = {
-    val (a, b) = affine(i)
-    s"array_min(transform(hs, h -> ($a * h + $b) % $P))"
-  }
 
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
     minhashPairsCore(spark, dir).orderBy("doc_a", "doc_b")
@@ -119,7 +114,7 @@ object DedupQueries {
     // expensive md5-per-shingle signature pipeline above is computed
     // exactly once (a banded-vs-banded self-join plans the whole subtree
     // twice; ReuseExchange does NOT fire when one copy hides under a
-    // BroadcastExchange, measured at 2× the bench cost in r3).
+    // BroadcastExchange, measured at 2× the bench cost).
     //
     // The size cap doubles as the LSH skew guard AND the memory bound for
     // collect_list: a bucket of n docs emits O(n²) pairs — one giant
@@ -627,7 +622,7 @@ object DedupQueries {
     * them. This is the 100 TB shape, in two respects:
     *
     *  - candidates come from LSH band buckets, never from an all-pairs or
-    *    size-blocked join (the r1 variant blocked on word-count ±2: ~90
+    *    size-blocked join (a variant blocked on word-count ±2: ~90
     *    distinct bucket values → O(n²/90) candidates, quadratic in corpus
     *    size);
     *  - WITHIN a bucket, each member pairs only with the bucket
@@ -1287,9 +1282,9 @@ object DedupQueries {
 
   /** Greedy first-wins dedup of the `is_old = false` rows against old
     * rows and earlier new rows, over any (doc_id, is_old, fp, sig)
-    * frame — shared by the registered one-scan query and
-    * [[DedupIndex.dedupe]] (where the old side is the persisted index),
-    * so the two paths are the same algorithm by construction.
+    * frame — the registered one-scan query; [[DedupIndex.ingest]]
+    * runs the same algorithm through [[dedupIncrementalParts]] with the
+    * persisted index as the old side.
     */
   private[ext] def dedupIncrementalCore(docs: DataFrame): DataFrame =
     dedupIncrementalParts(docs)._1
@@ -1584,7 +1579,7 @@ object DedupQueries {
     * blocks and it is silently lost, and messier vocabularies (vendor
     * strings, addresses) have no clean blocking column at all. Here
     * candidates come from MinHash-LSH over the name's character
-    * 3-gram set — [[sigExpr]]'s K=8 affine family over md5 gram
+    * 3-gram set — the K=8 affine family of [[minhashPairs]] over md5 gram
     * hashes, banded 8×1 (each signature component its own bucket)
     * rather than [[minhashPairs]]' 4×2: two edits on a ~10-char name
     * can kill 6 of its ~8 grams, so pair Jaccard runs as low as

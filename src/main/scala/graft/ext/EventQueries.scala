@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Event-time windowing over the `events` stream table (SURVEY.md §2.11).
-  * These are the BATCH forms — the DuckDB oracle can check them; the
-  * streaming forms (same expressions over `readStream` + watermark) live
-  * in [[graft.streaming.StreamingOps]] and are covered by StreamingSpec.
+  * These are the BATCH forms — the DuckDB oracle can check them. The
+  * streaming forms of the tumbling, session and click-attribution
+  * queries (same expressions over `readStream` + watermark) live in
+  * [[graft.streaming.StreamingOps]], whose replays the same oracle
+  * gates.
   *
   * Scale: tumbling/sliding aggs are one hash-shuffle on (window, key)
   * with map-side partial aggregation; session windows shuffle once on
@@ -702,9 +704,9 @@ object EventQueries {
   }
 
   /** Exact 0-based global rank — delegated to the shared two-phase
-    * distributed ranking helper [[DistRank.globalRank]] (built here in
-    * round 12 for orders_rfm; hoisted so pareto_abc / zipf_fit reuse
-    * the identical discipline).
+    * distributed ranking helper [[DistRank.globalRank]] (built here
+    * for orders_rfm; hoisted so pareto_abc / zipf_fit reuse the
+    * identical discipline).
     */
   private def globalRank(df: DataFrame, rankCol: String,
       keys: Seq[org.apache.spark.sql.Column]): DataFrame =
@@ -783,7 +785,7 @@ object EventQueries {
   /** MULTI-TOUCH ATTRIBUTION — first-touch, last-touch, and linear
     * credit per touch type for every purchase conversion (7-day
     * lookback): the batch credit-model family on top of the streaming
-    * [[graft.streaming.StreamingOps]] click-attribution join and the
+    * [[graft.streaming.StreamingOps.clickAttribution]] inner join and the
     * single-model [[graft.queries.OlapQueries]] range join. ONE
     * user-keyed range join builds the (purchase, touch) frame; ONE
     * purchase-keyed exchange serves all three models — first/last are
@@ -2752,7 +2754,7 @@ object EventQueries {
     * first-bucket-with-cum≥k, the equal-position and equal-key early
     * returns, then `(ceil−pos)·lo + (pos−floor)·hi` — both weights
     * Sterbenz-exact, so the value is the builtin's to the last ulp
-    * (and the 4 dp round matched DuckDB's quantile_cont in r9; the
+    * (and the 4 dp round already matched DuckDB's quantile_cont; the
     * hash is unchanged).
     */
   def funnelTimePercentiles(spark: SparkSession, dir: String): DataFrame = {

@@ -211,7 +211,7 @@ object GraphQueries {
     * codegen'd join (an in-group collect_list+explode form was measured
     * ~50% slower here at sf0.1: ObjectHashAggregate plus per-pair
     * struct allocation lose to the codegen'd join on this fanout).
-    * NOT persisted, on measurement (r7): caching the sp projection
+    * NOT persisted, on measurement: caching the sp projection
     * regressed triangles 4.5 s → 30+ s at sf0.1 — the InMemoryRelation
     * starves AQE's runtime re-planning of the self-join.
     */
@@ -784,7 +784,7 @@ object GraphQueries {
         // does not fix their order, and either order dedups. Unpersisted
         // right after the eager checkpoint — nothing leaks past the
         // round. (A driver-scalar variant with collect round-trips
-        // re-measured +0.8 s in r16; this form keeps the single-job
+        // re-measured +0.8 s; this form keeps the single-job
         // round shape.)
         val a0 = e.join(hub, Seq("p"))
           .groupBy("s").agg(sum("h").as("a")).persist()

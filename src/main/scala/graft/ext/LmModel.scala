@@ -2,7 +2,7 @@ package graft.ext
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The PERSISTED form of [[TextQueries.lmPerplexity]]'s language model —
@@ -31,8 +31,7 @@ import org.apache.spark.sql.functions._
   * the TRAINING corpus, independent of what it scores. Scoring reads it
   * through column-pruned scans: the unigram side broadcasts, the bigram
   * side joins on (w1, w2) — or broadcasts too once the production vocab
-  * cap bounds it (the [[TextQueries.qualityClassifierWeighted]] weight-
-  * table pattern).
+  * cap bounds it.
   */
 object LmModel {
 
@@ -78,15 +77,5 @@ object LmModel {
     val uni = spark.read.parquet(st.extraPath(root(dir), "uni"))
     val bi = spark.read.parquet(st.extraPath(root(dir), "bi"))
     TextQueries.lmScore(TextQueries.lmTokens(docs), uni, bi, keepCutoff)
-  }
-
-  /** The committed model's metadata (train language, vocabulary size). */
-  def meta(spark: SparkSession, dir: String): (String, Long) = {
-    val txt = Files.readString(Paths.get(state(dir).extraPath(root(dir), "meta")))
-    val lang = raw""""train_lang"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse(sys.error("LM meta has no train_lang"))
-    val v = raw""""vocab"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
-      .map(_.group(1).toLong).getOrElse(sys.error("LM meta has no vocab"))
-    (lang, v)
   }
 }

@@ -163,14 +163,6 @@ object Multimodal {
         } finally in.close()
       } catch { case _: Exception => None }
 
-  /** What the payload IS — the dispatch a mixed-modality table routes
-    * on: image readers, audio readers, then the byte-level fallback.
-    */
-  private[ext] def mediaKind(data: Array[Byte]): String =
-    if (looksLikeImage(data)) "image"
-    else if (looksLikeWav(data)) "audio"
-    else "other"
-
   /** Per-payload features: a real raster decode when the bytes are an
     * image, the PCM energy envelope when they are WAV audio, the byte
     * histogram otherwise — one 16-dim feature slot either way.
@@ -280,18 +272,11 @@ object Multimodal {
         least(w, lit(targetW)).as("width"), col("meta.height").as("height")))
   }
 
-  /** STUB frame sampling: every `stride`-th record per source partition —
-    * the video-frame-sample shape (keyed subsample, no shuffle).
-    */
-  def sampleFrames(media: DataFrame, stride: Int): DataFrame =
-    media.filter(pmod(col("doc_id"), lit(stride)) === 0)
-
   /** Registered query: byte-level features with an oracle (histogram
     * buckets 2/6/7 are expressible as regex char-class counts in DuckDB —
     * ASCII space is 0x20, lowercase letters span 0x60–0x7a).
     */
   def multimodalFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     extractFeatures(spark, mediaTable(spark, dir))
       .select(col("doc_id"), col("n_bytes"),
         round(element_at(col("features"), 3), 6).as("h2"),

@@ -47,7 +47,7 @@ object PhraseQueries {
       .localCheckpoint(true)
     val ex = docs.groupBy("source").agg(min("doc_id").as("a"))
     // Grams are keyed by their 60-bit md5 prefix ([[graft.functions
-    // .ShingleHashes]], the r15 native-hasher discipline): the joined
+    // .ShingleHashes]], the native-hasher discipline): the joined
     // window hashes natively inside codegen (the bigram HOF form paid
     // an interpreted lambda + concat per position), and the
     // per-(doc, gram) aggregates + the (source, gram) overlap join

@@ -26,9 +26,7 @@ import org.apache.spark.sql.functions._
   *
   * Maintenance is crash-safe via the shared segment-log commit
   * protocol: a batch's partials stage as an immutable `seg-<n>` dir and
-  * flip live in one atomic manifest rename; `compact` re-aggregates all
-  * live segments into one (the HLL union included — sketches are why
-  * compaction loses nothing).
+  * flip live in one atomic manifest rename.
   */
 object RollupIndex {
 
@@ -92,29 +90,6 @@ object RollupIndex {
       .agg(sum(col("n")).as("n"),
         sum(col("sum_value")).as("sum_value"),
         expr("hll_union_agg(users_sketch)").as("users_sketch"))
-
-  /** Re-aggregate all live segments into one — after many appends a
-    * cell's partials are scattered across every segment; compaction
-    * restores one row per cell (the sketch union makes this lossless).
-    */
-  def compact(spark: SparkSession, dir: String): Long = {
-    val r = root(dir)
-    val st = state(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    read(spark, dir).coalesce(1)
-      .write.mode("overwrite").parquet(s"$r/$seg")
-    SegmentLog.commit(r, SegmentLog.State(gen, Seq(seg), st.extras))
-    SegmentLog.cleanup(r)
-    spark.read.parquet(s"$r/$seg").count()
-  }
-
-  /** Build-or-append — the idempotent entry a streaming ingest calls
-    * per micro-batch (first batch creates the index).
-    */
-  def fold(events: DataFrame, dir: String): Long =
-    if (SegmentLog.read(root(dir)).isEmpty) build(events, dir)
-    else append(events, dir)
 
   /** Registered query: the rollup maintained INCREMENTALLY (build on
     * one batch, two appends) must hash-match the plain GROUP BY oracle

@@ -3,8 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** Persisted INVERTED INDEX — the lexical-retrieval analogue of
   * [[AnnIndex]]: the `bm25_search` postings pipeline (tokenize → per-doc
   * term frequencies + doc length) computed ONCE and written as a
@@ -30,12 +28,10 @@ import graft.Tables
   *    (one row per live segment) — the [[ClusterIndex]] extra-artifact
   *    pattern — so scoring never scans the postings to recover corpus
   *    statistics;
-  *  - NEW documents fold in as fresh segments through
-  *    [[graft.io.SegmentLog]] (one atomic manifest flip covers the
-  *    postings segment AND the stats rewrite). Postings of disjoint doc
-  *    batches are disjoint rows, so append == rebuild EXACTLY — document
-  *    frequency is a count over the unioned postings — and compaction is
-  *    a pure segment merge. All three are spec-pinned.
+  *  - the index commits through [[graft.io.SegmentLog]] (one atomic
+  *    manifest flip covers the postings segment AND the stats table),
+  *    and reads union every live segment: document frequency is a count
+  *    over the unioned postings.
   *
   * Scoring reuses the `bm25_search` expression tree verbatim (same
   * constants k1=1.2, b=0.75, same literal association, same round-6
@@ -108,49 +104,6 @@ object SearchIndex {
       Map("stats" -> stats)))
     SegmentLog.cleanup(r)
     n
-  }
-
-  /** Fold a batch of NEW documents in (doc_ids must be new — updating a
-    * document is a delete + re-add, like every append-only index here).
-    * Cost is proportional to the batch: one batch tokenize-and-write
-    * plus a rewrite of the tiny stats table; the corpus postings are
-    * never read.
-    */
-  def append(docs: DataFrame, dir: String): Long = {
-    val r = root(dir)
-    val st = state(dir)
-    val spark = docs.sparkSession
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    val n = writeSegment(docs, dir, seg)
-    val stats = writeStats(
-      spark.read.parquet(st.extraPath(r, "stats"))
-        .unionByName(statsRow(docs, seg)), dir, gen)
-    SegmentLog.commit(r, SegmentLog.State(gen, st.segments :+ seg,
-      st.extras + ("stats" -> stats)))
-    n
-  }
-
-  /** Merge all live segments into one (after many appends each bucket's
-    * postings are scattered across every segment); the stats rows
-    * collapse to one. Atomic swap, orphans swept post-commit.
-    */
-  def compact(spark: SparkSession, dir: String): Long = {
-    val r = root(dir)
-    val st = state(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    readIndex(spark, dir)
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$r/$seg")
-    val stats = writeStats(
-      spark.read.parquet(st.extraPath(r, "stats"))
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-        .select(lit(seg).as("seg"), col("n_docs"), col("sum_dl")),
-      dir, gen)
-    SegmentLog.commit(r, SegmentLog.State(gen, Seq(seg),
-      st.extras + ("stats" -> stats)))
-    SegmentLog.cleanup(r)
-    spark.read.parquet(s"$r/$seg").count()
   }
 
   private def readIndex(spark: SparkSession, dir: String): DataFrame =

@@ -132,7 +132,7 @@ object SimilarityQueries {
   /** `array<bigint>` of the `nprobe` nearest cells for a query vector,
     * ordered score DESC then cell ASC — the probe-list dual of
     * [[assignCellStruct]], same crossover. The literal path is the
-    * comparator sort AnnIndex.search used inline before r7.
+    * comparator sort AnnIndex.search once used inline.
     */
   private[graft] def topProbeCells(spark: SparkSession,
       cents: Seq[(Long, Seq[Double])], vcol: Column, nprobe: Int,
@@ -264,7 +264,7 @@ object SimilarityQueries {
     * production) and lives driver-side as a literal, exactly like the SRP
     * plane matrix: cell assignment is a per-row `aggregate()` argmin fold
     * over that literal — a pure projection with ZERO joins or exchanges
-    * over the corpus. (The r5 form crossJoined the corpus against a
+    * over the corpus. (An earlier form crossJoined the corpus against a
     * broadcast centroid DataFrame and took argmin via a row_number window,
     * which planned an Exchange of the 16×-inflated rows — correct, but
     * not the plan you'd run at 100 TB.) Strict `>` with centroids in
@@ -566,7 +566,7 @@ object SimilarityQueries {
     // the codebook is BOUNDED (m×k = 64 sub-vectors) and lives driver-side
     // as a literal indexed by subspace, like the IVF centroids: the encode
     // stage is then a per-(vector, subspace) argmin-L2 FOLD — a pure
-    // projection, where the r5 form joined a broadcast codebook DataFrame
+    // projection, where an earlier form joined a broadcast codebook DataFrame
     // and argmin'ed via a row_number window, planning an Exchange of the
     // k×-inflated corpus rows.
     val cbRows: Seq[(Long, Seq[Double])] = base.filter(col("vec_id") < k)

@@ -320,7 +320,7 @@ object TextQueries {
       .withColumn("n", size(col("words")))
       // max word frequency as the longest RUN in the sorted array —
       // O(n log n) per doc where the distinct×words double loop the
-      // oracle (and the r7 form) runs is O(d·n): same integer by
+      // oracle (and an earlier form) runs is O(d·n): same integer by
       // construction (a word's occurrences are exactly one run once
       // sorted), ~2× the stage at sf0.1 and growing with doc length
       .withColumn("top_word_n", expr(
@@ -813,8 +813,8 @@ object TextQueries {
     */
   /** The hashed-feature logit body shared by the whole classifier
     * family (quality_classifier, classifier_auc, lift_curve,
-    * confusion_matrix, classifier_calibration — it was copy-pasted five
-    * times before r15): per token, weight = md5-hash of the token's
+    * confusion_matrix, classifier_calibration — it was once copy-pasted
+    * five times): per token, weight = md5-hash of the token's
     * hash bucket mapped to integer millis in [-1000, 1000], summed
     * exactly as BIGINT in token order. Built with the NATIVE
     * [[graft.functions.Md5Prefix60]] (two digests per token, no
@@ -850,60 +850,6 @@ object TextQueries {
                        div greatest(2 * n_words * 1000, 1)) END / 1e6""").as("logit"),
         (col("logit_millis") > 0).as("keep"))
       .orderBy("doc_id")
-  }
-
-  /** The TRAINED-weights form of [[qualityClassifier]] — what a real
-    * pipeline runs: the weight table is a float array loaded from a
-    * model artifact, shipped to executors once, and inference is the
-    * same zero-shuffle projection (token → hash bucket → weight,
-    * document logit = mean). Weights enter the plan as an array literal
-    * — exact up to the ~64k-element crossover documented in
-    * [[SimilarityQueries]], past which a production table (fastText's
-    * default is 2M buckets) switches to a broadcast-variable expression
-    * like [[graft.functions.CentroidTopK]]. Sum order is the token
-    * order of the document (sequential `aggregate` fold), so the result
-    * is run- and partitioning-independent.
-    *
-    * QualityWeightsSpec pins: given the md5-derived weight table, this
-    * path reproduces the oracle-gated hashed query EXACTLY (the weights
-    * are integer millis, exact in doubles), and weights survive a
-    * file round-trip through [[loadWeights]].
-    */
-  def qualityClassifierWeighted(docs: DataFrame, weights: Array[Double]): DataFrame = {
-    val B = weights.length
-    require(B > 0, "empty weight table")
-    docs
-      .withColumn("wt", array(weights.toIndexedSeq.map(lit(_)): _*))
-      .withColumn("words", expr("filter(split(lower(text), ' +'), w -> w != '')"))
-      .withColumn("n_words", size(col("words")).cast("long"))
-      .withColumn("logit_sum", {
-        // native md5h60 per token (QualityWeightsSpec pins this path
-        // against the oracle-gated hashed query, which uses the same
-        // hash); get() is the 0-based subscript `wt[i]` was
-        import graft.functions.Md5Prefix60.md5h60
-        aggregate(
-          transform(col("words"), w =>
-            get(col("wt"), (md5h60(w) % B).cast("int"))),
-          lit(0d), (acc, x) => acc + x)
-      })
-      .select(col("doc_id"), col("n_words"), col("logit_sum"),
-        round(col("logit_sum") / col("n_words"), 6).as("logit"),
-        (col("logit_sum") > 0).as("keep"))
-  }
-
-  /** Load a weight table from a model artifact: one float per line,
-    * read through the Hadoop FileSystem API (object-store portable,
-    * same posture as [[DedupIndex.loadBloom]]). The table is driver-side
-    * metadata — B floats, KBs to MBs — never row data.
-    */
-  def loadWeights(spark: SparkSession, path: String): Array[Double] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    try
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(_.toDouble).toArray
-    finally in.close()
   }
 
   val qualityClassifierSql: String = {
@@ -1897,7 +1843,8 @@ object TextQueries {
     * adjacent-CHARACTER pair counts over word occurrences (lowercased,
     * whitespace-tokenized — the same token stream as
     * [[qualityClassifier]]), top-20 by count with a full tie order.
-    * This is the statistic every merge round of [[bpeTrain]] recomputes;
+    * This is the statistic every merge round of [[bpeTrainMerges]]
+    * recomputes;
     * registering it puts the hot loop's aggregation under the DuckDB
     * hash oracle while the iterative trainer is pinned by BpeSpec
     * against a reference implementation.
@@ -1933,25 +1880,12 @@ object TextQueries {
     * data). The greedy left-to-right within-word merge is a sequential
     * `aggregate` fold; per-round localCheckpoint keeps the iterated plan
     * a leaf exactly as the CC loop does. Ties break by pair string so
-    * runs/engines/partitionings agree. Returns the merge list in order.
-    */
-  def bpeTrain(docs: DataFrame, merges: Int): Seq[(String, String)] =
-    bpeTrainDetail(docs, merges).map { case (_, a, b, _) => (a, b) }
-
-  /** [[bpeTrain]] with the full per-round record `(round, a, b, cnt)` —
-    * the form the `bpe_train_merges` driver gate registers, so the
-    * winning pair AND its corpus count are hash-checked every round.
-    */
-  def bpeTrainDetail(docs: DataFrame, merges: Int): Seq[(Int, String, String, Long)] = {
-    val (detail, vocab) = bpeTrainState(docs, merges)
-    graft.SparkUtil.release(vocab)
-    detail
-  }
-
-  /** Trainer core returning the merge record AND the final vocabulary
-    * state `(n, syms)` as an (eagerly checkpointed, NOT released)
-    * DataFrame — the artifact [[bpeTokens]] counts tokens from. Callers
-    * who don't keep the state must release it. */
+    * runs/engines/partitionings agree.
+    *
+    * Returns the per-round merge record `(round, a, b, cnt)` AND the
+    * final vocabulary state `(n, syms)` as an (eagerly checkpointed, NOT
+    * released) DataFrame — the artifact [[bpeTokens]] counts tokens
+    * from. Callers who don't keep the state must release it. */
   private def bpeTrainState(docs: DataFrame,
       merges: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     var vocab = docs
@@ -1998,37 +1932,9 @@ object TextQueries {
     (out.toSeq, vocab)
   }
 
-  /** Apply a trained BPE merge list ([[bpeTrain]]'s output, in training
-    * order) to tokenize documents — a PURE PROJECTION: the merge table
-    * compiles into the plan as one greedy in-word fold per merge (k
-    * nested codegen'd HOFs, no shuffle, no vocabulary join), which is
-    * the shape a 100 TB tokenization pass wants. Emits the token array
-    * and count alongside the input columns. BpeSpec pins equality with
-    * the reference encoder and the lossless-ness invariant (concat of
-    * tokens == concat of characters).
-    */
-  def bpeEncode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    import org.apache.spark.sql.functions.{aggregate => aggFold, transform => hofTransform}
-    val base = docs
-      .withColumn("words", expr("filter(split(lower(text), ' +'), w -> w != '')"))
-      .withColumn("seqs", expr(
-        "transform(words, w -> transform(sequence(1, length(w)), i -> substring(w, i, 1)))"))
-    val encoded = merges.foldLeft(col("seqs")) { case (c, (a, b)) =>
-      hofTransform(c, s => aggFold(s, array().cast("array<string>"),
-        (acc, t) => when(
-          size(acc) > 0 && element_at(acc, -1) === lit(a) && t === lit(b),
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-          .otherwise(concat(acc, array(t)))))
-    }
-    base
-      .withColumn("tokens", flatten(encoded))
-      .withColumn("n_bpe_tokens", size(col("tokens")))
-      .drop("words", "seqs")
-  }
-
   /** Rounds for the DRIVER-GATED BPE queries — small enough that the
-    * oracle's k-stage CTE replay stays readable; BpeSpec pins deeper
-    * runs against the reference encoder. */
+    * oracle's k-stage CTE replay stays readable; BpeSpec pins the same
+    * trainer against a reference implementation. */
   private val BpeGateRounds = 8
 
   /** Per-(JVM, corpus dir) memo of the gate-round training result —
@@ -2059,7 +1965,7 @@ object TextQueries {
   private def gateMerges(spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
     gateTrained(spark, dir)._1
 
-  /** [[bpeTrainDetail]] under the hard correctness gate: the trained
+  /** [[bpeTrainState]] under the hard correctness gate: the trained
     * merge table `(round, a, b, cnt)`. The Spark side runs the
     * production trainer — per-round distributed pair aggregation + the
     * greedy in-word `aggregate` fold; the oracle replays training with
@@ -2087,12 +1993,12 @@ object TextQueries {
     * replays the whole training chain (double-replace greedy) and
     * counts ITS final state — a hash match pins every round's merge
     * application, not just the winning pairs. Two rejected forms, for
-    * the record: corpus-wide [[bpeEncode]] measured 24 s at sf0.1
-    * (k-nested interpreted folds over every word instance), and the
-    * word-TYPE-table encode still paid ~13 s/run of OPTIMIZER time on
-    * 31 rows — an 8-deep nested-lambda plan is quadratic to analyze
-    * regardless of data size. The per-document projection encoder
-    * stays BpeSpec-pinned against a reference implementation.
+    * the record: a corpus-wide per-document encode (one nested greedy
+    * fold per merge) measured 24 s at sf0.1 (k-nested interpreted folds
+    * over every word instance), and the word-TYPE-table encode still
+    * paid ~13 s/run of OPTIMIZER time on 31 rows — an 8-deep
+    * nested-lambda plan is quadratic to analyze regardless of data
+    * size.
     */
   def bpeTokens(spark: SparkSession, dir: String): DataFrame = {
     val vocab = gateTrained(spark, dir)._2
@@ -2561,8 +2467,7 @@ object TextQueries {
     * grouped counts); scoring is one corpus scan → per-doc distinct
     * bigram counts → ONE shuffle join against the bigram table (a
     * trained production LM is a bounded artifact — top-V vocabulary —
-    * so that join collapses to a broadcast, exactly the
-    * [[qualityClassifierWeighted]] weight-table pattern; the unigram
+    * so that join collapses to a broadcast of a bounded table; the unigram
     * side is V rows and broadcasts here already). No driver-side state.
     *
     * Cross-engine float contract: every probability is computed in

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Native word-n-gram hasher for the shingle tier: the value of

@@ -155,8 +155,8 @@ object JsonTableIO {
   /** Refuse a rotating op when a plain `data` dir exists next to a
     * generation pointer without being the recorded stale generation:
     * those rows can only be a stream that resumed after compact rotated
-    * its dir away, and a sweep would silently destroy them
-    * ([[finalizeManifest]] documents the recovery).
+    * its dir away, and a sweep would silently destroy them (the error
+    * says how to recover).
     */
   private def guardForeignData(outDir: String, tableName: String,
       m: Manifest): Unit =
@@ -256,38 +256,6 @@ object JsonTableIO {
       val r = spark.read
       schema.foreach { s => r.schema(s); r.option("mode", "FAILFAST") }
       r.json(live.toString)
-    }
-  }
-
-  /** Stamp the manifest for an artifact whose data dir was populated
-    * outside [[write]] — e.g. by the streaming sink
-    * ([[graft.streaming.StreamingOps.artifactStream]]). One count job over
-    * the committed files (the file-sink commit log has no row counts, so a
-    * scan is the only honest source); call at a quiescent point — after
-    * stopping the stream, or between triggers.
-    *
-    * Counts the LIVE dir (manifest-pointer-resolved): finalizing a
-    * compacted artifact counts its current generation instead of dying
-    * on the rotated-away `data` path. A plain `data` dir that is NOT
-    * the recorded stale generation next to a generation pointer means a
-    * stream resumed after a compact — the sink's commit log is gone and
-    * the two dirs hold disjoint rows, so this fails loudly instead of
-    * silently counting (and then sweeping) one of them. A compacted
-    * streaming artifact is CLOSED to further streaming; resume into a
-    * fresh artifact.
-    */
-  def finalizeManifest(spark: SparkSession, outDir: String,
-      tableName: String): Manifest = {
-    currentManifest(outDir, tableName)
-      .foreach(guardForeignData(outDir, tableName, _))
-    val live = dataPath(outDir, tableName)
-    commit(outDir, tableName, uncommitted = None) {
-      // a pinned throwaway schema skips JSON schema inference — otherwise
-      // the "one count job" would be TWO full scans (inference + count);
-      // in PERMISSIVE mode every line still counts as one record
-      Manifest(tableName, spark.read
-        .schema(new StructType().add("__count_only", StringType))
-        .json(live.toString).count(), live.getFileName.toString)
     }
   }
 

@@ -13,9 +13,8 @@ import graft.meta.TableMeta
   *  - extract side (`marshalRows`): ranges flatten to their literal
   *    string, inet stringifies, arrays decode element-wise, numeric
   *    decodes (the reference goes to lossy float64; we map to DECIMAL);
-  *  - load side (`valuesToPairs`): JSON-decoded doubles re-narrow to
-  *    smallint/integer arrays, RFC3339 strings re-parse to timestamps,
-  *    nested objects re-encode to jsonb.
+  *  - load side (`valuesToPairs`): RFC3339 strings re-parse to
+  *    timestamps; jsonb and range literals load as their raw text.
   *
   * Here both directions are `Column` expressions (codegen'd, executor
   * side, zero driver involvement) plus a `DataType` mapping used to give
@@ -50,11 +49,6 @@ object PgTypeCodecs {
     case t if t.startsWith("character varying") || t.startsWith("varchar") => StringType
     case _                                    => StringType
   }
-
-  /** Explicit artifact schema for a table's introspected columns. */
-  def schemaFor(meta: TableMeta): StructType =
-    StructType(meta.columns.map(c =>
-      StructField(c.name, sparkTypeFor(c.dataType), c.nullable)))
 
   /** How a pg-typed column is REPRESENTED inside the JSON artifact
     * (matching the reference's marshalled export, `util.go:29-187`):
@@ -98,48 +92,13 @@ object PgTypeCodecs {
       case _ => c
     }
 
-  val int4RangeType: StructType = StructType(Seq(
-    StructField("lower", IntegerType), StructField("upper", IntegerType)))
-
-  /** Postgres range literal (`"[3,7)"`, `"(2,9]"`, `"empty"`) → canonical
-    * half-open `{lower, upper}` struct, `[lower, upper)` like Postgres
-    * canonicalizes int4range itself. `empty`/unbounded sides → null
-    * fields. (The reference flattens the range to this literal string at
-    * extract, `util.go:132-139`; this is the decode it never implements.)
-    */
-  def int4RangeToStruct(c: Column): Column = {
-    val lowRaw = regexp_extract(c, raw"^([\[\(])(-?\d*),", 2)
-    val lowInc = regexp_extract(c, raw"^([\[\(])", 1) === "["
-    val upRaw = regexp_extract(c, raw",(-?\d*)([\]\)])$$", 1)
-    val upInc = regexp_extract(c, raw"([\]\)])$$", 1) === "]"
-    val lower = when(lowRaw === "", lit(null: Integer))
-      .otherwise(lowRaw.cast(IntegerType) + when(lowInc, 0).otherwise(1))
-    val upper = when(upRaw === "", lit(null: Integer))
-      .otherwise(upRaw.cast(IntegerType) + when(upInc, 1).otherwise(0))
-    when(c === "empty" || c.isNull, lit(null).cast(int4RangeType))
-      .otherwise(struct(lower.as("lower"), upper.as("upper")))
-  }
-
   /** Canonical struct back to the Postgres literal (`"[3,7)"`). */
   def structToInt4Range(c: Column): Column =
     when(c.isNull, lit("empty")).otherwise(
       concat(lit("["), coalesce(c.getField("lower").cast(StringType), lit("")),
         lit(","), coalesce(c.getField("upper").cast(StringType), lit("")), lit(")")))
 
-  /** jsonb document → map (the reference's `map[string]interface{}`
-    * shape, `util.go:36-42`); values stay raw JSON text so nested
-    * documents survive a round trip losslessly.
-    */
-  def jsonbToMap(c: Column): Column =
-    from_json(c, MapType(StringType, StringType))
-
   def mapToJsonb(c: Column): Column = to_json(c)
-
-  /** Load-side narrowing of JSON-decoded numbers (JSON has only double;
-    * the reference casts float64→int16/int32, `util.go:49-66`).
-    */
-  def toSmallintArray(c: Column): Column = transform(c, _.cast(ShortType))
-  def toIntegerArray(c: Column): Column = transform(c, _.cast(IntegerType))
 
   /** Load-side RFC3339 timestamp array parse (`util.go:77-90`). */
   def toTimestampArray(c: Column): Column =

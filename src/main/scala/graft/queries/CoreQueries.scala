@@ -603,9 +603,9 @@ object CoreQueries {
     * lands on the same delta. Same oracle as closure_delta. The bench
     * row ≈ closure_extract plus the baseline read + prune joins — the
     * full recurring production cost. EVERY execution re-reads the
-    * baseline key sets from the JSON artifact (the r16 per-JVM memo of
+    * baseline key sets from the JSON artifact (a per-JVM memo of
     * the parsed key sets made the bench min measure delta traversal
-    * only — bench-shape caching, removed per the r16 verdict); the
+    * only — bench-shape caching, since removed); the
     * read is kept cheap honestly instead: the 8 per-table
     * schema-given envelope scans are seed-bounded (5 customers'
     * closure) and their collects overlap on a small driver pool, so

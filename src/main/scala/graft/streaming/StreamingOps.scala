@@ -14,9 +14,9 @@ import org.apache.spark.sql.types._
   *
   * Scale: watermark + windowed aggregation is Spark's standard streaming
   * state layout — state keyed by (window, group key), dropped once the
-  * watermark passes the window end. Sessionization uses session_window's
-  * merging state. `dedupeWithinWatermark` bounds the dedup state to the
-  * watermark horizon.
+  * watermark passes the window end. Session windows use
+  * session_window's merging state, and the ingest dedup keeps its state
+  * in the persisted [[graft.ext.DedupIndex]], not in the state store.
   */
 object StreamingOps {
 
@@ -37,52 +37,6 @@ object StreamingOps {
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** Session windows per user (30-minute gap), 10-minute watermark. */
-  def sessionize(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"))
-
-  /** Exactly-once-ish dedup by event_id within the watermark horizon. */
-  def dedupeWithinWatermark(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Daily mergeable HLL user sketches — the STREAMING half of
-    * [[graft.ext.EventQueries.eventsSketchWeekly]]'s two-level rollup.
-    * The stream maintains one bounded sketch binary per (day, event_type)
-    * cell; any coarser window (week, month, ad-hoc range) is then a cheap
-    * BATCH `hll_union_agg` over the stored sketches, never re-touching
-    * the raw stream. Streaming can't stack two aggregations, and at
-    * 100 TB you wouldn't want it to: persisting the daily level is what
-    * makes every later rollup a merge instead of a re-shuffle of event
-    * history. Same lgConfigK (14) as the batch form, and HLL state is
-    * item-order-independent, so stream-built sketches estimate exactly
-    * like batch-built ones (StreamingSpec pins streamed-daily →
-    * batch-merged-weekly == eventsSketchWeekly).
-    */
-  def dailyUserSketches(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-      .agg(hll_sketch_agg(col("user_id"), lit(14)).as("sk"))
-      .select(col("w.start").as("day"), col("event_type"), col("sk"))
-
-  /** The quantile sibling of [[dailyUserSketches]]: one bounded GK value
-    * sketch per (day, event_type) maintained across micro-batches via
-    * [[graft.functions.QuantileSketch.quantile_sketch_agg]]; weekly (or
-    * any coarser) percentiles are then a batch `quantile_sketch_merge`
-    * over the stored dailies — StreamingSpec pins the streamed-then-
-    * merged path against the all-batch `events_quantile_weekly` values.
-    */
-  def dailyValueSketches(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-      .agg(graft.functions.QuantileSketch
-        .quantile_sketch_agg(col("value"), 0.01).as("sk"))
-      .select(col("w.start").as("day"), col("event_type"), col("sk"))
-
   /** Stream-stream interval self-join (SURVEY.md §2.11): purchases joined
     * to the same user's clicks in the preceding hour — the streaming dual
     * of the batch `range_join` oracle query. Both sides carry watermarks
@@ -90,13 +44,7 @@ object StreamingOps {
     * buffered join state: clicks older than (watermark − 1 hour) are
     * dropped from state.
     */
-  def clickAttribution(events: DataFrame): DataFrame =
-    clickAttributionJoin(events, "inner")
-
-  /** One definition of the attribution interval + watermarks for both
-    * join types — the outer form is documented as the inner's dual, and
-    * a shared body is what keeps them from diverging. */
-  private def clickAttributionJoin(events: DataFrame, joinType: String): DataFrame = {
+  def clickAttribution(events: DataFrame): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("cts"),
         col("value").as("click_value"))
@@ -107,271 +55,21 @@ object StreamingOps {
       .withWatermark("pts", "10 minutes")
     purchases.join(clicks, expr(
       "c_user = user_id AND cts <= pts AND cts > pts - INTERVAL 1 HOUR"),
-      joinType)
+      "inner")
       .select(col("purchase_id"), col("user_id"), col("pts"), col("cts"),
         col("click_value"))
   }
 
-  /** Stream-stream LEFT OUTER interval join — the harder eviction case:
-    * an unmatched purchase can only be emitted as (purchase, null click)
-    * once the watermark PROVES no matching click can still arrive, i.e.
-    * after click-watermark passes `pts` (the interval's upper bound for
-    * that row). Until then the row sits in state; with the two-sided
-    * interval plus both watermarks the buffered state stays bounded
-    * exactly as in the inner form. Zero-click purchases surviving with
-    * null click columns is what the batch `range_join` LEFT JOIN oracle
-    * checks — this is its streaming dual.
-    */
-  def clickAttributionOuter(events: DataFrame): DataFrame =
-    clickAttributionJoin(events, "left_outer")
-
-  /** Stream-static dimension join (§2.11): enrich the event stream with
-    * the customer dimension. The static side is re-planned per
-    * micro-batch (picking up dimension updates) and broadcast when small
-    * — no streaming state at all, unlike stream-stream joins.
-    */
-  def enrichWithCustomers(events: DataFrame, customers: DataFrame): DataFrame =
-    events.join(
-      customers.select(col("c_custkey"), col("c_mktsegment")),
-      events("user_id") === col("c_custkey"), "left")
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"), col("c_mktsegment"))
-
-  final case class SessionAcc(start: java.sql.Timestamp,
-      end: java.sql.Timestamp, n: Long)
-  final case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
-      session_end: java.sql.Timestamp, n_events: Long)
-
-  /** Custom sessionization via flatMapGroupsWithState (0..n emitted rows
-    * per group per batch — the shape mapGroupsWithState can't express):
-    * a session closes and is EMITTED either when a same-batch event
-    * arrives past the gap, or when the event-time timeout fires after the
-    * watermark passes `end + gap`. This is what `session_window` compiles
-    * to under the hood; the explicit form is the extension point for
-    * non-standard session semantics (caps, value-dependent gaps, ...).
-    */
-  def completedSessions(events: DataFrame, gapMinutes: Int = 30):
-      org.apache.spark.sql.Dataset[SessionOut] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapMs = gapMinutes * 60000L
-    events.withWatermark("ts", "10 minutes")
-      .selectExpr("user_id", "ts")
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[SessionAcc]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(user, s.start, s.end, s.n))
-          } else {
-            val sorted = rows.map(_._2).toVector.sortBy(_.getTime)
-            var emitted = Vector.empty[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { t =>
-              cur match {
-                case Some(s) if t.getTime - s.end.getTime <= gapMs =>
-                  cur = Some(s.copy(end = t, n = s.n + 1))
-                case Some(s) =>
-                  emitted :+= SessionOut(user, s.start, s.end, s.n)
-                  cur = Some(SessionAcc(t, t, 1L))
-                case None =>
-                  cur = Some(SessionAcc(t, t, 1L))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.end.getTime + gapMs)
-            }
-            emitted.iterator
-          }
-      }
-  }
-
-  final case class Scd2Open(event_type: String,
-      valid_from: java.sql.Timestamp, n_events: Long)
-  final case class Scd2Closed(user_id: Long, event_type: String,
-      valid_from: java.sql.Timestamp, valid_to: java.sql.Timestamp,
-      n_events: Long)
-
-  /** Streaming SCD2 — the online form of
-    * [[graft.ext.EventQueries.scd2State]] for a CDC-shaped stream: per
-    * user, state holds the OPEN interval (current event_type, its
-    * valid_from, run length); a state-changing event closes it — the
-    * closed row is emitted with `valid_to` = the new state's start —
-    * and opens the next. Same-state events just extend the run. The
-    * open interval stays in state (it has no `valid_to` yet); the batch
-    * form's NULL-open current rows are exactly the un-emitted state.
-    *
-    * Ordering contract: events are sorted by (ts, event_id) WITHIN a
-    * batch, and batches are assumed in order per key — the same
-    * in-order assumption as [[completedSessions]]; a production CDC
-    * source provides it per key by construction (log offset order).
-    * StreamingSpec pins streamed-closed == the batch form's non-NULL
-    * rows across multi-batch delivery. State per key is O(1).
-    */
-  def scd2Stream(events: DataFrame): org.apache.spark.sql.Dataset[Scd2Closed] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.selectExpr("user_id", "ts", "event_id", "event_type")
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String)],
-         state: GroupState[Scd2Open]) =>
-          val sorted = rows.toVector.sortBy(e => (e._2.getTime, e._3))
-          var cur = state.getOption
-          var closed = Vector.empty[Scd2Closed]
-          sorted.foreach { case (_, ts, _, et) =>
-            cur match {
-              case Some(s) if s.event_type == et =>
-                cur = Some(s.copy(n_events = s.n_events + 1))
-              case Some(s) =>
-                closed :+= Scd2Closed(user, s.event_type, s.valid_from, ts, s.n_events)
-                cur = Some(Scd2Open(et, ts, 1L))
-              case None =>
-                cur = Some(Scd2Open(et, ts, 1L))
-            }
-          }
-          cur.foreach(state.update)
-          closed.iterator
-      }
-  }
-
-  final case class UserActivity(user_id: Long, n_events: Long,
-      total_value: Double, last_ts: java.sql.Timestamp)
-
-  /** Custom keyed state via mapGroupsWithState (SURVEY.md §2.11): a
-    * running per-user activity profile that survives across micro-batches
-    * — the KeyValueGroupedDataset state tier for semantics windows can't
-    * express. State per key is O(1); at 100 TB keys shard across the
-    * cluster's state stores.
-    */
-  def userActivity(events: DataFrame): org.apache.spark.sql.Dataset[UserActivity] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.selectExpr("user_id", "ts", "value")
-      .as[(Long, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Double)],
-         state: GroupState[UserActivity]) =>
-          val prev = state.getOption.getOrElse(UserActivity(user, 0L, 0.0, null))
-          val batch = rows.toSeq
-          val next = UserActivity(
-            user,
-            prev.n_events + batch.size,
-            prev.total_value + batch.map(_._3).sum,
-            batch.map(_._2).maxByOption(_.getTime)
-              .orElse(Option(prev.last_ts)).orNull)
-          state.update(next)
-          next
-      }
-  }
-
-  final case class VecKeep(vec_id: Long, cell: Long, keep: Boolean)
-
-  /** Streaming semantic dedup — the online form of
-    * [[graft.ext.DedupQueries.semDedup]] for a live embedding-ingest
-    * pipeline: cell assignment is the SAME stateless centroid-fold
-    * projection (no shuffle), then state per cell holds every vector
-    * seen so far and an arriving vector is dropped when it is within
-    * `eps` of ANY earlier one in its cell — the batch drop rule with
-    * arrival order (vec_id within a batch) standing in for the batch
-    * form's centroid-similarity rank. Cross-batch: a vector arriving
-    * in batch N is deduped against batches 1..N-1's state, which is
-    * exactly the [[graft.ext.DedupQueries.dedupIncremental]] contract
-    * at the embedding tier.
-    *
-    * Scale: state is keyed by cell and sharded across the cluster's
-    * state stores; per-cell state is bounded the way the batch
-    * operator's cells are (nlist grows with the corpus). Production
-    * would cap per-cell state (drop-oldest or sketch) the same way
-    * minhash caps buckets.
-    */
-  def semDedupStream(vecs: DataFrame, centroids: Seq[(Long, Seq[Double])],
-      eps: Double): org.apache.spark.sql.Dataset[VecKeep] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    // norms are stored WITH the state vectors (computed once on insert,
-    // not per comparison), and rounding is BigDecimal HALF_UP at 6dp —
-    // the same mode Spark's round() applies in the batch operator
-    def norm(a: Seq[Double]): Double = {
-      var n = 0.0; var i = 0
-      while (i < a.length) { n += a(i) * a(i); i += 1 }
-      math.sqrt(n)
-    }
-    def cos(a: Seq[Double], na: Double, b: Seq[Double], nb: Double): Double = {
-      val d = na * nb
-      if (d == 0.0) return -2.0
-      var dot = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); i += 1 }
-      java.math.BigDecimal.valueOf(dot / d)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    }
-    val centArr = typedLit(centroids.sortBy(_._1))
-    vecs
-      .withColumn("cell",
-        graft.ext.SimilarityQueries.bestCellStruct(centArr, col("v")).getField("cell"))
-      .select(col("vec_id").cast("long"), col("cell"), col("v"))
-      .as[(Long, Long, Seq[Double])]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (cell: Long, rows: Iterator[(Long, Long, Seq[Double])],
-         state: GroupState[Seq[(Seq[Double], Double)]]) =>
-          var seen = state.getOption.getOrElse(Vector.empty[(Seq[Double], Double)])
-            .toVector
-          // vec_id order within the batch = deterministic arrival rank
-          val out = rows.toVector.sortBy(_._1).map { case (id, _, v) =>
-            val nv = norm(v)
-            val dup = seen.exists { case (s, ns) => cos(s, ns, v, nv) >= eps }
-            seen :+= ((v, nv)) // near-ANY-earlier (kept or not), the batch rule
-            VecKeep(id, cell, keep = !dup)
-          }
-          state.update(seen)
-          out.iterator
-      }
-  }
-
-  /** Stream → JDBC upsert sink: every micro-batch runs through
-    * [[graft.io.UpsertJdbcSink]] inside `foreachBatch` — the streaming
-    * form of the reference's load verb. The conflict-skip insert makes
-    * redelivered rows idempotent, which upgrades Structured Streaming's
-    * at-least-once `foreachBatch` delivery to effectively-once in the
-    * target table (the same reason the reference's ON CONFLICT DO NOTHING
-    * load is safely re-runnable). Returns the started query; the caller
-    * owns its lifecycle.
-    */
-  def upsertStream(
-      events: DataFrame, url: String, props: java.util.Properties,
-      table: String, pk: String,
-      dialect: graft.io.UpsertDialect,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.io.UpsertJdbcSink.write(batch, url, props, table, pk, dialect = dialect)
-      }
-      .start()
-
   /** Streaming ingest dedup against the PERSISTED index — the
-    * end-to-end production shape that ties the r6/r7 pieces together:
-    * per micro-batch, (1) [[graft.ext.DedupIndex.dedupe]] runs the full
-    * exact+near dedup of the batch against the index (the same
-    * algorithm as the oracle-gated `dedup_incremental`), (2) survivors
-    * append to `outDir` as parquet, (3) the WHOLE batch folds into the
-    * index (near-ANY-earlier: dropped docs still block future
-    * near-dups), (4) the batch's fingerprints FOLD into the Bloom
-    * pre-gate artifact (capacity-compatible merge, O(batch) — never an
-    * O(index) rebuild per micro-batch) so the next batch's
-    * [[graft.ext.DedupIndex.prefilter]] sees them. Batches
-    * are processed serially by Structured Streaming, so index
+    * end-to-end production shape: per micro-batch,
+    * [[graft.ext.DedupIndex.ingest]] (1) runs the full exact+near dedup
+    * of the batch against the index (the same algorithm as the
+    * oracle-gated `dedup_incremental`), (2) folds the WHOLE batch into
+    * the index (near-ANY-earlier: dropped docs still block future
+    * near-dups) and (3) folds the batch's fingerprints into the Bloom
+    * artifact (capacity-compatible merge, O(batch) — never an O(index)
+    * rebuild per micro-batch); survivors append to `outDir` as
+    * parquet. Batches are processed serially by Structured Streaming, so index
     * append/rebuild is race-free; the corpus text is never rescanned —
     * recurring cost is the batch pipeline plus two index shuffles
     * (the DedupIndex contract). Returns the started query.
@@ -387,10 +85,9 @@ object StreamingOps {
           // bucket crossing the ≤64 cap just resurrected (see
           // DedupIndex.ingest) — the accumulated sink equals the
           // one-shot answer in every cap regime. maintainBloom folds the
-          // batch's fingerprints into the Bloom pre-gate inside the same
+          // batch's fingerprints into the Bloom artifact inside the same
           // call (O(batch) OR-merge off the batch frame ingest already
-          // checkpointed — never an O(index) rebuild per micro-batch)
-          // so the next batch's prefilter sees them.
+          // checkpointed — never an O(index) rebuild per micro-batch).
           graft.ext.DedupIndex.ingest(spark, batch, indexDir,
             maintainBloom = true).write.mode("append").parquet(outDir)
         }
@@ -398,22 +95,6 @@ object StreamingOps {
       }
       .start()
 
-  /** [[dedupIngestStream]] UNDER THE DRIVER GATE: replay the corpus's
-    * "new" docs (`doc_id % 5 >= 3`, the oracle-gated `dedup_incremental`
-    * split) through the real streaming pipeline — a genuine file-source
-    * `readStream`, one parquet file per micro-batch — against an index
-    * built on the "old" docs, then return the COMMITTED survivor
-    * artifact. The DuckDB oracle is `dedup_incremental`'s: a green row
-    * proves the streamed, per-batch, index-backed path lands on exactly
-    * the one-shot batch answer (the StreamingSpec streamed==batch pin,
-    * promoted from spec-only to the hard correctness signal).
-    *
-    * Batch order is data-defined, not scheduler-defined: the greedy
-    * first-wins rule needs doc_id-ordered batches, so the two batch
-    * files get explicit ascending modification times and the source
-    * reads `maxFilesPerTrigger=1` (FileStreamSource orders by mtime).
-    * All row data stays distributed — the driver only moves file paths.
-    */
   /** Stage a DataFrame as ONE parquet file with a pinned mtime under
     * `inDir` — FileStreamSource orders files by modification time, so
     * replay callers get a deterministic micro-batch order with
@@ -522,6 +203,22 @@ object StreamingOps {
     f(s)
   }
 
+  /** [[dedupIngestStream]] UNDER THE ORACLE GATE: replay the corpus's
+    * "new" docs (`doc_id % 5 >= 3`, the oracle-gated `dedup_incremental`
+    * split) through the real streaming pipeline — a genuine file-source
+    * `readStream`, one parquet file per micro-batch — against an index
+    * built on the "old" docs, then return the COMMITTED survivor
+    * artifact. The DuckDB oracle is `dedup_incremental`'s: a green row
+    * proves the streamed, per-batch, index-backed path lands on exactly
+    * the one-shot batch answer (the StreamingSpec streamed==batch pin,
+    * promoted from spec-only to the hard correctness signal).
+    *
+    * Batch order is data-defined, not scheduler-defined: the greedy
+    * first-wins rule needs doc_id-ordered batches, so the two batch
+    * files get explicit ascending modification times and the source
+    * reads `maxFilesPerTrigger=1` (FileStreamSource orders by mtime).
+    * All row data stays distributed — only file paths are collected.
+    */
   def streamDedupReplay(spark: SparkSession, dir: String): DataFrame = {
     // one-time staging: the two id-ranged batch files (same split as
     // DedupIndexSpec, mtimes 1s apart to pin the file source's batch
@@ -561,27 +258,6 @@ object StreamingOps {
       finally graft.io.SegmentLog.deleteRecursively(tmp.toString)
     }
   }
-
-  /** Streaming MAINTENANCE of the materialized rollup
-    * ([[graft.ext.RollupIndex]]): each micro-batch folds in as one
-    * partial-aggregate segment — the cost is the batch's own
-    * aggregation, never a history re-scan, and foreachBatch's serial
-    * execution satisfies the segment log's single-writer contract.
-    * At-least-once delivery caveat: a batch REPLAYED after a crash
-    * between the segment commit and the checkpoint write would fold
-    * twice; production pairs this with the batch-id-named segment
-    * guard (commit records the epoch, replays of a committed epoch
-    * skip) — here StreamingSpec pins the clean-run streamed == batch
-    * equality, the same contract the dedup ingest pipeline documents.
-    */
-  def rollupIngestStream(events: DataFrame, indexDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) { graft.ext.RollupIndex.fold(batch, indexDir); () }
-      }
-      .start()
 
   /** The SECOND driver-gated streaming path (next to
     * [[streamDedupReplay]]): the registered `stream_events_tumbling`
@@ -675,9 +351,8 @@ object StreamingOps {
     * flush), the memory sink holds matched pairs, and the registered
     * result is the per-purchase batch rollup of those pairs — hash-
     * checked against an inner-join DuckDB replay of the same interval
-    * semantics. Zero-click purchases are the LEFT-OUTER form's concern
-    * ([[clickAttributionOuter]], StreamingSpec); the inner gate pins
-    * the matched set.
+    * semantics; zero-click purchases are outside the matched set the
+    * gate pins.
     */
   def streamAttributionReplay(spark: SparkSession, dir: String): DataFrame = {
     val inDir = stagedEventsInput(spark, dir)
@@ -700,22 +375,4 @@ object StreamingOps {
       finally graft.io.SegmentLog.deleteRecursively(tmp.toString)
     }
   }
-
-  /** Stream → JSON table artifact: the streaming form of the export sink
-    * ([[graft.io.JsonTableIO.write]]), via Spark's native file sink —
-    * its `_spark_metadata` commit log gives EXACTLY-once file visibility
-    * across restarts (a replayed batch re-commits the same file set), so
-    * no foreachBatch bookkeeping is needed for the data itself. The
-    * manifest cannot ride along per-batch without double-counting on
-    * recovery; [[graft.io.JsonTableIO.finalizeManifest]] stamps it once
-    * the stream is stopped (or at any quiescent point). Readers of a
-    * live, un-finalized artifact see committed part files only.
-    */
-  def artifactStream(rows: DataFrame, outDir: String, table: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .format("json")
-      .option("path", s"$outDir/$table/data")
-      .option("checkpointLocation", checkpointDir)
-      .start()
 }

@@ -52,16 +52,17 @@ class BloomDedupSpec extends SparkSpec {
       // batch: one exact dup of doc 1, one fresh doc
       val batch = Seq((10L, "alpha beta gamma delta"), (11L, "iota kappa lambda mu"))
         .toDF("doc_id", "text")
-      val flags = DedupIndex.prefilter(spark, batch, dir)
-        .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-      assert(flags(10L), "exact dup must flag (no false negatives)")
+      def fpOf(text: String): String = Seq(text).toDF("text")
+        .select(DedupQueries.contentFp(col("text"))).head().getString(0)
+      val (_, _, bf) = DedupIndex.loadBloomMeta(spark, dir)
+      assert(bf.mightContain(fpOf("alpha beta gamma delta")),
+        "exact dup must flag (no false negatives)")
       // append the batch, rebuild the sketch: the formerly-fresh doc now flags
       DedupIndex.append(batch, dir)
       assert(DedupIndex.writeBloom(spark, dir) == 4L)
-      val flags2 = DedupIndex.prefilter(spark,
-          Seq((20L, "iota kappa lambda mu")).toDF("doc_id", "text"), dir)
-        .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-      assert(flags2(20L), "appended doc's fp must flag after rebuild")
+      val (_, _, bf2) = DedupIndex.loadBloomMeta(spark, dir)
+      assert(bf2.mightContain(fpOf("iota kappa lambda mu")),
+        "appended doc's fp must flag after rebuild")
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
@@ -82,8 +83,7 @@ class BloomDedupSpec extends SparkSpec {
       // fold one batch (2 docs): fits capacity → O(batch) merge
       val b1 = Seq((10L, "iota kappa lambda mu"), (11L, "nu xi omicron pi"))
         .toDF("doc_id", "text")
-      DedupIndex.append(b1, dir)
-      assert(DedupIndex.growBloomLatest(spark, dir) == 4L)
+      DedupIndex.ingest(spark, b1, dir, maintainBloom = true)
       val (cap1, n1, bf1) = DedupIndex.loadBloomMeta(spark, dir)
       assert(cap1 == 4L && n1 == 4L)
       // merged sketch sees BOTH old and folded fingerprints (no false
@@ -94,8 +94,7 @@ class BloomDedupSpec extends SparkSpec {
       // next fold overflows the 4-capacity → transparent rebuild at the
       // auto capacity, still covering everything
       val b2 = Seq((20L, "rho sigma tau upsilon")).toDF("doc_id", "text")
-      DedupIndex.append(b2, dir)
-      assert(DedupIndex.growBloomLatest(spark, dir) == 5L)
+      DedupIndex.ingest(spark, b2, dir, maintainBloom = true)
       val (cap2, n2, bf2) = DedupIndex.loadBloomMeta(spark, dir)
       assert(cap2 >= 4096L && n2 == 5L, s"cap=$cap2 n=$n2")
       val fps2 = DedupIndex.rows(spark, dir).select("fp").collect()
@@ -118,7 +117,7 @@ class BloomDedupSpec extends SparkSpec {
       // fold-BEFORE-append call order: the batch is not a segment yet and
       // the fold overflows the 4-capacity. The rebuild must still carry
       // the batch's fingerprints — a committed-rows-only rebuild would
-      // reintroduce false negatives and break prefilter's contract.
+      // reintroduce false negatives and break the sketch's contract.
       val batch = Seq((10L, "iota kappa lambda mu"), (11L, "nu xi omicron pi"),
         (12L, "rho sigma tau upsilon")).toDF("doc_id", "text")
       val batchFps = DedupQueries.fpSig(batch).select("fp").collect()
@@ -167,14 +166,6 @@ class BloomDedupSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("writeBloom"),
         s"message must name the fix, got: ${e.getMessage}")
-      // maintenance/read paths RECOVER instead of hard-failing: the index
-      // rows are authoritative, so prefilter rebuilds the sketch in place…
-      val flags = DedupIndex.prefilter(spark,
-          Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"), dir)
-        .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-      assert(flags(1L), "rebuilt sketch must flag the indexed doc")
-      val (_, nRec, _) = DedupIndex.loadBloomMeta(spark, dir)
-      assert(nRec == 1L, "recovery must commit a current-format artifact")
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()

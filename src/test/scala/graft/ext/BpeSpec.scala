@@ -3,10 +3,10 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** The distributed BPE trainer must produce exactly the merge sequence
-  * of the classic sequential algorithm (Sennrich et al.): same pair
-  * counts over the word-frequency table, same tie order, same greedy
-  * left-to-right within-word merge.
+/** The distributed BPE trainer that the `bpe_train_merges` gate runs
+  * must produce exactly the merge sequence of the classic sequential
+  * algorithm (Sennrich et al.): same pair counts over the word-frequency
+  * table, same tie order, same greedy left-to-right within-word merge.
   */
 class BpeSpec extends SparkSpec {
 
@@ -41,18 +41,31 @@ class BpeSpec extends SparkSpec {
     out.toSeq
   }
 
+  /** The merge pairs the `bpe_train_merges` gate trains on `docs`
+    * (its fixed 8 rounds), written as a documents table under a fresh
+    * dir so the gate's per-dir memo trains on exactly these rows. */
+  private def gateMerges(docs: org.apache.spark.sql.DataFrame): Seq[(String, String)] = {
+    val dir = java.nio.file.Files.createTempDirectory("bpe-gate-").toString
+    try {
+      docs.write.parquet(s"$dir/documents.parquet")
+      TextQueries.bpeTrainMerges(spark, dir).collect()
+        .map(r => (r.getString(1), r.getString(2))).toSeq
+    } finally graft.io.SegmentLog.deleteRecursively(dir)
+  }
+
+  private def wordCounts(docs: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    docs.select(explode(expr("filter(split(lower(text), ' +'), w -> w != '')")).as("w"))
+      .groupBy("w").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
   test("distributed trainer == reference on a crafted corpus") {
     import spark.implicits._
     val docs = Seq(
       "low lower lowest low low",
       "new newer newest new",
       "wider wide wide low").toDF("text")
-    val wordCounts = docs
-      .select(explode(split(lower(col("text")), " ")).as("w"))
-      .groupBy("w").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val want = referenceBpe(wordCounts, 8)
-    val got = TextQueries.bpeTrain(docs, 8)
+    val want = referenceBpe(wordCounts(docs), 8)
+    val got = gateMerges(docs)
     assert(got == want, s"got $got\nwant $want")
     assert(got.size == 8)
   }
@@ -60,62 +73,14 @@ class BpeSpec extends SparkSpec {
   test("distributed trainer == reference on real testdata") {
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select("text")
-    val wordCounts = docs
-      .select(explode(expr("filter(split(lower(text), ' +'), w -> w != '')")).as("w"))
-      .groupBy("w").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val want = referenceBpe(wordCounts, 5)
-    val got = TextQueries.bpeTrain(docs, 5)
+    val want = referenceBpe(wordCounts(docs), 8)
+    val got = gateMerges(docs)
     assert(got == want, s"got $got\nwant $want")
-  }
-
-  /** Reference encoder: same greedy per-merge fold, sequential. */
-  private def referenceEncode(word: String, merges: Seq[(String, String)]): List[String] =
-    merges.foldLeft(word.map(_.toString).toList) { case (syms, (a, b)) =>
-      val acc = scala.collection.mutable.ListBuffer.empty[String]
-      for (s <- syms) {
-        if (acc.nonEmpty && acc.last == a && s == b) acc(acc.size - 1) = a + b
-        else acc += s
-      }
-      acc.toList
-    }
-
-  test("bpeEncode applies trained merges exactly; tokens are lossless") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "low lower lowest low low"),
-      (2L, "new newer newest new wider wide")).toDF("doc_id", "text")
-    val merges = TextQueries.bpeTrain(docs, 6)
-    assert(merges.nonEmpty)
-    val enc = TextQueries.bpeEncode(docs, merges)
-      .orderBy("doc_id").collect()
-    enc.foreach { r =>
-      val text = r.getString(r.fieldIndex("text"))
-      val tokens = r.getSeq[String](r.fieldIndex("tokens"))
-      val want = text.toLowerCase.split(" +").filter(_.nonEmpty)
-        .flatMap(w => referenceEncode(w, merges)).toSeq
-      assert(tokens == want, s"doc ${r.getLong(0)}: $tokens vs $want")
-      // lossless: token concat reconstructs the character stream
-      assert(tokens.mkString == text.toLowerCase.split(" +").filter(_.nonEmpty).mkString)
-      assert(r.getInt(r.fieldIndex("n_bpe_tokens")) == tokens.size)
-    }
-    // merges actually compress: fewer tokens than characters
-    val n = enc.map(_.getInt(enc.head.fieldIndex("n_bpe_tokens"))).sum
-    val chars = enc.map(r => r.getString(r.fieldIndex("text")).count(_ != ' ')).sum
-    assert(n < chars)
-  }
-
-  test("encode is a zero-shuffle projection") {
-    import spark.implicits._
-    val docs = Seq((1L, "low lower lowest")).toDF("doc_id", "text")
-    val plan = TextQueries.bpeEncode(docs, Seq(("l", "o"), ("lo", "w")))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"expected no shuffle:\n$plan")
   }
 
   test("merge exhaustion stops early instead of looping") {
     import spark.implicits._
     val docs = Seq("a b c").toDF("text") // single-char words: no pairs
-    assert(TextQueries.bpeTrain(docs, 4) == Seq.empty)
+    assert(gateMerges(docs) == Seq.empty)
   }
 }

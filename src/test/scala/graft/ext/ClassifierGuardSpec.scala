@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Degenerate-input guard for the classifier family: a zero-word

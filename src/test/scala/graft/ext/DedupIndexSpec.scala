@@ -22,8 +22,8 @@ class DedupIndexSpec extends SparkSpec {
     val nOld = DedupIndex.build(docs.filter(col("doc_id") % 5 < 3), idxDir)
     assert(nOld > 0)
     val survivors = DedupIndex
-      .dedupe(spark, docs.filter(col("doc_id") % 5 >= 3), idxDir)
-      .collect().map(_.getLong(0)).toSeq
+      .ingest(spark, docs.filter(col("doc_id") % 5 >= 3), idxDir)
+      .collect().map(_.getLong(0)).toSeq.sorted
     val oracle = DedupQueries.dedupIncremental(spark, dir)
       .collect().map(_.getLong(0)).toSeq
     assert(survivors == oracle)
@@ -41,20 +41,18 @@ class DedupIndexSpec extends SparkSpec {
 
     val idxDir = Files.createTempDirectory("dedup-idx2").toString
     DedupIndex.build(docs.filter(col("doc_id") % 5 < 3), idxDir)
-    val s1 = DedupIndex.dedupe(spark, b1, idxDir)
-      .collect().map(_.getLong(0)).toSeq
-    // the WHOLE batch goes in (dropped docs still block later ones)
-    DedupIndex.append(b1, idxDir)
-    val s2 = DedupIndex.dedupe(spark, b2, idxDir)
-      .collect().map(_.getLong(0)).toSeq
+    // ingest folds the WHOLE batch in (dropped docs still block later ones)
+    val s1 = DedupIndex.ingest(spark, b1, idxDir)
+      .collect().map(_.getLong(0)).toSeq.sorted
+    val s2 = DedupIndex.ingest(spark, b2, idxDir)
+      .collect().map(_.getLong(0)).toSeq.sorted
 
     val oneShot = DedupQueries.dedupIncremental(spark, dir)
       .collect().map(_.getLong(0)).toSeq
     assert((s1 ++ s2) == oneShot)
 
-    // compaction folds the three segments into one; dedupe against the
-    // compacted index and the bloom extra both behave identically
-    DedupIndex.append(b2, idxDir)
+    // compaction folds the three segments into one; the index rows and
+    // the bloom extra both survive it
     DedupIndex.writeBloom(spark, idxDir)
     val rowsBefore = DedupIndex.rows(spark, idxDir)
       .collect().map(_.toSeq).toSet
@@ -64,7 +62,7 @@ class DedupIndexSpec extends SparkSpec {
     assert(DedupIndex.rows(spark, idxDir).collect().map(_.toSeq).toSet == rowsBefore)
     // the bloom pointer still resolves and keeps its no-false-negative
     // contract over the (unchanged) fingerprint set
-    val bf = DedupIndex.loadBloom(spark, idxDir)
+    val (_, _, bf) = DedupIndex.loadBloomMeta(spark, idxDir)
     val fps = DedupIndex.rows(spark, idxDir).select("fp")
       .collect().map(_.getString(0))
     assert(fps.nonEmpty && fps.forall(bf.mightContain))

@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
 /** Pins the round-13 event/stats batch on hand-computable fixtures:

@@ -1,15 +1,12 @@
 package graft.ext
 
 import java.nio.file.Files
-
-import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 
 /** [[SearchIndex]] must (1) return exactly what the oracle-gated
-  * from-scratch `bm25_search` returns for the same terms/k, (2)
+  * from-scratch `bm25_search` returns for the same terms/k, and (2)
   * actually prune — a search may only touch the query terms' hash
-  * buckets, not the whole vocabulary — and (3) fold new batches in
-  * incrementally with append == one-shot, surviving compaction.
+  * buckets, not the whole vocabulary.
   */
 class SearchIndexSpec extends SparkSpec {
 
@@ -52,56 +49,5 @@ class SearchIndexSpec extends SparkSpec {
     assert(filesRead > 0 && filesRead < allFiles,
       s"no pruning: read $filesRead of $allFiles files")
     assert(idxScan.metadata.get("PartitionFilters").exists(_.contains("bucket")))
-  }
-
-  test("random batch splits == one-shot (seeded property)") {
-    // append==rebuild must hold for ANY partition of the corpus into
-    // batches, not just the mod-3 split — three seeded random 3-way
-    // splits via a doc_id hash
-    for (seed <- Seq(7, 23, 99)) {
-      val d = Files.createTempDirectory(s"search-idx-p$seed").toString
-      val bucket = org.apache.spark.sql.functions
-        .pmod(org.apache.spark.sql.functions.xxhash64(col("doc_id"),
-          org.apache.spark.sql.functions.lit(seed)),
-          org.apache.spark.sql.functions.lit(3))
-      SearchIndex.build(docs.filter(bucket === 0), d)
-      SearchIndex.append(docs.filter(bucket === 1), d)
-      SearchIndex.append(docs.filter(bucket === 2), d)
-      val got = SearchIndex.search(spark, d, terms, k = 20)
-        .collect().map(_.toSeq).toSeq
-      val want = TextQueries.bm25Search(spark, dir)
-        .collect().map(_.toSeq).toSeq
-      assert(got == want, s"seed $seed")
-    }
-  }
-
-  test("append batches == one-shot build; compaction preserves results") {
-    val incDir = Files.createTempDirectory("search-idx-inc").toString
-    SearchIndex.build(docs.filter(col("doc_id") % 3 < 2), incDir)
-    SearchIndex.append(docs.filter(col("doc_id") % 3 === 2), incDir)
-    val oneDir = Files.createTempDirectory("search-idx-one").toString
-    SearchIndex.build(docs, oneDir)
-
-    val inc = SearchIndex.search(spark, incDir, terms, k = 20)
-      .collect().map(_.toSeq).toSeq
-    val one = SearchIndex.search(spark, oneDir, terms, k = 20)
-      .collect().map(_.toSeq).toSeq
-    assert(inc == one && inc.nonEmpty)
-
-    // the stats table must carry BOTH batches' corpus scalars — scores
-    // (which embed N and avgdl) already pin this via equality above;
-    // also pin the row counts directly
-    val st = graft.io.SegmentLog.read(s"$incDir/search_index").get
-    val stats = spark.read.parquet(
-      st.extraPath(s"$incDir/search_index", "stats"))
-    assert(stats.count() == 2)
-    assert(stats.agg(org.apache.spark.sql.functions.sum("n_docs"))
-      .head().getLong(0) == docs.count())
-
-    SearchIndex.compact(spark, incDir)
-    assert(graft.io.SegmentLog.read(s"$incDir/search_index").get.segments.size == 1)
-    val post = SearchIndex.search(spark, incDir, terms, k = 20)
-      .collect().map(_.toSeq).toSeq
-    assert(post == one)
   }
 }

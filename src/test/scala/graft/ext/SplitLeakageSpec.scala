@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The guarantee `split_leakage_safe` exists for: no near-duplicate

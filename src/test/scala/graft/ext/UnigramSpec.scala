@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The distributed unigram-LM tokenizer must (a) produce LOSSLESS

@@ -22,7 +22,6 @@ class BigramSclcSpec extends SparkSpec {
   }
 
   test("expression == explode+groupBy histogram on the corpus") {
-    import spark.implicits._
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), lower(col("text")).as("t"))
       .filter(length(col("t")) >= 2)

@@ -250,18 +250,16 @@ class JsonTableIOSpec extends SparkSpec {
     assertUntouched(m1, live0)
   }
 
-  test("finalizeManifest resolves the live generation; ambiguous state fails loudly") {
-    val out = Files.createTempDirectory("jsonio-gen-fin").toString
+  test("a stray plain data dir beside a generation pointer fails rotating ops") {
+    val out = Files.createTempDirectory("jsonio-gen-stray").toString
     val df = spark.range(0, 40).toDF("id").repartition(4)
     assert(JsonTableIO.write(df, out, "user") == 40L)
     assert(JsonTableIO.compact(spark, out, "user", 1) == 40L)
-    // finalize after compact: counts data-g1, keeps the pointer — the old
-    // pinned-`data` form would have died on the rotated-away dir. The
-    // retained stale `data` is recognized (recorded) and swept here.
-    val m = JsonTableIO.finalizeManifest(spark, out, "user")
-    assert(m.count == 40L && m.dataDir == "data-g1")
+    // the second compact retires data-g1 as the stale generation and
+    // sweeps the plain `data` dir the first one retained
+    assert(JsonTableIO.compact(spark, out, "user", 1) == 40L)
+    assert(JsonTableIO.readManifest(out, "user").dataDir == "data-g2")
     assert(!Files.exists(Paths.get(s"$out/user/data")))
-    assert(JsonTableIO.read(spark, out, "user").count() == 40L)
     // a plain data dir REAPPEARING next to a generation pointer WITHOUT
     // being the recorded stale generation (stream resumed after compact)
     // is disjoint rows — every rotating op refuses, none sweeps
@@ -269,17 +267,16 @@ class JsonTableIOSpec extends SparkSpec {
     Files.createDirectories(stray)
     Files.writeString(stray.resolve("part-0.json"), "{\"id\":777}\n")
     val e = intercept[IllegalArgumentException] {
-      JsonTableIO.finalizeManifest(spark, out, "user")
+      JsonTableIO.compact(spark, out, "user", 1)
     }
     assert(e.getMessage.contains("stream resumed"))
-    intercept[IllegalArgumentException](JsonTableIO.compact(spark, out, "user", 1))
     intercept[IllegalArgumentException](
       JsonTableIO.writeGen(spark.range(1).toDF("id"), out, "user"))
     intercept[IllegalArgumentException](
       JsonTableIO.write(spark.range(1).toDF("id"), out, "user"))
     // neither dir was deleted by any refusal
     assert(Files.isDirectory(stray) &&
-      Files.isDirectory(Paths.get(s"$out/user/data-g1")))
+      Files.isDirectory(Paths.get(s"$out/user/data-g2")))
   }
 
   test("retention: a reader holding the old pointer survives a compact") {

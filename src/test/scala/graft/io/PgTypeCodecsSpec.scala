@@ -1,6 +1,5 @@
 package graft.io
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
@@ -30,40 +29,32 @@ class PgTypeCodecsSpec extends SparkSpec {
     val meta = TableMeta("t", Seq("id"), Seq(
       ColumnMeta("id", "bigint", nullable = false, 1),
       ColumnMeta("tags", "character varying[]", nullable = true, 2)))
-    assert(PgTypeCodecs.schemaFor(meta) == StructType(Seq(
+    assert(PgTypeCodecs.artifactSchemaFor(meta) == StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("tags", ArrayType(StringType)))))
   }
 
-  test("int4range literal decodes to canonical [lower, upper) and back") {
-    val df = Seq("[3,7)", "(2,9]", "[3,7]", "empty", "[,5)", "[4,)")
-      .toDF("r")
-      .withColumn("s", PgTypeCodecs.int4RangeToStruct(col("r")))
-    val got = df.select("s").collect().map(r =>
-      Option(r.getStruct(0)).map(s => (Option(s.get(0)), Option(s.get(1)))))
-    assert(got.toSeq == Seq(
-      Some((Some(3), Some(7))),   // [3,7) already canonical
-      Some((Some(3), Some(10))),  // (2,9] -> [3,10)
-      Some((Some(3), Some(8))),   // [3,7] -> [3,8)
-      None,                       // empty
-      Some((None, Some(5))),      // unbounded lower
-      Some((Some(4), None))))     // unbounded upper
-    val back = df.filter(col("r") =!= "[3,7]")
-      .select(col("r"), PgTypeCodecs.structToInt4Range(col("s")).as("r2"))
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    assert(back.forall { case (orig, round) =>
-      round == (if (orig == "empty") "empty"
-      else orig.replace("(2,9]", "[3,10)").replace("]", ")")) })
+  test("canonical int4range struct encodes to its [lower, upper) literal") {
+    val df = Seq[(Option[Int], Option[Int])](
+        (Some(3), Some(7)), (None, Some(5)), (Some(4), None)).toDF("lower", "upper")
+      .select(struct(col("lower"), col("upper")).as("s"))
+      .union(Seq(1).toDF("x").select(lit(null).cast(
+        StructType(Seq(StructField("lower", IntegerType), StructField("upper", IntegerType))))))
+    val got = df.select(PgTypeCodecs.structToInt4Range(col("s")))
+      .collect().map(_.getString(0)).toSeq
+    assert(got == Seq("[3,7)", "[,5)", "[4,)", "empty"))
   }
 
   test("jsonb round-trips through map without losing nested documents") {
+    val jsonbToMap = (c: org.apache.spark.sql.Column) =>
+      from_json(c, MapType(StringType, StringType))
     val df = Seq("""{"a":"1","b":"{\"nested\":true}"}""").toDF("j")
-      .withColumn("m", PgTypeCodecs.jsonbToMap(col("j")))
+      .withColumn("m", jsonbToMap(col("j")))
     val m = df.select("m").collect()(0).getMap[String, String](0)
     assert(m("a") == "1" && m("b").contains("nested"))
     val back = df.select(PgTypeCodecs.mapToJsonb(col("m"))).collect()(0).getString(0)
     val m2 = Seq(back).toDF("j")
-      .select(PgTypeCodecs.jsonbToMap(col("j"))).collect()(0).getMap[String, String](0)
+      .select(jsonbToMap(col("j"))).collect()(0).getMap[String, String](0)
     assert(m2 == m) // re-encoded document parses back to the same map
   }
 
@@ -73,7 +64,7 @@ class PgTypeCodecsSpec extends SparkSpec {
     import graft.meta.Catalog
     val src = Seq(1L, 2L).toDF("id")
       .withColumn("num", expr("cast(id AS decimal(38,18)) / 4"))
-      .withColumn("rng", PgTypeCodecs.int4RangeToStruct(lit("[3,7)")))
+      .withColumn("rng", struct(lit(3).as("lower"), lit(7).as("upper")))
       .withColumn("doc", map(lit("a"), lit("1")))
       .withColumn("ts_arr", array(to_timestamp(lit("2024-01-01 10:00:00.123456"))))
       .withColumn("tags", array(lit("x"), lit("y")))
@@ -99,7 +90,8 @@ class PgTypeCodecsSpec extends SparkSpec {
     assert(r.getAs[String]("rng") == "[3,7)")
     // jsonb map re-encoded to its raw document (what BulkInsert feeds pg)
     val m = Seq(r.getAs[String]("doc")).toDF("j")
-      .select(PgTypeCodecs.jsonbToMap(col("j"))).collect()(0).getMap[String, String](0)
+      .select(from_json(col("j"), MapType(StringType, StringType)))
+      .collect()(0).getMap[String, String](0)
     assert(m == Map("a" -> "1"))
     // timestamp array re-parsed from RFC3339 back to timestamps,
     // sub-second precision intact across the round trip
@@ -109,11 +101,15 @@ class PgTypeCodecsSpec extends SparkSpec {
   }
 
   test("array codecs narrow JSON doubles and parse RFC3339 (ref util.go:46-90)") {
-    val df = Seq((Seq(1.0, 2.0, 300.0), Seq("2024-01-01T10:00:00Z", "2024-06-30T23:59:59+02:00")))
-      .toDF("nums", "tss")
-    val out = df.select(
-      PgTypeCodecs.toSmallintArray(col("nums")).as("i2"),
-      PgTypeCodecs.toIntegerArray(col("nums")).as("i4"),
+    // JSON numbers narrow through the artifact read schema, as load does
+    val meta = TableMeta("t", Seq("i2"), Seq(
+      ColumnMeta("i2", "smallint[]", nullable = true, 1),
+      ColumnMeta("i4", "integer[]", nullable = true, 2),
+      ColumnMeta("tss", "timestamp without time zone[]", nullable = true, 3)))
+    val df = spark.read.schema(PgTypeCodecs.artifactSchemaFor(meta)).json(Seq(
+      """{"i2":[1,2,300],"i4":[1,2,300],""" +
+        """"tss":["2024-01-01T10:00:00Z","2024-06-30T23:59:59+02:00"]}""").toDS())
+    val out = df.select(col("i2"), col("i4"),
       PgTypeCodecs.toTimestampArray(col("tss")).as("ts"))
     assert(out.schema("i2").dataType == ArrayType(ShortType))
     assert(out.schema("i4").dataType == ArrayType(IntegerType))

@@ -12,8 +12,6 @@ import graft.SparkSpec
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double, props: String)
 
-case class Vec(vec_id: Long, v: Seq[Double])
-
 /** Drives the streaming operators with a MemoryStream and checks they
   * agree with their batch duals (the oracle-checked EventQueries forms).
   */
@@ -46,87 +44,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming semantic dedup: cross-batch state, dropped-still-blocks") {
-    implicit val sqlCtx = spark.sqlContext
-    val rad = math.Pi / 180
-    def at(deg: Double): Seq[Double] = Seq(math.cos(deg * rad), math.sin(deg * rad))
-    // two cells at 0° and 90°; eps 0.8 ⇔ within ~36.9°
-    val cents = Seq((0L, at(0)), (1L, at(90)))
-    val mem = MemoryStream[Vec]
-    val q = StreamingOps.semDedupStream(mem.toDF(), cents, eps = 0.8)
-      .writeStream.format("memory").queryName("semdedup_stream")
-      .outputMode("append").start()
-    try {
-      // batch 1: 0° kept (cell 0); 30° near 0° → dropped; 90° kept (cell 1)
-      mem.addData(Vec(1, at(0)), Vec(2, at(30)), Vec(3, at(90)))
-      q.processAllAvailable()
-      // batch 2, cell 1: 60° near 90° (batch-1 state) → dropped;
-      // 50° is near only the DROPPED 60° → dropped too (near-ANY-earlier,
-      // kept or not — the batch rule, and the discriminator vs kept-only)
-      mem.addData(Vec(4, at(60)), Vec(5, at(50)))
-      q.processAllAvailable()
-      val got = spark.table("semdedup_stream")
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-      assert(got(1L)._2 && !got(2L)._2 && got(3L)._2)
-      assert(got(1L)._1 == 0L && got(2L)._1 == 0L && got(3L)._1 == 1L)
-      assert(got(4L) == (1L, false) && got(5L) == (1L, false))
-    } finally q.stop()
-  }
-
-  test("sessionization splits on the 30-minute gap") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamingOps.sessionize(mem.toDF())
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("complete").start()
-    try {
-      mem.addData(events: _*)
-      q.processAllAvailable()
-      val got = spark.table("sessions")
-        .orderBy("user_id", "session_start")
-        .collect().map(r => (r.getLong(0), r.getLong(3)))
-      // user 1: [10:00,10:05] session (3 events incl dup), [10:50] session; user 2: one
-      assert(got.toSeq == Seq((1L, 3L), (1L, 1L), (2L, 1L)))
-    } finally q.stop()
-  }
-
-  test("dedup within watermark drops the duplicate event_id") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamingOps.dedupeWithinWatermark(mem.toDF())
-      .writeStream.format("memory").queryName("deduped")
-      .outputMode("append").start()
-    try {
-      mem.addData(events: _*)
-      q.processAllAvailable()
-      assert(spark.table("deduped").count() == 4L)
-      assert(spark.table("deduped").select("event_id").distinct().count() == 4L)
-    } finally q.stop()
-  }
-
-  test("mapGroupsWithState accumulates per-user state across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamingOps.userActivity(mem.toDF())
-      .writeStream.format("memory").queryName("activity")
-      .outputMode("update").start()
-    try {
-      mem.addData(Ev(1, ts(0), 1, "click", 1.0, "{}"),
-        Ev(2, ts(5), 1, "click", 2.0, "{}"))
-      q.processAllAvailable()
-      mem.addData(Ev(3, ts(10), 1, "view", 4.0, "{}"),
-        Ev(4, ts(11), 2, "click", 8.0, "{}"))
-      q.processAllAvailable()
-      // memory sink in update mode appends updated rows; take the latest per user
-      val latest = spark.table("activity")
-        .orderBy(col("user_id"), desc("n_events"))
-        .collect().groupBy(_.getLong(0)).map { case (u, rs) => u -> rs.head }
-      assert(latest(1L).getLong(1) == 3L)          // state carried: 2 + 1 events
-      assert(latest(1L).getDouble(2) == 7.0)       // 1 + 2 + 4
-      assert(latest(2L).getLong(1) == 1L && latest(2L).getDouble(2) == 8.0)
-    } finally q.stop()
-  }
-
   test("stream-stream interval join attributes clicks to purchases") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
@@ -145,127 +62,6 @@ class StreamingSpec extends SparkSpec {
         .orderBy("cts")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
       assert(got.toSeq == Seq((4L, 1L, 1.0), (4L, 1L, 2.0)))
-    } finally q.stop()
-  }
-
-  test("outer interval join emits null-click purchases only after the watermark proves them") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamingOps.clickAttributionOuter(mem.toDF())
-      .writeStream.format("memory").queryName("attrib_outer")
-      .outputMode("append").start()
-    try {
-      mem.addData(
-        Ev(1, ts(0), 1, "click", 1.0, "{}"),
-        Ev(2, ts(30), 1, "purchase", 99.0, "{}"),  // matched by click 1
-        Ev(3, ts(30), 3, "purchase", 50.0, "{}"))  // user 3: NO clicks
-      q.processAllAvailable()
-      // the unmatched purchase must NOT be out yet: a matching click
-      // could still arrive until the click watermark passes 10:30
-      val early = spark.table("attrib_outer")
-        .filter(col("purchase_id") === 3L).count()
-      assert(early == 0L, "outer row emitted before the watermark proved it")
-      // advance BOTH sides 2h past the purchase — the global watermark is
-      // the MIN over all watermark operators, so late clicks alone would
-      // leave the purchase-side watermark (and thus eviction) stuck —
-      // then one more batch so the advanced watermark takes effect
-      mem.addData(
-        Ev(9, Timestamp.valueOf("2024-01-01 12:30:00"), 9, "click", 0.5, "{}"),
-        Ev(10, Timestamp.valueOf("2024-01-01 12:30:00"), 9, "purchase", 0.5, "{}"))
-      q.processAllAvailable()
-      mem.addData(
-        Ev(11, Timestamp.valueOf("2024-01-01 12:31:00"), 9, "click", 0.5, "{}"),
-        Ev(12, Timestamp.valueOf("2024-01-01 12:31:00"), 9, "purchase", 0.5, "{}"))
-      q.processAllAvailable()
-      val outer = spark.table("attrib_outer")
-        .filter(col("purchase_id") === 3L).collect()
-      assert(outer.length == 1 && outer(0).isNullAt(3) && outer(0).isNullAt(4),
-        "unmatched purchase must surface exactly once with null click columns")
-      // and the matched purchase came through with its click
-      assert(spark.table("attrib_outer")
-        .filter(col("purchase_id") === 2L && col("cts").isNotNull).count() == 1L)
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState emits completed sessions on gap or timeout") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamingOps.completedSessions(mem.toDF())
-      .writeStream.format("memory").queryName("closed_sessions")
-      .outputMode("append").start()
-    try {
-      mem.addData(Ev(1, ts(0), 1, "click", 1.0, "{}"),
-        Ev(2, ts(5), 1, "click", 2.0, "{}"))
-      q.processAllAvailable()
-      assert(spark.table("closed_sessions").isEmpty) // session still open
-      // 50 min later: past the 30-min gap -> closes [10:00,10:05] (2 events)
-      mem.addData(Ev(3, ts(50), 1, "view", 3.0, "{}"))
-      q.processAllAvailable()
-      val got = spark.table("closed_sessions").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3)))
-      assert(got.toSeq == Seq((1L, ts(0), ts(5), 2L)))
-    } finally q.stop()
-  }
-
-  test("stream-static join enriches events with the customer dimension") {
-    implicit val sqlCtx = spark.sqlContext
-    val customers = Seq((1L, "BUILDING"), (2L, "MACHINERY"))
-      .toDF("c_custkey", "c_mktsegment")
-    val mem = MemoryStream[Ev]
-    val q = StreamingOps.enrichWithCustomers(mem.toDF(), customers)
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    try {
-      mem.addData(Ev(1, ts(0), 1, "click", 1.0, "{}"),
-        Ev(2, ts(1), 9, "click", 2.0, "{}")) // user 9: no dimension row
-      q.processAllAvailable()
-      val got = spark.table("enriched").orderBy("event_id")
-        .collect().map(r => (r.getLong(0), Option(r.getString(5))))
-      assert(got.toSeq == Seq((1L, Some("BUILDING")), (2L, None)))
-    } finally q.stop()
-  }
-
-  test("streaming SCD2 closed intervals match the batch form across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamingOps.scd2Stream(mem.toDF())
-      .writeStream.format("memory").queryName("scd2_stream")
-      .outputMode("append").start()
-    try {
-      // batch 1: user 1 click→click (run of 2), then view closes it;
-      // user 2 opens a click run
-      mem.addData(
-        Ev(1, ts(0), 1, "click", 1.0, "{}"),
-        Ev(2, ts(5), 1, "click", 2.0, "{}"),
-        Ev(3, ts(10), 1, "view", 3.0, "{}"),
-        Ev(4, ts(12), 2, "click", 4.0, "{}"))
-      q.processAllAvailable()
-      // batch 2: user 1's view run closes on purchase (cross-batch state);
-      // user 2 extends the same click run (no closure)
-      mem.addData(
-        Ev(5, ts(20), 1, "purchase", 5.0, "{}"),
-        Ev(6, ts(21), 2, "click", 6.0, "{}"))
-      q.processAllAvailable()
-      val streamed = spark.table("scd2_stream")
-        .collect().map(r => (r.getLong(0), r.getString(1),
-          r.getTimestamp(2), r.getTimestamp(3), r.getLong(4))).toSet
-      assert(streamed == Set(
-        (1L, "click", ts(0), ts(10), 2L),
-        (1L, "view", ts(10), ts(20), 1L)))
-      // and against the batch operator on the same events: closed
-      // streamed rows == the batch form's non-NULL-valid_to rows
-      val batchDf = Seq(
-        Ev(1, ts(0), 1, "click", 1.0, "{}"), Ev(2, ts(5), 1, "click", 2.0, "{}"),
-        Ev(3, ts(10), 1, "view", 3.0, "{}"), Ev(4, ts(12), 2, "click", 4.0, "{}"),
-        Ev(5, ts(20), 1, "purchase", 5.0, "{}"), Ev(6, ts(21), 2, "click", 6.0, "{}"))
-        .toDF()
-      val dir = java.nio.file.Files.createTempDirectory("scd2ev").toString
-      batchDf.write.mode("overwrite").parquet(s"$dir/events.parquet")
-      val batchClosed = graft.ext.EventQueries.scd2State(spark, dir)
-        .filter(col("valid_to").isNotNull)
-        .collect().map(r => (r.getLong(0), r.getString(1),
-          r.getTimestamp(2), r.getTimestamp(3), r.getLong(4))).toSet
-      assert(streamed == batchClosed)
     } finally q.stop()
   }
 
@@ -301,136 +97,19 @@ class StreamingSpec extends SparkSpec {
         // the index remembered everything (2 seed + 4 streamed), read
         // through the committed segment-log state
         assert(graft.ext.DedupIndex.rows(spark, idxDir).count() == 6L)
-        // and the rebuilt bloom flags all seen fingerprints
-        val flags = graft.ext.DedupIndex.prefilter(spark,
-            Seq((30L, "yet another unrelated body of text entirely")).toDF("doc_id", "text"),
-            idxDir)
-          .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-        assert(flags(30L), "bloom must flag a fingerprint indexed by the stream")
+        // and the committed bloom covers every indexed fingerprint,
+        // including one only the stream ingested
+        val (_, covered, bloom) = graft.ext.DedupIndex.loadBloomMeta(spark, idxDir)
+        assert(covered == 6L, s"bloom header covers $covered fingerprints")
+        val fp = Seq("yet another unrelated body of text entirely").toDF("text")
+          .select(graft.ext.DedupQueries.contentFp(col("text"))).head().getString(0)
+        assert(bloom.mightContain(fp), "bloom must hold a fingerprint indexed by the stream")
       } finally q.stop()
     } finally {
       import scala.reflect.io.Directory
       Seq(idxDir, outDir, ckDir).foreach(p =>
         new Directory(new java.io.File(p)).deleteRecursively())
     }
-  }
-
-  test("streaming rollup maintenance: streamed segments == one-shot batch build") {
-    implicit val sqlCtx = spark.sqlContext
-    val idxDir = java.nio.file.Files.createTempDirectory("rollidx").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("rollck").toString
-    val all = graft.Tables(spark, "/root/testdata/sf0.001", "events")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    val rows = all.as[(Long, Timestamp, Long, String, Double)].collect()
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val q = StreamingOps.rollupIngestStream(
-      mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value"),
-      idxDir, ckDir)
-    try {
-      // three micro-batches scattering every (type, day) cell
-      mem.addData(rows.filter(_._1 % 3 == 0).toSeq); q.processAllAvailable()
-      mem.addData(rows.filter(_._1 % 3 == 1).toSeq); q.processAllAvailable()
-      mem.addData(rows.filter(_._1 % 3 == 2).toSeq); q.processAllAvailable()
-      val oneDir = java.nio.file.Files.createTempDirectory("rollone").toString
-      graft.ext.RollupIndex.build(all, oneDir)
-      def rowsOf(d: String) = graft.ext.RollupIndex.read(spark, d)
-        .select(col("event_type"), col("day"), col("n"),
-          col("sum_value").cast("double"),
-          expr("hll_sketch_estimate(users_sketch)").as("u"))
-        .orderBy("event_type", "day").collect().map(_.toSeq).toSeq
-      val streamed = rowsOf(idxDir)
-      assert(streamed == rowsOf(oneDir) && streamed.nonEmpty)
-      assert(graft.io.SegmentLog.read(s"$idxDir/rollup_index").get.segments.size == 3)
-    } finally q.stop()
-  }
-
-  test("streamed daily HLL sketches merge to the batch weekly estimates") {
-    // the mergeable-sketch rollup on the REAL events table (timestamp[us]
-    // ts): stream builds daily hll_sketch_agg state across micro-batches
-    // (maxFilesPerTrigger=1 forces incremental sketch merging), then a
-    // batch hll_union_agg rolls the stored sketches to weekly — the
-    // estimates must equal the all-batch eventsSketchWeekly two-level form
-    val dir = java.nio.file.Files.createTempDirectory("evhll").toString
-    graft.Tables(spark, "/root/testdata/sf0.001", "events")
-      .repartition(4).write.mode("overwrite").parquet(dir)
-    val q = StreamingOps.dailyUserSketches(
-        spark.readStream.schema(StreamingOps.eventSchema)
-          .option("maxFilesPerTrigger", 1).parquet(dir))
-      .writeStream.format("memory").queryName("hll_daily")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("hll_daily")
-        .groupBy(to_date(date_trunc("week", col("day"))).as("week"),
-          col("event_type"))
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"), lit(false)))
-          .as("approx_users"))
-        .collect().map(r => (r.getDate(0).toString, r.getString(1), r.getLong(2)))
-        .sortBy(t => (t._1, t._2)).toSeq
-      val batch = graft.ext.EventQueries
-        .eventsSketchWeeklyRaw(spark, "/root/testdata/sf0.001")
-        .select(col("week"), col("event_type"), col("approx_users"))
-        .collect().map(r => (r.getDate(0).toString, r.getString(1), r.getLong(2)))
-        .sortBy(t => (t._1, t._2)).toSeq
-      assert(streamed.nonEmpty)
-      assert(streamed == batch)
-    } finally q.stop()
-  }
-
-  test("streamed daily quantile sketches merge to the batch weekly percentiles") {
-    import graft.functions.QuantileSketch._
-    val dir = java.nio.file.Files.createTempDirectory("evqs").toString
-    graft.Tables(spark, "/root/testdata/sf0.001", "events")
-      .repartition(4).write.mode("overwrite").parquet(dir)
-    val q = StreamingOps.dailyValueSketches(
-        spark.readStream.schema(StreamingOps.eventSchema)
-          .option("maxFilesPerTrigger", 1).parquet(dir))
-      .writeStream.format("memory").queryName("qs_daily")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("qs_daily")
-        .groupBy(to_date(date_trunc("week", col("day"))).as("week"),
-          col("event_type"))
-        .agg(quantile_sketch_merge(col("sk")).as("wsk"))
-        .select(col("week"), col("event_type"),
-          round(quantile_sketch_query(col("wsk"), 0.5), 6).as("p50"),
-          round(quantile_sketch_query(col("wsk"), 0.95), 6).as("p95"))
-        .collect().map(r => ((r.getDate(0).toString, r.getString(1)),
-          (r.getDouble(2), r.getDouble(3)))).toMap
-      val batch = graft.ext.EventQueries
-        .eventsQuantileWeeklyRaw(spark, "/root/testdata/sf0.001")
-        .collect().map(r => ((r.getDate(0).toString, r.getString(1)),
-          (r.getDouble(2), r.getDouble(3)))).toMap
-      assert(streamed.nonEmpty && streamed.keySet == batch.keySet)
-      // GK summaries are insertion-order-sensitive (unlike HLL), so
-      // streamed and batch sketches need not be bit-identical. The
-      // SOUND assertion is GK's own guarantee — RANK error, not value
-      // distance (a value tolerance can legitimately fail on a
-      // flat-then-steep CDF): each streamed percentile must land
-      // between the exact order statistics at p ± 4ε, the same
-      // envelope the batch query asserts for itself
-      val exact = graft.Tables(spark, "/root/testdata/sf0.001", "events")
-        .groupBy(to_date(date_trunc("week", col("ts"))).as("week"), col("event_type"))
-        .agg(sort_array(collect_list(col("value"))).as("vs"))
-        .collect().map(r => ((r.getDate(0).toString, r.getString(1)),
-          r.getSeq[Double](2))).toMap
-      // 0-based mirror of the batch query's 1-based band arithmetic:
-      // lo = greatest(1, floor((p-4ε)n)), hi = least(n, ceil((p+4ε)n)+1)
-      def band(vs: Seq[Double], p: Double): (Double, Double) = {
-        val n = vs.size
-        val lo = vs(math.max(0, math.floor((p - 0.04) * n).toInt - 1))
-        val hi = vs(math.min(n - 1, math.ceil((p + 0.04) * n).toInt))
-        (lo, hi)
-      }
-      streamed.foreach { case (k, (s50, s95)) =>
-        val vs = exact(k)
-        val (lo50, hi50) = band(vs, 0.5)
-        val (lo95, hi95) = band(vs, 0.95)
-        assert(s50 >= lo50 - 1e-9 && s50 <= hi50 + 1e-9, s"$k p50 $s50 outside [$lo50, $hi50]")
-        assert(s95 >= lo95 - 1e-9 && s95 <= hi95 + 1e-9, s"$k p95 $s95 outside [$lo95, $hi95]")
-      }
-    } finally q.stop()
   }
 
   test("file-source stream over real events parquet produces batch-equal counts") {
