@@ -376,10 +376,7 @@ object Main {
           cli.op match {
             case "" | "build" =>
               val n = cli.table match {
-                case "dedup" =>
-                  val b = graft.ext.DedupIndex.build(docs, cli.path)
-                  graft.ext.DedupIndex.writeBloom(spark, cli.path)
-                  b
+                case "dedup" => graft.ext.DedupIndex.build(docs, cli.path)
                 case "clusters" => graft.ext.ClusterIndex.build(docs, cli.path)
                 case "ann" =>
                   val (v, c) = vecsAndCents
@@ -389,10 +386,7 @@ object Main {
               0
             case "append" =>
               val n = cli.table match {
-                case "dedup" =>
-                  val a = graft.ext.DedupIndex.append(docs, cli.path)
-                  graft.ext.DedupIndex.writeBloom(spark, cli.path)
-                  a
+                case "dedup" => graft.ext.DedupIndex.append(docs, cli.path)
                 case "clusters" => graft.ext.ClusterIndex.append(docs, cli.path)
                 case "ann" =>
                   val (v, c) = vecsAndCents

@@ -42,11 +42,11 @@ import org.apache.spark.sql.functions._
   * bucket.
   *
   * Maintenance is CRASH-SAFE via [[graft.io.SegmentLog]]: each
-  * build/append stages an immutable `seg-<n>` parquet dir, each Bloom
-  * rebuild a versioned `bloom-g<n>` file, and visibility flips with one
-  * atomic manifest replace — a reader (or the next micro-batch of
-  * [[graft.streaming.StreamingOps.dedupIngestStream]]) never sees a
-  * half-written segment or a truncated sketch; a crash mid-stage leaves
+  * build/append/ingest stages an immutable `seg-<n>` parquet dir, each
+  * ingest also a versioned `pending-g<n>` extra, and visibility flips
+  * with one atomic manifest replace — a reader (or the next micro-batch
+  * of [[graft.streaming.StreamingOps.dedupIngestStream]]) never sees a
+  * half-written segment or pending set; a crash mid-stage leaves
   * orphans that the post-commit cleanup sweeps. Index doc_ids MUST
   * precede batch doc_ids (ingest order) for the greedy first-wins rule
   * to be well-defined.
@@ -67,10 +67,10 @@ object DedupIndex {
 
   /** Build the index from scratch over raw documents (doc_id, text):
     * stage one fresh segment, commit it as the ONLY live one (extras are
-    * dropped — a Bloom sketch derived from a superseded corpus could
-    * yield false negatives, breaking the pre-gate's one-sided-error
-    * contract). Returns the indexed row count — read from the written
-    * parquet footers (metadata-only), never by recomputing fpSig.
+    * dropped — a pending set was judged against the superseded corpus,
+    * and cleanup sweeps extras older indexes carry). Returns the
+    * indexed row count — read from the written parquet footers
+    * (metadata-only), never by recomputing fpSig.
     */
   def build(docs: DataFrame, dir: String): Long = {
     val r = root(dir)
@@ -104,9 +104,9 @@ object DedupIndex {
 
   /** Rewrite all live segments as ONE — the maintenance pass that stops
     * per-batch ingest from accumulating a long segment list (each
-    * segment is a separate column-pruned scan at read time). The Bloom
-    * extra survives: compaction changes the file layout, not the
-    * fingerprint set it summarizes. Same commit discipline — readers
+    * segment is a separate column-pruned scan at read time). The
+    * `pending` extra survives: compaction changes the file layout, not
+    * the doc set its verdicts rest on. Same commit discipline — readers
     * stay on the old segments until the flip.
     */
   def compact(spark: SparkSession, dir: String): Long = {
@@ -119,163 +119,6 @@ object DedupIndex {
     SegmentLog.cleanup(r)
     spark.read.parquet(s"$r/$seg").count()
   }
-
-  /** Derive (or re-derive) the index's Bloom sketch artifact from the
-    * persisted fingerprints — ONE column-pruned fp scan of the index,
-    * distributed tree-aggregation build, sketch bytes staged as a fresh
-    * `bloom-g<n>` through the Hadoop FileSystem API (object-store
-    * portable) and committed by manifest flip.
-    *
-    * The sketch is sized for a CAPACITY — a power of two ≥ 2× the
-    * current fingerprint count (floor 4096, overridable for specs) —
-    * and the artifact records (capacity, count) in a 16-byte header
-    * before the filter bytes. Sizing to capacity instead of the exact
-    * count is what makes APPENDS mergeable ([[growBloom]]): a batch
-    * filter built with the same (capacity, fpp) parameters is
-    * bit-compatible, so per-batch maintenance is O(batch); the ≤1% fp
-    * rate holds while count ≤ capacity, and the overflow rebuild
-    * re-sizes to the grown corpus. Returns the indexed fingerprint
-    * count the sketch covers.
-    */
-  def writeBloom(spark: SparkSession, dir: String, capacity: Long = 0L): Long = {
-    val st = state(dir)
-    val fps = rows(spark, dir).select("fp")
-    val n = fps.count()
-    val cap = if (capacity > 0) capacity
-      else java.lang.Long.highestOneBit(
-        math.max(math.max(2 * n, 4096L) * 2 - 1, 1L))
-    val bf = fps.stat.bloomFilter("fp", cap, 0.01)
-    commitBloom(spark, dir, st, bf, cap, n)
-    n
-  }
-
-  /** Fold NEW fingerprints into the committed sketch WITHOUT rescanning
-    * the index — the per-batch maintenance shape the streaming ingest
-    * needs (O(batch), not O(index-so-far) per micro-batch). The batch
-    * filter is built distributed with the sketch's own (capacity, fpp)
-    * parameters — bit-compatible by construction — and OR-merged on the
-    * driver. A fold that would push the count past capacity rebuilds
-    * at a larger capacity AND merges the batch in, preserving both the
-    * fp-rate guarantee and the no-false-negative contract. Works for
-    * both call orders: commit-then-fold (as [[ingest]] does) and
-    * fold-before-commit — the overflow rebuild's count header is
-    * `max(committed rescan, old count + batch)`, so it never
-    * understates sketch contents whichever order the caller used.
-    * Returns the recorded covered count.
-    */
-  def growBloom(spark: SparkSession, dir: String, newFps: DataFrame,
-      newN: Long): Long = {
-    val st = state(dir)
-    if (!st.extras.contains("bloom")) return writeBloom(spark, dir)
-    // legacy/corrupt artifact: the index ROWS are authoritative, so
-    // recover instead of failing the whole ingest on a pre-header bloom
-    // file — (0, 0, null) routes into the overflow rebuild below, which
-    // rebuilds from the committed rows AND OR-merges the batch filter,
-    // so the no-false-negative contract holds through recovery for both
-    // commit-then-fold and fold-before-commit callers
-    val meta = loadBloomMetaRecovering(spark, dir)
-    val (cap, n, bf) = meta
-      .getOrElse((0L, 0L, null: org.apache.spark.util.sketch.BloomFilter))
-    if (n + newN > cap) {
-      // overflow: re-size AND keep the batch, regardless of whether the
-      // caller has committed it as a segment yet. A plain writeBloom here
-      // rebuilds from committed rows only, so a fold-before-append caller
-      // would silently lose newFps from the sketch — false NEGATIVES,
-      // breaking the sketch's one-sided-error contract.
-      // Rebuild from the committed index, then OR-merge the batch filter:
-      // bitwise-idempotent if the batch was already committed (the rescan
-      // covered it — the [[ingest]] order), additive if not. The
-      // recorded count is the committed rescan count — exact for the
-      // documented commit-then-fold order; a contract-violating
-      // fold-before-append caller undercounts by at most its one batch,
-      // well inside the ≥2× capacity slack, and never loses bits.
-      val fps = rows(spark, dir).select("fp")
-      val covered = fps.count()
-      val newCap = java.lang.Long.highestOneBit(
-        math.max(math.max(2 * math.max(covered, n + newN), 4096L) * 2 - 1, 1L))
-      val rebuilt = fps.stat.bloomFilter("fp", newCap, 0.01)
-      rebuilt.mergeInPlace(newFps.stat.bloomFilter("fp", newCap, 0.01))
-      // count header = max(covered, n + newN): for a fold-before-commit
-      // caller the batch's bits WERE merged in but its rows aren't in
-      // `covered` yet — recording bare `covered` would undercount sketch
-      // contents and fire the next overflow guard one batch late, eroding
-      // the ≤1% fp-rate margin near capacity. On legacy RECOVERY the old
-      // header is unknown (n = 0), so count covered + newN outright —
-      // possibly one batch high for a commit-then-fold caller, which only
-      // brings the next resize forward (the safe side of the guarantee)
-      val counted =
-        if (meta.isEmpty) covered + newN else math.max(covered, n + newN)
-      commitBloom(spark, dir, state(dir), rebuilt, newCap, counted)
-      counted
-    }
-    else {
-      bf.mergeInPlace(newFps.stat.bloomFilter("fp", cap, 0.01))
-      commitBloom(spark, dir, state(dir), bf, cap, n + newN)
-      n + newN
-    }
-  }
-
-  private def commitBloom(spark: SparkSession, dir: String,
-      st: SegmentLog.State, bf: org.apache.spark.util.sketch.BloomFilter,
-      cap: Long, count: Long): Unit = {
-    val r = root(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val name = SegmentLog.extraName("bloom", gen)
-    val p = new org.apache.hadoop.fs.Path(s"$r/$name")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try { out.writeLong(BloomMagic); out.writeLong(cap); out.writeLong(count); bf.writeTo(out) }
-    finally out.close()
-    SegmentLog.commit(r,
-      SegmentLog.State(gen, st.segments, st.extras + ("bloom" -> name)))
-    SegmentLog.cleanup(r)
-  }
-
-  /** [[loadBloomMeta]] that reports an unreadable (legacy-format or
-    * corrupt) artifact as None instead of throwing, so maintenance
-    * paths can rebuild from the authoritative index rows. A MISSING
-    * artifact still throws — that's a caller-order bug
-    * ([[writeBloom]] never ran), not a format migration.
-    */
-  private def loadBloomMetaRecovering(spark: SparkSession, dir: String):
-      Option[(Long, Long, org.apache.spark.util.sketch.BloomFilter)] = {
-    require(state(dir).extras.contains("bloom"),
-      s"no bloom sketch committed at ${root(dir)} — run writeBloom first")
-    try Some(loadBloomMeta(spark, dir))
-    catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** The sketch plus its (capacity, covered count) header. */
-  def loadBloomMeta(spark: SparkSession, dir: String):
-      (Long, Long, org.apache.spark.util.sketch.BloomFilter) = {
-    val st = state(dir)
-    require(st.extras.contains("bloom"),
-      s"no bloom sketch committed at ${root(dir)} — run writeBloom first")
-    val p = new org.apache.hadoop.fs.Path(st.extraPath(root(dir), "bloom"))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    try {
-      val magic = in.readLong()
-      // a legacy (pre-header or headerless) artifact would otherwise
-      // misparse its first 16 bytes as (cap, count) and die inside
-      // BloomFilter.readFrom with an opaque version error; the magic
-      // check turns that into an actionable message. A legacy file's
-      // first long is a power-of-two capacity (or Spark's small
-      // version int in a long's high bytes) — never the magic.
-      require(magic == BloomMagic,
-        s"bloom sketch at $p is not in the current format " +
-        s"(magic=0x${magic.toHexString}, want 0x${BloomMagic.toHexString}) — " +
-        "legacy or corrupt artifact; rerun writeBloom to rebuild it")
-      val cap = in.readLong(); val n = in.readLong()
-      (cap, n, org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-    } finally in.close()
-  }
-
-  /** Format tag for the bloom artifact: "GRAFTBL" + version byte 0x01.
-    * Written before the (capacity, count) header so a reader can tell a
-    * current artifact from a legacy/corrupt one instead of misparsing.
-    */
-  val BloomMagic: Long = 0x47524146_54424C01L
 
   /** CAP-CONSISTENT streaming ingest step: dedupe `batch` against the
     * index, fold the whole batch in, and RESURRECT previously dropped
@@ -302,8 +145,7 @@ object DedupIndex {
     * per-touched-bucket count on top of the dedupe scan; the re-check
     * pipeline runs only when a crossing actually strands candidates.
     */
-  def ingest(spark: SparkSession, batch: DataFrame, dir: String,
-      maintainBloom: Boolean = false): DataFrame = {
+  def ingest(spark: SparkSession, batch: DataFrame, dir: String): DataFrame = {
     val r = root(dir)
     val st = state(dir)
     val gen = SegmentLog.nextGen(Some(st))
@@ -403,13 +245,6 @@ object DedupIndex {
     SegmentLog.commit(r, SegmentLog.State(gen, st.segments :+ seg,
       st.extras + ("pending" -> pen)))
     SegmentLog.cleanup(r)
-    // per-batch sketch maintenance, folded in HERE so the fingerprints
-    // come from the already-checkpointed batch frame instead of a
-    // re-read of the just-written segment;
-    // runs after the commit above, so the commit-then-fold contract
-    // growBloom documents holds
-    if (maintainBloom)
-      growBloom(spark, dir, b.select("fp"), b.count())
     if (mayCross) graft.SparkUtil.release(buckets)
     graft.SparkUtil.release(b)
     emitted

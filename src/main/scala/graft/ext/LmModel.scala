@@ -1,7 +1,5 @@
 package graft.ext
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,10 +17,10 @@ import org.apache.spark.sql.functions._
   *
   * Retrain is an ATOMIC REBUILD SWAP via [[graft.io.SegmentLog]] (the
   * AnnIndex centroid-retrain convention): a new generation's uni/bi
-  * tables and meta file are staged under fresh names, one manifest
-  * rename flips visibility, and post-commit cleanup sweeps the old
-  * generation — a reader never sees a half-written model or mixed
-  * generations of the two tables.
+  * tables are staged under fresh names, one manifest rename flips
+  * visibility, and post-commit cleanup sweeps the old generation — a
+  * reader never sees a half-written model or mixed generations of the
+  * two tables.
   *
   * 100 TB posture: training cost is one reference-slice scan + two
   * grouped counts (the reference corpus is orders of magnitude smaller
@@ -43,10 +41,8 @@ object LmModel {
     SegmentLog.read(root(dir)).getOrElse(
       sys.error(s"no LM model committed at ${root(dir)}"))
 
-  /** Train on `docs`' `trainLang` slice and commit atomically.
-    * Returns the vocabulary size.
-    */
-  def train(docs: DataFrame, trainLang: String, dir: String): Long = {
+  /** Train on `docs`' `trainLang` slice and commit atomically. */
+  def train(docs: DataFrame, trainLang: String, dir: String): Unit = {
     val r = root(dir)
     val train = TextQueries.lmTokens(docs).filter(col("lang") === trainLang)
     val uni = train.select(explode(col("words")).as("w1"))
@@ -56,16 +52,11 @@ object LmModel {
     val gen = SegmentLog.nextGen(SegmentLog.read(r))
     val uniName = SegmentLog.extraName("uni", gen)
     val biName = SegmentLog.extraName("bi", gen)
-    val metaName = SegmentLog.extraName("meta", gen)
     uni.write.parquet(s"$r/$uniName")
     bi.write.parquet(s"$r/$biName")
-    val v = uni.sparkSession.read.parquet(s"$r/$uniName").count()
-    Files.writeString(Paths.get(s"$r/$metaName"),
-      s"""{"train_lang": "$trainLang", "vocab": $v}""")
     SegmentLog.commit(r, SegmentLog.State(gen, Nil,
-      Map("uni" -> uniName, "bi" -> biName, "meta" -> metaName)))
+      Map("uni" -> uniName, "bi" -> biName)))
     SegmentLog.cleanup(r)
-    v
   }
 
   /** Score `docs` against the committed model — the same dataflow as the

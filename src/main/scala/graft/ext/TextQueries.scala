@@ -794,23 +794,6 @@ object TextQueries {
       |LIMIT 20""".stripMargin
   }
 
-  /** fastText-style hashed-bag linear classifier inference — the
-    * quality/language FILTER MODEL tier of a training-data pipeline
-    * (Joulin et al., arXiv:1607.01759: bag of hashed n-gram buckets →
-    * linear layer), run as a pure per-document projection. Each token
-    * hashes into one of B=4096 buckets (the hashing trick — the model is
-    * a bounded weight table, not a vocabulary); the document logit is
-    * the mean bucket weight. Here the weight table is a deterministic
-    * md5 function of the bucket id so the oracle replays inference
-    * end-to-end; production swaps a TRAINED float array broadcast once
-    * per executor (the [[graft.functions.CentroidTopK]] pattern) —
-    * identical dataflow, zero shuffle either way.
-    *
-    * Cross-engine float contract: per-token weights are INTEGERS
-    * (millis, % 2001 − 1000 ∈ [−1000, 1000]) summed exactly as BIGINT;
-    * the only float op is the final single division, so engines can't
-    * drift in fold order. `keep` thresholds the integer sum.
-    */
   /** The hashed-feature logit body shared by the whole classifier
     * family (quality_classifier, classifier_auc, lift_curve,
     * confusion_matrix, classifier_calibration — it was once copy-pasted
@@ -830,6 +813,23 @@ object TextQueries {
       lit(0L), (acc, x) => acc + x)
   }
 
+  /** fastText-style hashed-bag linear classifier inference — the
+    * quality/language FILTER MODEL tier of a training-data pipeline
+    * (Joulin et al., arXiv:1607.01759: bag of hashed n-gram buckets →
+    * linear layer), run as a pure per-document projection. Each token
+    * hashes into one of B=4096 buckets (the hashing trick — the model is
+    * a bounded weight table, not a vocabulary); the document logit is
+    * the mean bucket weight. Here the weight table is a deterministic
+    * md5 function of the bucket id so the oracle replays inference
+    * end-to-end; production swaps a TRAINED float array broadcast once
+    * per executor (the [[graft.functions.CentroidTopK]] pattern) —
+    * identical dataflow, zero shuffle either way.
+    *
+    * Cross-engine float contract: per-token weights are INTEGERS
+    * (millis, % 2001 − 1000 ∈ [−1000, 1000]) summed exactly as BIGINT;
+    * the only float op is the final single division, so engines can't
+    * drift in fold order. `keep` thresholds the integer sum.
+    */
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame = {
     val B = 4096
     Tables(spark, dir, "documents")

@@ -9,7 +9,7 @@ import java.nio.file.{AtomicMoveNotSupportedException, Files, LinkOption,
   *
   *  - the index root holds immutable SEGMENT dirs (`seg-<n>`, one per
   *    build/append batch), optional versioned EXTRA artifacts
-  *    (`<name>-g<n>`: a rewritten clusters table, a Bloom sketch file),
+  *    (`<name>-g<n>`: a rewritten clusters table, a pending-doc set),
   *    and ONE `manifest.json` naming exactly which of them are live;
   *  - writers stage new segments/extras under fresh names (never
   *    touching anything referenced), then COMMIT by atomically replacing

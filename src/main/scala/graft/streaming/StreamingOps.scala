@@ -64,13 +64,11 @@ object StreamingOps {
     * end-to-end production shape: per micro-batch,
     * [[graft.ext.DedupIndex.ingest]] (1) runs the full exact+near dedup
     * of the batch against the index (the same algorithm as the
-    * oracle-gated `dedup_incremental`), (2) folds the WHOLE batch into
-    * the index (near-ANY-earlier: dropped docs still block future
-    * near-dups) and (3) folds the batch's fingerprints into the Bloom
-    * artifact (capacity-compatible merge, O(batch) — never an O(index)
-    * rebuild per micro-batch); survivors append to `outDir` as
-    * parquet. Batches are processed serially by Structured Streaming, so index
-    * append/rebuild is race-free; the corpus text is never rescanned —
+    * oracle-gated `dedup_incremental`) and (2) folds the WHOLE batch
+    * into the index (near-ANY-earlier: dropped docs still block future
+    * near-dups); survivors append to `outDir` as parquet. Batches are
+    * processed serially by Structured Streaming, so index maintenance
+    * is race-free; the corpus text is never rescanned —
     * recurring cost is the batch pipeline plus two index shuffles
     * (the DedupIndex contract). Returns the started query.
     */
@@ -84,12 +82,9 @@ object StreamingOps {
           // cap-consistent step: survivors of THIS batch plus docs a
           // bucket crossing the ≤64 cap just resurrected (see
           // DedupIndex.ingest) — the accumulated sink equals the
-          // one-shot answer in every cap regime. maintainBloom folds the
-          // batch's fingerprints into the Bloom artifact inside the same
-          // call (O(batch) OR-merge off the batch frame ingest already
-          // checkpointed — never an O(index) rebuild per micro-batch).
-          graft.ext.DedupIndex.ingest(spark, batch, indexDir,
-            maintainBloom = true).write.mode("append").parquet(outDir)
+          // one-shot answer in every cap regime
+          graft.ext.DedupIndex.ingest(spark, batch, indexDir)
+            .write.mode("append").parquet(outDir)
         }
         () // foreachBatch wants Unit
       }
@@ -228,7 +223,6 @@ object StreamingOps {
     val staged = stagedTree(s"docs:$dir") { tmp =>
       val docs = graft.Tables(spark, dir, "documents").select("doc_id", "text")
       graft.ext.DedupIndex.build(docs.filter(col("doc_id") % 5 < 3), s"$tmp/idx0")
-      graft.ext.DedupIndex.writeBloom(spark, s"$tmp/idx0")
       val newDocs = docs.filter(col("doc_id") % 5 >= 3)
       val r = newDocs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       // same empty-input guard as stagedEventsInput: NULL min/max → 0

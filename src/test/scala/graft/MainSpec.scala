@@ -426,13 +426,13 @@ class MainSpec extends SparkSpec {
 
   test("index verb: build/status/append/compact lifecycle on a dedup index") {
     val idx = java.nio.file.Files.createTempDirectory("cli-idx").toString
-    // build over two-thirds of the corpus, bloom included
+    // build over two-thirds of the corpus: one segment, no extras
     val (rc1, o1) = capture(Main.Cli(action = "index", table = "dedup",
       dsn = dsn, path = idx, query = "doc_id % 3 < 2"))
     assert(rc1 == 0 && o1.exists(_.contains("built")))
     val (rcS, oS) = capture(Main.Cli(action = "index", table = "dedup",
       path = idx, op = "status"))
-    assert(rcS == 0 && oS.exists(s => s.contains("1 segment(s)") && s.contains("bloom")))
+    assert(rcS == 0 && oS.exists(s => s.contains("1 segment(s)") && !s.contains("extras")))
     // append the rest, then compact back to one segment
     val (rc2, o2) = capture(Main.Cli(action = "index", table = "dedup",
       dsn = dsn, path = idx, op = "append", query = "doc_id % 3 = 2"))

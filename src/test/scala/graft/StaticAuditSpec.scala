@@ -109,6 +109,15 @@ class StaticAuditSpec extends AnyFunSuite {
     assert(filesWith("GRAFT_CLOSURE_FAST_BUDGET").isEmpty)
   }
 
+  // index artifacts keep only what a reader reads: no query answers
+  // from a persisted dedup-index sketch, so maintaining one only costs
+  // every build, append and streamed micro-batch
+  test("no persisted dedup-index Bloom sketch") {
+    assert(filesWith("maintainBloom").isEmpty)
+    assert(filesWith("writeBloom").isEmpty)
+    assert(filesWith("extraName(\"bloom\"").isEmpty)
+  }
+
   // artifact and index commits share one atomic replace and one
   // recursive delete in graft.io; a second copy is how the manifest
   // writers drifted apart

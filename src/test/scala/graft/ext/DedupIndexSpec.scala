@@ -52,20 +52,18 @@ class DedupIndexSpec extends SparkSpec {
     assert((s1 ++ s2) == oneShot)
 
     // compaction folds the three segments into one; the index rows and
-    // the bloom extra both survive it
-    DedupIndex.writeBloom(spark, idxDir)
+    // the pending extra ingest committed both survive it
+    val root = s"$idxDir/dedup_index"
     val rowsBefore = DedupIndex.rows(spark, idxDir)
       .collect().map(_.toSeq).toSet
+    val pendingBefore = graft.io.SegmentLog.read(root).get.extras("pending")
     DedupIndex.compact(spark, idxDir)
-    val st = graft.io.SegmentLog.read(s"$idxDir/dedup_index").get
-    assert(st.segments.size == 1 && st.extras.contains("bloom"))
+    val st = graft.io.SegmentLog.read(root).get
+    assert(st.segments.size == 1 && st.extras == Map("pending" -> pendingBefore))
     assert(DedupIndex.rows(spark, idxDir).collect().map(_.toSeq).toSet == rowsBefore)
-    // the bloom pointer still resolves and keeps its no-false-negative
-    // contract over the (unchanged) fingerprint set
-    val (_, _, bf) = DedupIndex.loadBloomMeta(spark, idxDir)
-    val fps = DedupIndex.rows(spark, idxDir).select("fp")
-      .collect().map(_.getString(0))
-    assert(fps.nonEmpty && fps.forall(bf.mightContain))
+    // the pending pointer still resolves to a readable pending set
+    assert(spark.read.parquet(st.extraPath(root, "pending")).columns.toSeq ==
+      Seq("doc_id", "text", "fp", "sig"))
   }
 
   test("ingest resurrects pending docs when a batch pushes a bucket past the cap") {

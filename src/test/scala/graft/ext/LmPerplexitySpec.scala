@@ -69,8 +69,7 @@ class LmPerplexitySpec extends SparkSpec {
   test("persisted LmModel scores identically to the inline query") {
     val lmDir = java.nio.file.Files.createTempDirectory("lm-spec").toString
     val docs = (fluent ++ gibberish ++ oov).toDF("doc_id", "text", "lang")
-    val v = LmModel.train(docs, "en", lmDir)
-    assert(v > 0)
+    LmModel.train(docs, "en", lmDir)
     val persisted = LmModel.score(docs, lmDir, 3.42)
       .collect().map(r => (r.getLong(0), r.getDouble(3), r.getBoolean(5))).toSet
     val inline = TextQueries.lmPerplexityCore(docs, "en", 3.42)
