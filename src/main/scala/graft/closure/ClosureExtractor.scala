@@ -1,7 +1,9 @@
 package graft.closure
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PartitionLimit
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.meta.Catalog
@@ -53,8 +55,11 @@ final case class ConfigQuery(sourceTable: String, targetTable: String, template:
   * emptiness test is a counting job), so small frontiers get explicit
   * broadcast hints — the join plans straight to broadcast-hash with no
   * shuffle-and-measure step — while a genuinely huge key set still
-  * shuffles, and AQE stays on for its post-shuffle coalescing. Full rows
-  * are materialized exactly once per table at the end, one semi-join each.
+  * shuffles, and AQE stays on for its post-shuffle coalescing. A
+  * distributed run materializes full rows once per table at the end, one
+  * semi-join each; a closure the driver-local fast path finishes
+  * ([[tryRunAllLocal]]) already holds every result row, so its tables
+  * are built from those rows and the source is not scanned again.
   */
 class ClosureExtractor(
     catalog: Catalog,
@@ -90,16 +95,42 @@ class ClosureExtractor(
     * what the skipped depth-0 reverse expansions would have reached.
     */
   def extractAll(seeds: Seq[(String, DataFrame)],
-      preSeen: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] = {
-    val (tables, sizes) = runAllWithSizes(seeds, preSeen)
-    tables.map { case (table, keys) =>
-      // key sets are materialized and exactly counted by the fixpoint's
-      // final job, so small ones broadcast into the row-materializing
-      // semi-join with no exchange (huge closures still shuffle)
-      val keysH =
-        if (sizes.get(table).exists(_ <= BroadcastKeyLimit)) broadcast(keys) else keys
-      table -> loadTable(table).join(keysH, keys.columns.toSeq, "left_semi")
+      preSeen: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] =
+    fastPath(seeds, preSeen) match {
+      // the fast path probed whole rows: each table is a local relation
+      // of the rows it already holds — no second scan of the source
+      case d: ClosureExtractor.LocalDone =>
+        d.tables.map { case (t, lt) => t -> localRows(d.spark, lt) }
+      case o =>
+        val (tables, sizes) = runDistributed(seeds, preSeen, handoffOf(o))
+        tables.map { case (table, keys) =>
+          // key sets are materialized and exactly counted by the
+          // fixpoint's final job, so small ones broadcast into the
+          // row-materializing semi-join with no exchange (huge closures
+          // still shuffle)
+          val keysH =
+            if (sizes.get(table).exists(_ <= BroadcastKeyLimit)) broadcast(keys) else keys
+          table -> loadTable(table).join(keysH, keys.columns.toSeq, "left_semi")
+        }
     }
+
+  /** A finished fast path's rows of one table, in the column order the
+    * distributed semi-join yields (its USING keys first, then the rest in
+    * source order), so an artifact does not depend on which path ran.
+    * One partition per budget/cores rows: a full budget spreads over
+    * every core, while the point extract's ~100-row tables write one
+    * part file each. On 4 vCPUs, writing 8 such tables on 4 threads took
+    * about 360 ms at one part each against 680 ms at four (each part
+    * file is a task and a commit); at 50k rows a table still wrote no
+    * slower as one part under that concurrency.
+    */
+  private def localRows(spark: SparkSession, lt: ClosureExtractor.LocalTable): DataFrame = {
+    val pk = lt.keySchema.fieldNames.toSeq
+    val cores = spark.sparkContext.defaultParallelism
+    val parts = (lt.rows.size.toLong * cores + fastPathBudget - 1) / fastPathBudget
+    ClosureExtractor.localDf(spark, lt.schema, lt.rows)
+      .select((pk ++ lt.schema.fieldNames.filterNot(pk.contains)).map(col): _*)
+      .coalesce(parts.toInt.max(1).min(cores))
   }
 
   /** Returns table name → DataFrame of the table's PK columns (the key set
@@ -169,28 +200,30 @@ class ClosureExtractor(
     * iteration) with the key set pushed into the scan as an In filter
     * (parquet row-group/dictionary pruning applies), not a broadcast-
     * join fixpoint whose per-iteration scheduling barriers dwarf the
-    * data. The moment ANY collect would exceed `fastPathBudget` rows or
-    * a shape needs a composite-pk re-probe, it aborts and hands the
-    * distributed BFS its state at the last iteration boundary it
-    * completed ([[ClosureExtractor.LocalHandoff]]) — the finished
+    * data. Probes fetch WHOLE rows, so a finished run holds every result
+    * row ([[ClosureExtractor.LocalDone]]) and [[extractAll]] builds its
+    * tables from them instead of scanning the source a second time. The
+    * moment ANY collect would exceed `fastPathBudget` rows it aborts and
+    * hands the distributed BFS its state at the last iteration boundary
+    * it completed ([[ClosureExtractor.LocalHandoff]]) — the finished
     * iterations are not re-run; an abort before the first boundary
-    * restarts from the seeds. Semantics are EXACTLY
-    * [[runAllWithSizes]]'s (FastPathParitySpec pins local == handoff ==
-    * distributed at every abort point across policies, preSeen, and
-    * config queries; PropertySpec on random graphs):
+    * restarts from the seeds. Semantics are EXACTLY [[runDistributed]]'s
+    * (FastPathParitySpec pins local == handoff == distributed key sets
+    * and extracted row multisets at every abort point across policies,
+    * preSeen, and config queries; PropertySpec on random graphs):
     *
     *  - frontier KEYS drive reverse-key expansion — a phantom key (an
     *    FK value with no parent row) still probes its children, as the
     *    distributed key-set join does; frontier ROWS (the table's
     *    actual rows for those keys, duplicate-pk rows included) drive
-    *    forward-FK and config-attr expansion, matching the semi-join's
-    *    row multiset;
+    *    forward-FK and config-attr expansion and are the result rows,
+    *    matching the semi-join's row multiset;
     *  - a probe filtered on a pk COLUMN already returns the complete
     *    row set for every key it discovers (duplicate-pk siblings
-    *    share the filter value); any other filter column re-probes the
+    *    share the filter value), so a key's rows come from the first
+    *    such probe that found it; any other filter column re-probes the
     *    fresh keys by pk so a duplicate-pk sibling the filter missed
-    *    still expands — a composite-pk table needing such a re-probe
-    *    aborts to the distributed path;
+    *    still expands and is exported;
     *  - REFIRE: preSeen keys (minus current seeds) fire allowlisted
     *    reverse keys and config queries once at depth 0, exactly like
     *    the distributed incremental step.
@@ -198,9 +231,8 @@ class ClosureExtractor(
   private[closure] def tryRunAllLocal(seeds: Seq[(String, DataFrame)],
       preSeen: Map[String, DataFrame]): ClosureExtractor.LocalOutcome = {
     import scala.collection.mutable
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.StructType
-    import ClosureExtractor.{LocalDone, LocalHandoff, LocalRestart}
+    import scala.concurrent.Future
+    import ClosureExtractor.{LocalDone, LocalHandoff, LocalRestart, LocalTable}
     val spark = seeds.headOption.map(_._2.sparkSession)
       .getOrElse(return LocalRestart)
     // thread-safe remaining budget: probes within an iteration run
@@ -212,87 +244,126 @@ class ClosureExtractor(
     val budget = new java.util.concurrent.atomic.AtomicLong(fastPathBudget)
     def abort(why: String): Nothing =
       throw new ClosureExtractor.FastPathAbort(why)
-    // the ONE driver materialization of this path: limit-guarded — the
-    // plan ships at most remaining+1 rows, and one row past the
-    // remaining budget aborts to the distributed BFS (StaticAuditSpec
-    // pin)
+    // the ONE driver materialization of this path: one job over every
+    // partition, each shipping at most remaining+1 rows — so a probe
+    // ships at most partitions × (remaining+1) — and a result past the
+    // remaining budget aborts to the distributed BFS. Within the budget
+    // no partition reaches its cap, so the rows are the whole result.
+    // (A global `limit(n)` would plan a CollectLimit: two jobs, one
+    // partition first. StaticAuditSpec pins both.)
     def take(df: DataFrame): Array[Row] = {
-      val rows = df.limit(
+      val rows = PartitionLimit(df,
         math.min(budget.get() + 1, Int.MaxValue.toLong).toInt max 1).collect()
       if (budget.addAndGet(-rows.length) < 0) abort("row budget")
       rows
     }
-    // expansion columns per table: pk + forward-FK child cols + config attrs
-    val neededMemo = mutable.Map.empty[String, Seq[String]]
-    def needed(t: String): Seq[String] = neededMemo.getOrElseUpdate(t,
-      (catalog.pkOf(t) ++ catalog.foreignKeysOf(t).map(_.childCol) ++
-        configQueries.filter(_.sourceTable == t)
-          .flatMap(cq => ClosureExtractor.attrsOf(cq.template))).distinct)
-    val idxMemo = mutable.Map.empty[String, Map[String, Int]]
-    def idxOf(t: String): Map[String, Int] =
-      idxMemo.getOrElseUpdate(t, needed(t).zipWithIndex.toMap)
-    val pkIdxMemo = mutable.Map.empty[String, Array[Int]]
-    def keyOf(t: String, row: Row): Seq[Any] = {
-      val idx = pkIdxMemo.getOrElseUpdate(t, catalog.pkOf(t).map(idxOf(t)).toArray)
-      idx.toIndexedSeq.map(row.get)
-    }
+    // source schema per table (probes fetch whole rows in it)
+    val schemaMemo = mutable.Map.empty[String, StructType]
+    def schemaOf(t: String): StructType =
+      schemaMemo.getOrElseUpdate(t, loadTable(t).schema)
+    def idxOf(t: String, c: String): Int = schemaOf(t).fieldIndex(c)
+    val pkIdxMemo = mutable.Map.empty[String, IndexedSeq[Int]]
+    def keyOf(t: String, row: Row): Seq[Any] =
+      pkIdxMemo.getOrElseUpdate(t, catalog.pkOf(t).map(idxOf(t, _)).toIndexedSeq)
+        .map(row.get)
     val pkSchema = mutable.Map.empty[String, StructType]
     def recordSchema(t: String, df: DataFrame): Unit =
       if (!pkSchema.contains(t))
         pkSchema(t) = StructType(catalog.pkOf(t).map(c => df.schema(c)))
-    def keysDf(t: String, keys: Iterable[Seq[Any]]): DataFrame = {
-      val schema = pkSchema.getOrElse(t, abort(s"no schema for $t"))
-      val rows = new java.util.ArrayList[Row](keys.size)
-      keys.foreach(k => rows.add(Row.fromSeq(k)))
-      spark.createDataFrame(rows, schema)
-    }
-    // probe t's expansion columns with the filter pushed into the scan;
-    // the DataFrame is BUILT here (driver-thread Catalyst work, schema
+    def keySchema(t: String): StructType =
+      pkSchema.getOrElse(t, abort(s"no schema for $t"))
+    // probe t's whole rows with the filter pushed into the scan; the
+    // DataFrame is BUILT here (driver-thread Catalyst work, schema
     // recording) — only the collect runs on the probe pool
     def probeDf(t: String, filterCol: String, values: Seq[Any]): DataFrame = {
-      val df = loadTable(t).select(needed(t).map(col): _*)
+      val df = loadTable(t)
+      schemaMemo.getOrElseUpdate(t, df.schema)
       recordSchema(t, df)
       df.where(ClosureExtractor.inSet(df, filterCol, values))
     }
-    def probe(t: String, filterCol: String, values: Seq[Any]): Array[Row] =
-      if (values.isEmpty) Array.empty else take(probeDf(t, filterCol, values))
     // small pool for concurrent probe collects (the Engine.writeAll
     // precedent: Spark's scheduler is thread-safe for concurrent job
-    // submission); torn down with the run. Every probe job runs under a
-    // run-unique job group with interruptOnCancel so an abort can KILL
-    // in-flight probes — a plain shutdown() would let them run to
-    // completion and compete for cores with the distributed BFS that
-    // takes over right after the abort.
+    // submission); torn down with the run. EVERY collect of this path —
+    // seeds, preSeen, probes, re-probes — runs here under a run-unique
+    // job group with interruptOnCancel, behind the bounded await, so an
+    // abort can KILL in-flight probes (a plain shutdown() would let them
+    // run to completion and compete for cores with the distributed BFS
+    // that takes over right after the abort) and a hung one cannot block
+    // the driver.
     val probePool = java.util.concurrent.Executors.newFixedThreadPool(4)
     val probeEc =
       scala.concurrent.ExecutionContext.fromExecutorService(probePool)
     val probeGroup = s"graft-closure-fastpath-${java.util.UUID.randomUUID()}"
+    def submit(df: DataFrame): Future[Array[Row]] = Future {
+      // job group is thread-local: (re)set it on the pool thread per
+      // task so cancelJobGroup(probeGroup) reaches every probe's Spark
+      // job, and interrupts its collect thread
+      spark.sparkContext.setJobGroup(probeGroup,
+        "closure fast-path probe", interruptOnCancel = true)
+      take(df)
+    }(probeEc)
+    // BOUNDED await: a probe hung inside Spark (straggling scan, wedged
+    // source) must not block the driver forever — past the bound we
+    // abort, and the abort path cancels the job group so the hung job
+    // dies instead of riding on. The bound is far above any sane probe
+    // at fast-path scale (≤200k rows total).
+    def await(f: Future[Array[Row]]): Array[Row] =
+      try scala.concurrent.Await.result(f, ClosureExtractor.ProbeAwaitMax)
+      catch { case _: java.util.concurrent.TimeoutException =>
+        abort("probe await timeout") }
+    // independent collects: all submitted, then awaited in order
+    def collectAll(dfs: Seq[DataFrame]): Seq[Array[Row]] =
+      dfs.map(submit).map(await)
+    // the complete row multiset of each asked key set, one by-pk probe
+    // per table, concurrently: a single-column pk filters exactly; a
+    // composite pk filters on its first column and keeps the rows whose
+    // whole key was asked for
+    def rowsFor(asks: Seq[(String, Seq[Seq[Any]])]): Seq[Array[Row]] = {
+      val wanted = asks.filter(_._2.nonEmpty)
+      val got = wanted.map(_._1).zip(collectAll(wanted.map { case (t, ks) =>
+        probeDf(t, catalog.pkOf(t).head, ks.map(_.head).distinct) })).toMap
+      asks.map { case (t, ks) =>
+        got.get(t).fold(Array.empty[Row]) { rs =>
+          if (catalog.pkOf(t).size == 1) rs
+          else { val want = ks.toSet; rs.filter(r => want.contains(keyOf(t, r))) }
+        }
+      }
+    }
     val seen = mutable.Map.empty[String, mutable.HashSet[Seq[Any]]]
     val acc = mutable.Map.empty[String, mutable.ArrayBuffer[Seq[Any]]]
+    // the result rows of `acc`'s keys (each key's rows enter once, when
+    // the key does)
+    val accRows = mutable.Map.empty[String, mutable.ArrayBuffer[Row]]
     var preSizes = Map.empty[String, Long]
     // the last COMPLETED iteration boundary: its depth, and per table how
     // many keys it appended to `acc` that are still unexpanded (the
     // boundary's frontier is exactly that tail of each `acc` buffer)
     var boundary: Option[(Int, Map[String, Int])] = None
     try {
-      // seed key sets, deduped driver-side (== the distributed
-      // union().distinct())
-      val seedKeys: Map[String, IndexedSeq[Seq[Any]]] =
-        seeds.groupBy(_._1).map { case (t, ss) =>
-          val pkCols = catalog.pkOf(t).map(col)
-          val ks = mutable.LinkedHashSet.empty[Seq[Any]]
-          ss.foreach { case (_, df) =>
-            val sel = df.select(pkCols: _*)
-            recordSchema(t, sel)
-            take(sel).foreach(r => ks += r.toSeq)
-          }
-          t -> ks.toIndexedSeq
-        }
-      val pre: Map[String, Set[Seq[Any]]] = preSeen.map { case (t, df) =>
+      // seed and preSeen key sets, collected concurrently; seeds deduped
+      // driver-side (== the distributed union().distinct())
+      val seedSels = seeds.map { case (t, df) =>
         val sel = df.select(catalog.pkOf(t).map(col): _*)
         recordSchema(t, sel)
-        t -> take(sel).iterator.map(_.toSeq).toSet
+        t -> sel
       }
+      val preSels = preSeen.toSeq.map { case (t, df) =>
+        val sel = df.select(catalog.pkOf(t).map(col): _*)
+        recordSchema(t, sel)
+        t -> sel
+      }
+      val (seedRows, preRows) =
+        collectAll((seedSels ++ preSels).map(_._2)).splitAt(seedSels.size)
+      val seedKeys: Map[String, IndexedSeq[Seq[Any]]] =
+        seedSels.map(_._1).zip(seedRows).groupBy(_._1).map { case (t, rss) =>
+          val ks = mutable.LinkedHashSet.empty[Seq[Any]]
+          rss.foreach(_._2.foreach(r => ks += r.toSeq))
+          t -> ks.toIndexedSeq
+        }
+      val pre: Map[String, Set[Seq[Any]]] =
+        preSels.map(_._1).zip(preRows).map { case (t, rs) =>
+          t -> rs.iterator.map(_.toSeq).toSet
+        }.toMap
       preSizes = pre.map { case (t, ks) => t -> ks.size.toLong }
       // seen = seeds ∪ preSeen; acc starts from the delta seeds (every
       // seed table appears in the result, possibly with zero fresh keys)
@@ -305,54 +376,48 @@ class ClosureExtractor(
         }
         seen(t) = s
       }
-      // complete row set for a key set: trivial when the expansion needs
-      // nothing beyond the pk; else one by-pk probe (single-col pk only)
-      def rowsFor(t: String, keys: Seq[Seq[Any]]): Array[Row] = {
-        val pk = catalog.pkOf(t)
-        if (needed(t) == pk) keys.iterator.map(Row.fromSeq).toArray
-        else if (pk.size == 1) probe(t, pk.head, keys.map(_.head).distinct)
-        else abort(s"composite-pk re-probe: $t")
-      }
+      val seedAsks = seedKeys.toSeq.filter(_._2.nonEmpty)
       var frontier: Map[String, (Seq[Seq[Any]], Array[Row])] =
-        seedKeys.collect { case (t, ks) if ks.nonEmpty =>
-          t -> ((ks: Seq[Seq[Any]], rowsFor(t, ks)))
-        }
+        seedAsks.zip(rowsFor(seedAsks)).map { case ((t, ks), rs) =>
+          // every seed expands; only the delta seeds' rows are results
+          val old = pre.getOrElse(t, Set.empty)
+          accRows(t) = mutable.ArrayBuffer.from(rs.iterator.filterNot(r => old.contains(keyOf(t, r))))
+          t -> ((ks: Seq[Seq[Any]], rs))
+        }.toMap
       var depth = 0
       while (frontier.nonEmpty) {
         val candKeys = mutable.Map.empty[String, mutable.LinkedHashSet[Seq[Any]]]
-        val candRows = mutable.Map.empty[String, mutable.ArrayBuffer[Row]]
+        // per table: each key's complete rows, from the first complete
+        // probe (in scheduling order) that returned the key
+        val candRows = mutable.Map.empty[String, mutable.HashMap[Seq[Any], Array[Row]]]
         val rowsComplete = mutable.Map.empty[String, Boolean]
         // an iteration's probes are independent scans — scheduled here,
         // collected on the pool, and FOLDED in scheduling order below,
         // so candidate order (and everything downstream) is
         // deterministic regardless of completion interleaving
-        val pending = mutable.ArrayBuffer.empty[
-          (scala.concurrent.Future[Array[Row]], Array[Row] => Unit)]
+        val pending = mutable.ArrayBuffer.empty[(Future[Array[Row]], Array[Row] => Unit)]
         def schedule(df: DataFrame)(fold: Array[Row] => Unit): Unit =
-          pending += ((scala.concurrent.Future {
-            // job group is thread-local: (re)set it on the pool thread
-            // per task so cancelJobGroup(probeGroup) reaches every
-            // probe's Spark job, and interrupts its collect thread
-            spark.sparkContext.setJobGroup(probeGroup,
-              "closure fast-path probe", interruptOnCancel = true)
-            take(df)
-          }(probeEc), fold))
+          pending += ((submit(df), fold))
         def addCand(t: String, keys: IterableOnce[Seq[Any]], rows: Array[Row],
             complete: Boolean): Unit = {
           val ks = candKeys.getOrElseUpdate(t, mutable.LinkedHashSet.empty)
           var any = false
           keys.iterator.foreach { k => ks += k; any = true }
           if (any || rows.nonEmpty) {
-            candRows.getOrElseUpdate(t, mutable.ArrayBuffer.empty) ++= rows
+            if (complete) {
+              val byKey = candRows.getOrElseUpdate(t, mutable.HashMap.empty)
+              rows.groupBy(keyOf(t, _)).foreach { case (k, rs) =>
+                if (!byKey.contains(k)) byKey(k) = rs
+              }
+            }
             rowsComplete(t) = rowsComplete.getOrElse(t, true) && complete
           }
         }
-        def expandFksLocal(t: String, rows: Array[Row]): Unit = {
-          val idx = idxOf(t)
+        def expandFksLocal(t: String, rows: Array[Row]): Unit =
           catalog.foreignKeysOf(t).foreach { fk =>
             require(catalog.pkOf(fk.parentTable) == Seq(fk.parentCol),
               s"FK ${fk.name} must reference the parent PK")
-            val i = idx(fk.childCol)
+            val i = idxOf(t, fk.childCol)
             // pre-filter seen parents driver-side: an already-seen key
             // neither re-probes nor re-enters (the distributed anti-join)
             val vals = rows.iterator.map(_.get(i)).filter(_ != null)
@@ -367,7 +432,6 @@ class ClosureExtractor(
                 addCand(fk.parentTable, vals.map(Seq(_)), rs, complete = true)
               }
           }
-        }
         def expandRksLocal(t: String, keys: Seq[Seq[Any]], depth0: Boolean): Unit = {
           val pkPos = catalog.pkOf(t).zipWithIndex.toMap
           catalog.referenceKeysOf(t).filter(rk =>
@@ -384,8 +448,7 @@ class ClosureExtractor(
               }
           }
         }
-        def runConfigsLocal(t: String, attrRows: Array[Row]): Unit = {
-          val idx = idxOf(t)
+        def runConfigsLocal(t: String, attrRows: Array[Row]): Unit =
           configQueries.filter(_.sourceTable == t).foreach { cq =>
             require(runQuery != null, "configQueries need a runQuery function")
             val attrs = ClosureExtractor.attrsOf(cq.template)
@@ -393,7 +456,7 @@ class ClosureExtractor(
             val params: Array[Map[String, Any]] =
               if (attrs.isEmpty) Array(Map.empty[String, Any])
               else attrRows.iterator
-                .map(r => attrs.map(a => a -> r.get(idx(a))).toMap)
+                .map(r => attrs.map(a => a -> r.get(idxOf(t, a))).toMap)
                 .toArray.distinct
             ClosureExtractor.configSqls(cq, attrs, params).foreach { sql =>
               val out = runQuery(sql).select(targetPk.map(col): _*)
@@ -407,7 +470,6 @@ class ClosureExtractor(
               }
             }
           }
-        }
         frontier.foreach { case (t, (keys, rows)) =>
           expandFksLocal(t, rows)
           expandRksLocal(t, keys, depth0 = depth == 0)
@@ -418,29 +480,22 @@ class ClosureExtractor(
         // rows can attach to old keys — once, in the first iteration;
         // keys that are also current seeds were fired by the frontier
         // pass above
-        if (depth == 0) pre.foreach { case (t, preKs) =>
-          val probeKeys =
-            preKs.diff(seedKeys.getOrElse(t, IndexedSeq.empty).toSet).toSeq
-          expandRksLocal(t, probeKeys, depth0 = false)
-          if (configQueries.exists(_.sourceTable == t)) {
-            val needAttrs = configQueries.filter(_.sourceTable == t)
-              .exists(cq => ClosureExtractor.attrsOf(cq.template).nonEmpty)
-            val rs = if (needAttrs) rowsFor(t, probeKeys) else Array.empty[Row]
-            runConfigsLocal(t, rs)
+        if (depth == 0) {
+          val refire = pre.toSeq.map { case (t, preKs) =>
+            t -> preKs.diff(seedKeys.getOrElse(t, IndexedSeq.empty).toSet).toSeq
+          }
+          val attrAsks = refire.filter { case (t, _) =>
+            configQueries.exists(cq => cq.sourceTable == t &&
+              ClosureExtractor.attrsOf(cq.template).nonEmpty)
+          }
+          val attrRows = attrAsks.map(_._1).zip(rowsFor(attrAsks)).toMap
+          refire.foreach { case (t, probeKeys) =>
+            expandRksLocal(t, probeKeys, depth0 = false)
+            runConfigsLocal(t, attrRows.getOrElse(t, Array.empty[Row]))
           }
         }
-        // await all probes in scheduling order and fold sequentially.
-        // BOUNDED await: a probe hung inside Spark (straggling scan,
-        // wedged source) must not block the driver forever — past the
-        // bound we abort, and the abort path cancels the job group so
-        // the hung job dies instead of riding on. The bound is far
-        // above any sane probe at fast-path scale (≤200k rows total).
-        pending.foreach { case (fut, fold) =>
-          fold(try scala.concurrent.Await.result(fut,
-              ClosureExtractor.ProbeAwaitMax)
-            catch { case _: java.util.concurrent.TimeoutException =>
-              abort("probe await timeout") })
-        }
+        // await all probes in scheduling order and fold sequentially
+        pending.foreach { case (fut, fold) => fold(await(fut)) }
         // fresh keys → seen/acc for EVERY table before any re-probe:
         // that completes the boundary, so an abort inside a re-probe
         // below still hands a whole iteration to the distributed BFS
@@ -457,20 +512,24 @@ class ClosureExtractor(
         depth += 1
         boundary = Some((depth, fresh.iterator.map { case (t, f) => t -> f.size }.toMap))
         // frontier rows are the collected probe rows when complete for
-        // every fresh key, else one by-pk re-probe
-        frontier = fresh.iterator.map { case (t, f) =>
-          val rows =
-            if (rowsComplete.getOrElse(t, true)) {
-              val freshSet = f.toSet
-              candRows.getOrElse(t, mutable.ArrayBuffer.empty)
-                .filter(r => freshSet.contains(keyOf(t, r))).toArray
-            } else rowsFor(t, f)
-          t -> ((f: Seq[Seq[Any]], rows))
-        }.toMap
+        // every fresh key, else one by-pk re-probe per table — all
+        // re-probes of the boundary run concurrently
+        val (complete, reprobe) =
+          fresh.toSeq.partition { case (t, _) => rowsComplete.getOrElse(t, true) }
+        frontier = (complete.map { case (t, f) =>
+          val byKey = candRows.getOrElse(t, mutable.HashMap.empty)
+          t -> ((f: Seq[Seq[Any]], f.iterator.flatMap(byKey.getOrElse(_, Array.empty[Row])).toArray))
+        } ++ reprobe.zip(rowsFor(reprobe)).map { case ((t, f), rs) =>
+          t -> ((f: Seq[Seq[Any]], rs))
+        }).toMap
+        frontier.foreach { case (t, (_, rows)) =>
+          accRows.getOrElseUpdate(t, mutable.ArrayBuffer.empty) ++= rows
+        }
       }
-      LocalDone(acc.iterator.map { case (t, ks) => t -> keysDf(t, ks) }.toMap,
-        acc.iterator.map { case (t, ks) => t -> ks.size.toLong }.toMap,
-        collected = fastPathBudget - budget.get())
+      LocalDone(spark, acc.iterator.map { case (t, ks) =>
+        t -> LocalTable(keySchema(t), ks.toVector, schemaOf(t),
+          accRows.get(t).fold(Vector.empty[Row])(_.toVector))
+      }.toMap, collected = fastPathBudget - budget.get())
     } catch {
       case _: ClosureExtractor.FastPathAbort => boundary match {
         case None => LocalRestart
@@ -480,7 +539,8 @@ class ClosureExtractor(
           def split(keep: (mutable.ArrayBuffer[Seq[Any]], Int) => Iterable[Seq[Any]]) =
             acc.iterator.map { case (t, ks) =>
               val part = keep(ks, unexpanded.getOrElse(t, 0))
-              t -> ((keysDf(t, part), part.size.toLong))
+              t -> ((ClosureExtractor.localDf(spark, keySchema(t),
+                part.map(Row.fromSeq)), part.size.toLong))
             }.toMap
           LocalHandoff(d,
             expanded = split(_.dropRight(_)),
@@ -554,20 +614,36 @@ class ClosureExtractor(
     * CLI `extract -delta ... -delta-full`).
     */
   def runAllWithSizes(seeds: Seq[(String, DataFrame)],
-      preSeen: Map[String, DataFrame] = Map.empty): (Map[String, DataFrame], Map[String, Long]) = {
-    // SMALL-CLOSURE FAST PATH: when the whole traversal fits the local
-    // row budget, run it driver-side (tryRunAllLocal) — one pushed-down
-    // In-filter scan per (edge, iteration) instead of per-edge
-    // broadcast/checkpoint jobs with their AQE stage barriers. The moment
-    // a probe overflows the budget it hands over its last completed
-    // iteration boundary, and the fixpoint below continues from there.
-    val handoff: Option[ClosureExtractor.LocalHandoff] =
-      if (fastPathBudget <= 0) None
-      else tryRunAllLocal(seeds, preSeen) match {
-        case d: ClosureExtractor.LocalDone => return (d.keys, d.sizes)
-        case h: ClosureExtractor.LocalHandoff => Some(h)
-        case ClosureExtractor.LocalRestart => None
-      }
+      preSeen: Map[String, DataFrame] = Map.empty): (Map[String, DataFrame], Map[String, Long]) =
+    fastPath(seeds, preSeen) match {
+      case d: ClosureExtractor.LocalDone => (d.keys, d.sizes)
+      case o => runDistributed(seeds, preSeen, handoffOf(o))
+    }
+
+  /** SMALL-CLOSURE FAST PATH: when the whole traversal fits the local row
+    * budget, run it driver-side ([[tryRunAllLocal]]) — one pushed-down
+    * In-filter scan per (edge, iteration) instead of per-edge
+    * broadcast/checkpoint jobs with their AQE stage barriers. The moment
+    * a probe overflows the budget it hands over its last completed
+    * iteration boundary, and [[runDistributed]] continues from there.
+    */
+  private def fastPath(seeds: Seq[(String, DataFrame)],
+      preSeen: Map[String, DataFrame]): ClosureExtractor.LocalOutcome =
+    if (fastPathBudget <= 0) ClosureExtractor.LocalRestart
+    else tryRunAllLocal(seeds, preSeen)
+
+  private def handoffOf(o: ClosureExtractor.LocalOutcome): Option[ClosureExtractor.LocalHandoff] =
+    o match {
+      case h: ClosureExtractor.LocalHandoff => Some(h)
+      case _ => None
+    }
+
+  /** The distributed fixpoint behind [[runAllWithSizes]]: from the seeds,
+    * or from the last iteration boundary a fast-path `handoff` completed.
+    */
+  private def runDistributed(seeds: Seq[(String, DataFrame)],
+      preSeen: Map[String, DataFrame],
+      handoff: Option[ClosureExtractor.LocalHandoff]): (Map[String, DataFrame], Map[String, Long]) = {
     // Measured A/B at sf0.1: keeping AQE ON for the fixpoint wins — its
     // post-shuffle coalescing collapses the 32-partition iteration
     // shuffles to single tasks, which outweighs the extra stage-job
@@ -933,27 +1009,32 @@ object ClosureExtractor {
 
   /** Row budget for the driver-local BFS fast path (see
     * [[ClosureExtractor.runAllWithSizes]]): the local traversal may
-    * collect at most this many key/edge tuples TOTAL across the whole
-    * run; one row more and it aborts, handing its last completed
-    * iteration boundary to the distributed BFS. Calibrated well under
-    * [[graft.SparkUtil.BroadcastRowLimit]]: a key set this size is
-    * trivially broadcastable, so the local path never handles anything
-    * the distributed path wouldn't have broadcast anyway. 0 disables the
-    * fast path (specs use this to pin local == distributed).
+    * collect at most this many source rows TOTAL across the whole run —
+    * whole rows since probes fetch every column, plus the seed and
+    * preSeen key rows; one row more and it aborts, handing its last
+    * completed iteration boundary to the distributed BFS. Calibrated
+    * well under [[graft.SparkUtil.BroadcastRowLimit]]: a key set this
+    * size is trivially broadcastable, so the local path never handles
+    * anything the distributed path wouldn't have broadcast anyway. 0
+    * disables the fast path (specs use this to pin local ==
+    * distributed).
     *
     * Why the fast path stays, measured on the lifecycle benchmark's sf0.1
-    * data (4 vCPUs, local[4]): point cones of about 470 rows take
-    * 0.7–1.2 s local against 4.0–5.3 s distributed, while 230k-row
-    * cones take 6.2–7.6 s local (with the budget raised to admit them)
+    * data (4 vCPUs, local[4]): a point cone of about 420 rows closes in
+    * 0.8–1.1 s warm on the fast path (13 probe jobs) and its whole
+    * extract, writes included, takes 1.35–1.6 s; such cones took 4.0–5.3
+    * s to close distributed. 230k-row cones took 6.2–7.6 s local (with
+    * the budget raised to admit them, before probes fetched whole rows)
     * against 5.1–6.1 s distributed — so small closures run locally and
     * large ones keep the shuffling plan, past the rows they share.
     */
   val FastPathBudget: Long = 200000L
 
-  /** Upper bound on any single fast-path probe await — see the bounded
-    * await in [[tryRunAllLocal]]. Generous by construction: the whole
-    * fast path is capped at [[FastPathBudget]] rows. Other waits on
-    * seed-bounded key-set collects reuse it.
+  /** Upper bound on any single fast-path collect await — seeds, preSeen,
+    * probes and re-probes all wait through the bounded await in
+    * [[tryRunAllLocal]]. Generous by construction: the whole fast path is
+    * capped at [[FastPathBudget]] rows. Other waits on seed-bounded
+    * key-set collects reuse it.
     */
   val ProbeAwaitMax: scala.concurrent.duration.FiniteDuration =
     scala.concurrent.duration.Duration(15, java.util.concurrent.TimeUnit.MINUTES)
@@ -1035,10 +1116,28 @@ object ClosureExtractor {
 
   /** Where the driver-local fast path stopped ([[tryRunAllLocal]]). */
   private[closure] sealed trait LocalOutcome
-  /** Finished within budget: result key sets, their sizes, and the rows
-    * the run collected. */
-  private[closure] final case class LocalDone(keys: Map[String, DataFrame],
-      sizes: Map[String, Long], collected: Long) extends LocalOutcome
+  /** One result table of a finished fast path: its key set (in the pk
+    * columns' `keySchema`) and the complete row multiset of those keys
+    * (in the source table's `schema`).
+    */
+  private[closure] final case class LocalTable(keySchema: StructType,
+      keys: Seq[Seq[Any]], schema: StructType, rows: Seq[Row])
+  /** Finished within budget: every result table, and the rows the run
+    * collected. */
+  private[closure] final case class LocalDone(spark: SparkSession,
+      tables: Map[String, LocalTable], collected: Long) extends LocalOutcome {
+    def keys: Map[String, DataFrame] = tables.map { case (t, lt) =>
+      t -> localDf(spark, lt.keySchema, lt.keys.map(Row.fromSeq)) }
+    def sizes: Map[String, Long] = tables.map { case (t, lt) => t -> lt.keys.size.toLong }
+  }
+
+  /** A local relation of driver-held rows. */
+  private[closure] def localDf(spark: SparkSession, schema: StructType,
+      rows: Iterable[Row]): DataFrame = {
+    val list = new java.util.ArrayList[Row](rows.size)
+    rows.foreach(list.add)
+    spark.createDataFrame(list, schema)
+  }
   /** Aborted after completing the iterations before `depth`. Per table
     * (key set, exact size): `expanded` result keys have had every
     * expansion run, `frontier` result keys (fresh at `depth`) have had

@@ -36,9 +36,11 @@ class StaticAuditSpec extends AnyFunSuite {
   // bounded metadata:
   //   Main            — CLI presentation of already-aggregated results
   //   ClosureExtractor— frontier COUNTS + config-query parameter tuples
-  //                     + the fast-path limit-guarded take (one row
-  //                     past fastPathBudget it aborts and hands its
-  //                     last completed iteration to the distributed BFS)
+  //                     + the fast-path take: one job, each partition
+  //                     capped at remaining+1 rows, so a probe ships at
+  //                     most partitions × (remaining+1); past the
+  //                     remaining fastPathBudget it aborts and hands its
+  //                     last completed iteration to the distributed BFS
   //   AnnIndex        — probe shortlist (k×nprobe rows)
   //   DedupQueries    — bm25-feedback doc shortlist (≤10 ids)
   //   EventQueries    — calendar rollup + attribution transition matrix
@@ -103,6 +105,13 @@ class StaticAuditSpec extends AnyFunSuite {
 
   test("SPARK_GRAFT_CPUS is read only by Sessions") {
     assert(filesWith("SPARK_GRAFT_CPUS").keySet == Set("graft/Sessions.scala"))
+  }
+
+  // a global limit's CollectLimit scans one partition in a first job and
+  // the rest in a second; the fast path caps each partition instead
+  // (graftbridge.PartitionLimit), one job per probe
+  test("no .limit( feeds a .collect() in ClosureExtractor") {
+    assert(filesWith(".limit(").get("graft/closure/ClosureExtractor.scala").isEmpty)
   }
 
   test("the closure fast-path budget has no env override") {

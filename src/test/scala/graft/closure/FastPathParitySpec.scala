@@ -1,15 +1,17 @@
 package graft.closure
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.meta.{Catalog, FkEdge, TableMeta}
 
 /** Pins the driver-local fast path (`ClosureExtractor.tryRunAllLocal`)
   * to the distributed BFS: same catalog/seeds/policy/preSeen must yield
-  * IDENTICAL key sets whether the traversal runs locally (default
-  * budget), distributed (`fastPathBudget = 0`), or aborts mid-run and
-  * hands its last completed iteration boundary to the distributed BFS.
+  * IDENTICAL key sets, and `extractAll` IDENTICAL row multisets (the
+  * fast path writes the rows it fetched, the distributed path semi-joins
+  * the source), whether the traversal runs locally (default budget),
+  * distributed (`fastPathBudget = 0`), or aborts mid-run and hands its
+  * last completed iteration boundary to the distributed BFS.
   * The abort budget sweeps every collect point of each fixture — before
   * the first boundary (restart from the seeds), inside an iteration's
   * probes, and inside a fresh-key re-probe — so every handoff state the
@@ -50,8 +52,17 @@ class FastPathParitySpec extends SparkSpec {
   private def tables: Map[String, DataFrame] =
     Map("user" -> user, "project" -> project, "comment" -> comment)
 
-  /** Key sets from every execution regime; asserts they agree and
-    * returns the (shared) result keyed by table.
+  /** `extractAll`'s tables: column names, and the row multiset as a
+    * sorted list (duplicate rows count).
+    */
+  private def extracted(ex: ClosureExtractor, seeds: Seq[(String, DataFrame)],
+      preSeen: Map[String, DataFrame]): Map[String, (Seq[String], Seq[Row])] =
+    ex.extractAll(seeds, preSeen).map { case (t, df) =>
+      t -> ((df.columns.toSeq, df.collect().toSeq.sortBy(_.toString)))
+    }
+
+  /** Key sets and extracted rows from every execution regime; asserts
+    * they agree and returns the (shared) key sets keyed by table.
     */
   private def allRegimes(
       cat: Catalog, tbl: String => DataFrame, policy: TraversalPolicy,
@@ -64,9 +75,13 @@ class FastPathParitySpec extends SparkSpec {
     def run(budget: Long): Map[String, Set[Seq[Any]]] =
       extractor(budget).runAll(seeds, preSeen)
         .map { case (t, df) => t -> df.collect().map(_.toSeq).toSet }
+    def rowsOf(budget: Long) = extracted(extractor(budget), seeds, preSeen)
     val fast = run(ClosureExtractor.FastPathBudget)
     val dist = run(0L)
     assert(fast == dist, s"fast != distributed:\n fast=$fast\n dist=$dist")
+    val distRows = rowsOf(0L)
+    assert(rowsOf(ClosureExtractor.FastPathBudget) == distRows,
+      s"fast rows != distributed:\n dist=$distRows")
     // one budget per collect point: budget b aborts at the first collect
     // that takes the run past b rows, and `rows` is where it finishes
     val rows = extractor(ClosureExtractor.FastPathBudget)
@@ -75,6 +90,7 @@ class FastPathParitySpec extends SparkSpec {
       val aborted = run(b)
       assert(aborted == dist,
         s"abort at budget $b of $rows != distributed:\n ab=$aborted\n dist=$dist")
+      assert(rowsOf(b) == distRows, s"abort at budget $b of $rows: rows != distributed")
     }
     fast
   }
@@ -234,5 +250,72 @@ class FastPathParitySpec extends SparkSpec {
       Seq("b" -> b))
     assert(out("a") == Set(Seq(99L)), s"phantom key lost: $out")
     assert(out("c") == Set(Seq(20L)), s"phantom children lost: $out")
+  }
+
+  test("parity on duplicate-pk siblings whose payloads differ") {
+    // item 5 and dim 7 are each two rows with DIFFERENT payloads. item is
+    // reached by a reverse probe on a non-pk column that sees only one
+    // 5-sibling (the by-pk re-probe must fetch the other), and dim by two
+    // forward probes in the same iteration (each dim row is exported
+    // once, from the first of them) — both siblings of each, once each,
+    // as the semi-join exports them
+    val ord = Seq((1L, "o1"), (2L, "o2")).toDF("id", "note")
+    val item = Seq((5L, 1L, 7L, 7L, "red"), (5L, 2L, 8L, 7L, "blue"),
+      (6L, 1L, 7L, 8L, "green")).toDF("id", "ord_id", "dim_a", "dim_b", "color")
+    val dim = Seq((7L, "x"), (7L, "y"), (8L, "z")).toDF("id", "label")
+    val cat = Catalog(
+      Map("ord" -> TableMeta("ord", Seq("id")),
+        "item" -> TableMeta("item", Seq("id")),
+        "dim" -> TableMeta("dim", Seq("id"))),
+      edges = Seq(
+        FkEdge("item_ord_fkey", "item", "ord_id", "ord", "id"),
+        FkEdge("item_dim_a_fkey", "item", "dim_a", "dim", "id"),
+        FkEdge("item_dim_b_fkey", "item", "dim_b", "dim", "id")))
+    val tbl = Map("ord" -> ord, "item" -> item, "dim" -> dim)
+    val seeds = Seq("ord" -> ord.filter(col("id") === 1))
+    val out = allRegimes(cat, tbl(_), TraversalPolicy(), seeds)
+    assert(out("item") == Set(Seq(5L), Seq(6L)), s"$out")
+    val rows = extracted(new ClosureExtractor(cat, tbl(_)), seeds, Map.empty)
+    assert(rows("item")._2.map(_.getString(4)).sorted == Seq("blue", "green", "red"))
+    assert(rows("dim")._2.map(_.getString(1)) == Seq("x", "y", "z"))
+    assert(rows("ord")._2.map(_.getString(1)) == Seq("o1", "o2"))
+  }
+
+  test("whole rows round-trip every column type the semi-join exports") {
+    import java.time.LocalDateTime
+    import org.apache.spark.sql.types._
+    // µs timestamps (session-UTC and zone-less), dates, decimals, nulls
+    // and non-ASCII strings — the last also as a pk probed by value
+    val typed = spark.createDataFrame(java.util.Arrays.asList(
+      Row("ключ-1", java.sql.Timestamp.valueOf("2024-02-29 23:59:59.123456"),
+        LocalDateTime.of(1999, 12, 31, 23, 59, 59, 987654000),
+        java.sql.Date.valueOf("1970-01-01"), new java.math.BigDecimal("-1234.5678"),
+        "héllo ☃ 日本"),
+      Row("ключ-2", null, null, null, null, null),
+      Row("ключ-3", java.sql.Timestamp.valueOf("1900-01-01 00:00:00.000001"),
+        LocalDateTime.of(2100, 1, 1, 0, 0, 0, 1000),
+        java.sql.Date.valueOf("1000-06-15"), new java.math.BigDecimal("0.0001"), "")),
+      StructType(Seq(
+        StructField("k", StringType), StructField("ts", TimestampType),
+        StructField("ntz", TimestampNTZType), StructField("d", DateType),
+        StructField("amt", DecimalType(12, 4)), StructField("s", StringType))))
+    val ref = Seq((1L, "ключ-1"), (2L, "ключ-2"), (3L, "ключ-3"), (4L, "ключ-1"))
+      .toDF("id", "typed_k")
+    val cat = Catalog(
+      Map("ref" -> TableMeta("ref", Seq("id")), "typed" -> TableMeta("typed", Seq("k"))),
+      edges = Seq(FkEdge("ref_typed_fkey", "ref", "typed_k", "typed", "k")))
+    val tbl = Map("ref" -> ref, "typed" -> typed)
+    // typed rows arrive through the forward probe, and as seeds through
+    // the by-pk row probe
+    val seedSets = Seq(Seq("ref" -> ref), Seq("typed" -> typed.filter(col("k") =!= "ключ-2")))
+    seedSets.foreach { seeds =>
+      allRegimes(cat, tbl(_), TraversalPolicy(), seeds)
+      val got = extracted(new ClosureExtractor(cat, tbl(_)), seeds, Map.empty)("typed")
+      val want = seeds.head._1 match {
+        case "ref" => typed.collect().toSeq
+        case _ => typed.filter(col("k") =!= "ключ-2").collect().toSeq
+      }
+      assert(got == ((typed.columns.toSeq, want.sortBy(_.toString))), s"$got")
+    }
   }
 }

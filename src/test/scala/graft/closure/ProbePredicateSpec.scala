@@ -51,11 +51,13 @@ class ProbePredicateSpec extends SparkSpec {
         .runAll(Seq("parent" -> parent))
       // the depth-0 reverse-key probe of all 12k parents finds every child
       assert(out("child").count() == n)
-      // listener events are delivered asynchronously
+      // listener events are delivered asynchronously; the seeds' by-pk
+      // row probe carries 12k keys too, so pick the child probe
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       def probe: Option[QueryExecution] = {
         import scala.jdk.CollectionConverters._
-        seen.asScala.find(qe => inSets(qe.optimizedPlan).exists(_.hset.size >= 10000))
+        seen.asScala.find(qe => inSets(qe.optimizedPlan).exists(s =>
+          s.hset.size >= 10000 && s.child.references.exists(_.name == "parent_id")))
       }
       while (probe.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
       val qe = probe.getOrElse(fail("no fast-path probe with 10k+ keys ran"))
