@@ -1,10 +1,11 @@
 package graft.closure
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PartitionLimit
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.CollectionAccumulator
 
 import graft.meta.Catalog
 
@@ -244,16 +245,13 @@ class ClosureExtractor(
     val budget = new java.util.concurrent.atomic.AtomicLong(fastPathBudget)
     def abort(why: String): Nothing =
       throw new ClosureExtractor.FastPathAbort(why)
-    // the ONE driver materialization of this path: one job over every
-    // partition, each shipping at most remaining+1 rows — so a probe
-    // ships at most partitions × (remaining+1) — and a result past the
-    // remaining budget aborts to the distributed BFS. Within the budget
-    // no partition reaches its cap, so the rows are the whole result.
-    // (A global `limit(n)` would plan a CollectLimit: two jobs, one
-    // partition first. StaticAuditSpec pins both.)
+    // the ONE driver materialization of this path
+    // ([[ClosureExtractor.collectAtMost]]: one job, and a probe ships at
+    // most remaining + partitions rows); a result past the remaining
+    // budget aborts to the distributed BFS
     def take(df: DataFrame): Array[Row] = {
-      val rows = PartitionLimit(df,
-        math.min(budget.get() + 1, Int.MaxValue.toLong).toInt max 1).collect()
+      val rows = ClosureExtractor.collectAtMost(df, budget.get() max 0L)
+        .getOrElse(abort("row budget"))
       if (budget.addAndGet(-rows.length) < 0) abort("row budget")
       rows
     }
@@ -1113,6 +1111,53 @@ object ClosureExtractor {
     set.fold(df(column).isin(values: _*))(s =>
       ColumnBridge.column(InSet(ColumnBridge.expression(df(column)), s)))
   }
+
+  /** `df`'s rows when it has at most `max` of them, else None: what every
+    * fast-path probe collects. One job over every partition, and the
+    * driver receives at most `max` + partitions rows however large the
+    * result: each partition counts its rows up to `max`+1 and ships them
+    * only when they fit its share, ceil((`max`+1) / partitions); a
+    * partition past its share ships just its count. An overflowing
+    * result is thus known without being shipped. When a skewed result
+    * fits `max` but some partition held more than its share, a second
+    * job fetches exactly those partitions, whose counts are then exact.
+    * (A global `limit(n)` would plan a CollectLimit: one partition in a
+    * first job, the rest in a second, each partition shipping n rows.)
+    */
+  private[closure] def collectAtMost(df: DataFrame, max: Long): Option[Array[Row]] = {
+    import scala.jdk.CollectionConverters._
+    val overShare = df.sparkSession.sparkContext.collectionAccumulator[(Int, Long)]
+    def run(f: Iterator[Row] => Iterator[Row]): Array[Row] =
+      df.mapPartitions(f)(Encoders.row(df.schema)).collect()
+    val rows = run(shareOf(max, overShare))
+    val counts = overShare.value.asScala.toMap
+    val rest = counts.values.sum
+    if (rows.length + rest > max) None
+    else if (counts.isEmpty) Some(rows)
+    // a count mismatch means the scan's partitions changed in between
+    else Some(run(partitionsOf(counts))).filter(_.length == rest).map(rows ++ _)
+  }
+
+  /** One partition's rows when they fit its share of `max`, else none
+    * and its row count (up to `max`+1) in `overShare`. */
+  private def shareOf(max: Long, overShare: CollectionAccumulator[(Int, Long)])(
+      rows: Iterator[Row]): Iterator[Row] = {
+    val task = TaskContext.get()
+    val share = (max + task.numPartitions()) / task.numPartitions()
+    val held = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var n = 0L
+    while (n <= max && rows.hasNext) {
+      val r = rows.next()
+      if (n < share) held += r
+      n += 1
+    }
+    if (n <= share) held.iterator
+    else { overShare.add((task.partitionId(), n)); Iterator.empty }
+  }
+
+  /** The rows of the partitions in `counts`, each up to its count. */
+  private def partitionsOf(counts: Map[Int, Long])(rows: Iterator[Row]): Iterator[Row] =
+    counts.get(TaskContext.getPartitionId()).fold(Iterator.empty[Row])(n => rows.take(n.toInt))
 
   /** Where the driver-local fast path stopped ([[tryRunAllLocal]]). */
   private[closure] sealed trait LocalOutcome

@@ -36,9 +36,10 @@ class StaticAuditSpec extends AnyFunSuite {
   // bounded metadata:
   //   Main            — CLI presentation of already-aggregated results
   //   ClosureExtractor— frontier COUNTS + config-query parameter tuples
-  //                     + the fast-path take: one job, each partition
-  //                     capped at remaining+1 rows, so a probe ships at
-  //                     most partitions × (remaining+1); past the
+  //                     + the fast-path take (collectAtMost): one job,
+  //                     each partition shipping its rows only within its
+  //                     share of the remaining budget, so a probe ships
+  //                     at most remaining + partitions rows; past the
   //                     remaining fastPathBudget it aborts and hands its
   //                     last completed iteration to the distributed BFS
   //   AnnIndex        — probe shortlist (k×nprobe rows)
@@ -108,8 +109,9 @@ class StaticAuditSpec extends AnyFunSuite {
   }
 
   // a global limit's CollectLimit scans one partition in a first job and
-  // the rest in a second; the fast path caps each partition instead
-  // (graftbridge.PartitionLimit), one job per probe
+  // the rest in a second, each partition shipping up to the limit; the
+  // fast path's collectAtMost runs one job and ships each partition's
+  // rows only within its share of the budget
   test("no .limit( feeds a .collect() in ClosureExtractor") {
     assert(filesWith(".limit(").get("graft/closure/ClosureExtractor.scala").isEmpty)
   }

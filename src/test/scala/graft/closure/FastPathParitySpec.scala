@@ -231,6 +231,39 @@ class FastPathParitySpec extends SparkSpec {
     assert(out("ref") == Set(Seq(100L), Seq(200L)), s"$out")
   }
 
+  test("parity on composite-pk siblings reached by a non-pk probe and as seeds") {
+    // line's pk (k1, k2) = (1, 1) is two rows with different payloads,
+    // and (1, 2) shares their k1. usr 1's reverse probe on usr_id sees
+    // only the "a" sibling, so the composite by-pk re-probe, which
+    // filters on k1 alone, must keep "b" and drop "c". Seeding (2, 1)
+    // runs the same re-probe for the seeds' rows: "d" and "e", not "f".
+    val usr = Seq((1L, "u1"), (2L, "u2"), (3L, "u3")).toDF("id", "name")
+    val line = Seq((1L, 1L, 1L, 100L, "a"), (1L, 1L, 2L, 200L, "b"),
+      (1L, 2L, 2L, 300L, "c"), (2L, 1L, 3L, 100L, "d"), (2L, 1L, 3L, 400L, "e"),
+      (2L, 2L, 3L, 400L, "f")).toDF("k1", "k2", "usr_id", "dim_id", "note")
+    val dim = Seq(100L, 200L, 300L, 400L).map(i => (i, s"d$i")).toDF("id", "label")
+    val cat = Catalog(
+      Map("usr" -> TableMeta("usr", Seq("id")),
+        "line" -> TableMeta("line", Seq("k1", "k2")),
+        "dim" -> TableMeta("dim", Seq("id"))),
+      edges = Seq(
+        FkEdge("line_usr_fkey", "line", "usr_id", "usr", "id"),
+        FkEdge("line_dim_fkey", "line", "dim_id", "dim", "id")))
+    val tbl = Map("usr" -> usr, "line" -> line, "dim" -> dim)
+    def notes(seeds: Seq[(String, DataFrame)]) =
+      extracted(new ClosureExtractor(cat, tbl(_)), seeds, Map.empty)("line")._2
+        .map(_.getAs[String]("note"))
+    val fromUsr = Seq("usr" -> usr.filter(col("id") === 1))
+    val out = allRegimes(cat, tbl(_), TraversalPolicy(), fromUsr)
+    assert(out("line") == Set(Seq(1L, 1L)), s"$out")
+    assert(out("dim") == Set(Seq(100L), Seq(200L)), s"$out")
+    assert(notes(fromUsr) == Seq("a", "b"))
+    val fromLine = Seq("line" -> line.filter(col("k1") === 2 && col("k2") === 1))
+    val seeded = allRegimes(cat, tbl(_), TraversalPolicy(), fromLine)
+    assert(seeded("dim") == Set(Seq(100L), Seq(400L)), s"$seeded")
+    assert(notes(fromLine) == Seq("d", "e"))
+  }
+
   test("parity on dangling FK values: the phantom key still probes children") {
     // b.ref = 99 has no a-row; the key itself still joins the closure
     // (distributed addKeys semantics), and allowlisted reverse edges
