@@ -118,20 +118,21 @@ class ClosureExtractor(
   /** A finished fast path's rows of one table, in the column order the
     * distributed semi-join yields (its USING keys first, then the rest in
     * source order), so an artifact does not depend on which path ran.
-    * One partition per budget/cores rows: a full budget spreads over
-    * every core, while the point extract's ~100-row tables write one
-    * part file each. On 4 vCPUs, writing 8 such tables on 4 threads took
-    * about 360 ms at one part each against 680 ms at four (each part
-    * file is a task and a commit); at 50k rows a table still wrote no
-    * slower as one part under that concurrency.
+    * A table of at most budget/cores rows stays a plain local relation,
+    * which [[graft.io.JsonTableIO.write]] writes from the driver as one
+    * part file with no Spark job: on 4 vCPUs 50k lineitem rows took
+    * 380 ms that way against 620 ms through Spark at four parts (median
+    * of 7 writes). A larger one is split into one partition per
+    * budget/cores rows and written by Spark, so the driver never renders
+    * more than budget/cores rows into one file.
     */
   private def localRows(spark: SparkSession, lt: ClosureExtractor.LocalTable): DataFrame = {
     val pk = lt.keySchema.fieldNames.toSeq
     val cores = spark.sparkContext.defaultParallelism
     val parts = (lt.rows.size.toLong * cores + fastPathBudget - 1) / fastPathBudget
-    ClosureExtractor.localDf(spark, lt.schema, lt.rows)
+    val df = ClosureExtractor.localDf(spark, lt.schema, lt.rows)
       .select((pk ++ lt.schema.fieldNames.filterNot(pk.contains)).map(col): _*)
-      .coalesce(parts.toInt.max(1).min(cores))
+    if (parts <= 1) df else df.coalesce(parts.toInt.min(cores))
   }
 
   /** Returns table name → DataFrame of the table's PK columns (the key set
@@ -198,10 +199,12 @@ class ClosureExtractor(
     * production shape at 100 TB: a point extract (one customer's cone,
     * one order's lineage) touches a few thousand keys of a petabyte
     * corpus, and the right plan probes each table once per (edge,
-    * iteration) with the key set pushed into the scan as an In filter
-    * (parquet row-group/dictionary pruning applies), not a broadcast-
-    * join fixpoint whose per-iteration scheduling barriers dwarf the
-    * data. Probes fetch WHOLE rows, so a finished run holds every result
+    * iteration) with the key set as a filter on the scan, not a
+    * broadcast-join fixpoint whose per-iteration scheduling barriers
+    * dwarf the data. A probe is still a full scan: an `In` of more than
+    * `spark.sql.parquet.pushdown.inFilterThreshold` (10) values reaches
+    * parquet as a min/max range, which prunes no row group on unsorted
+    * keys. Probes fetch WHOLE rows, so a finished run holds every result
     * row ([[ClosureExtractor.LocalDone]]) and [[extractAll]] builds its
     * tables from them instead of scanning the source a second time. The
     * moment ANY collect would exceed `fastPathBudget` rows it aborts and

@@ -141,6 +141,15 @@ class StaticAuditSpec extends AnyFunSuite {
       Map("graft/io/SegmentLog.scala" -> 1))
   }
 
+  // a JSON artifact is written by Spark's writer or, when its rows are
+  // already on the driver, by JsonTableIO's driver-side write; both take
+  // their options from one value (defined, then read by each path), so a
+  // format option such as a timestamp pattern reaches both at once
+  test("driver-written part files only in JsonTableIO, from one JSON options value") {
+    assert(filesWith("part-0") == Map("graft/io/JsonTableIO.scala" -> 1))
+    assert(filesWith("JsonOptions") == Map("graft/io/JsonTableIO.scala" -> 3))
+  }
+
   test("no env-gated stderr tracers") {
     assert(filesWith("GRAFT_BFS_PROF").isEmpty)
     assert(filesWith("GRAFT_STREAM_PROF").isEmpty)

@@ -5,18 +5,17 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import graft.SparkSpec
 import graft.meta.{Catalog, FkEdge, TableMeta}
 
 /** Pins the Spark jobs of a point extract that the driver-local fast path
   * finishes: one job per fast-path probe, every closure job under the
-  * probe job group (so an abort can cancel it), and one write job per
-  * table that reads no source row — the tables are written from the rows
-  * the probes already fetched. Job, stage and record counts do not move
-  * with host noise, so these hold on any machine.
+  * probe job group (so an abort can cancel it), and no write job at all —
+  * the tables are written from the rows the probes already fetched, on
+  * the driver. Job counts do not move with host noise, so these hold on
+  * any machine.
   */
 class ExtractJobsSpec extends SparkSpec {
   import spark.implicits._
@@ -25,20 +24,12 @@ class ExtractJobsSpec extends SparkSpec {
     val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
     val ended = new ConcurrentLinkedQueue[Int]()
     @volatile var marker = -1
-    val tasks = new ConcurrentLinkedQueue[SparkListenerTaskEnd]()
-    val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       def is(k: String) = Option(e.properties).exists(_.getProperty(k) == tag)
       if (is(Recorder.Tag)) jobs.add(e)
       if (is(Recorder.Marker)) marker = e.jobId
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.add(e)
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case s: SparkListenerSQLExecutionStart =>
-        plans.put(s.executionId, s.physicalPlanDescription)
-      case _ =>
-    }
   }
   private object Recorder {
     val Tag = "graft.spec.extract"
@@ -97,18 +88,14 @@ class ExtractJobsSpec extends SparkSpec {
       assert(closure.size == 5, s"closure jobs: ${closure.map(_.jobId)}")
       val perExecution = closure.groupBy(prop(_, "spark.sql.execution.id"))
       assert(perExecution.size == 5 && perExecution.keySet.forall(_.nonEmpty))
-      // everything outside the probe group is a table write, one each,
-      // over the held rows: no source scan, zero input records
-      assert(writes.size == 3, s"write jobs: ${writes.map(_.jobId)}")
-      writes.foreach { j =>
-        val plan = rec.plans.get(prop(j, "spark.sql.execution.id").get.toLong)
-        assert(plan != null && plan.contains("InsertIntoHadoopFsRelationCommand") &&
-          plan.contains("LocalTableScan") && !plan.contains("FileScan"), plan)
+      // the tables are held rows, written from the driver: no job outside
+      // the probe group, and one part file per table
+      assert(writes.isEmpty, s"write jobs: ${writes.map(_.jobId)}")
+      Seq("cust", "nat", "ord").foreach { t =>
+        val parts = Files.list(java.nio.file.Paths.get(s"$dir/out/$t/data"))
+        try assert(parts.iterator().asScala.count(_.getFileName.toString.startsWith("part-")) == 1, t)
+        finally parts.close()
       }
-      val writeStages = writes.flatMap(_.stageIds).toSet
-      val writeTasks = rec.tasks.asScala.filter(t => writeStages.contains(t.stageId))
-      assert(writeTasks.nonEmpty &&
-        writeTasks.map(_.taskMetrics.inputMetrics.recordsRead).sum == 0L)
     } finally {
       sc.removeSparkListener(rec)
       graft.io.SegmentLog.deleteRecursively(dir)

@@ -423,6 +423,109 @@ class JsonTableIOSpec extends SparkSpec {
       JsonTableIO.read(spark, out, "trunc", Some(schema)).collect()
     }
   }
+  /** Spark jobs `body` starts on this thread (the listener bus is FIFO:
+    * once a later marker job's start arrived, every earlier one had). */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "graft.spec.io"
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach { v =>
+          if (v == tag) n.incrementAndGet()
+          else if (v == s"$tag-marker") marked.countDown()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, s"$tag-marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marked.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener events not drained")
+      n.get
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  private def partsOf(out: String, t: String): Seq[java.nio.file.Path] = {
+    val s = Files.list(Paths.get(s"$out/$t/data"))
+    try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala.toList
+      .filter(_.getFileName.toString.startsWith("part-"))
+    finally s.close()
+  }
+
+  /** Every value shape an artifact carries, as a local relation. */
+  private def heldTable(rows: Seq[org.apache.spark.sql.Row]) = {
+    import org.apache.spark.sql.types._
+    val schema = new StructType()
+      .add("l", LongType).add("i", IntegerType).add("d", DoubleType)
+      .add("dec", DecimalType(18, 4)).add("s", StringType).add("n", StringType)
+      .add("ts", TimestampType).add("ntz", TimestampNTZType).add("day", DateType)
+      .add("arr", ArrayType(LongType))
+      .add("st", new StructType().add("a", IntegerType).add("b", StringType))
+      .add("m", MapType(StringType, DoubleType))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  private val heldRows = {
+    import org.apache.spark.sql.Row
+    Seq(
+      Row(1L, 7, 1.5, new java.math.BigDecimal("12345.6789"), "quote \" back \\ żółw 漢字",
+        null, java.sql.Timestamp.valueOf("2024-02-29 23:59:58.123456"),
+        java.time.LocalDateTime.parse("1999-12-31T08:00:00.000001"),
+        java.sql.Date.valueOf("1000-06-15"), Seq(1L, 2L), Row(3, "x"), Map("k" -> 0.25)),
+      Row(-2L, -1, -0.0, new java.math.BigDecimal("-0.0001"), "", null,
+        java.sql.Timestamp.valueOf("1970-01-01 00:00:00.000999"),
+        java.time.LocalDateTime.parse("2038-01-19T03:14:07.999999"),
+        java.sql.Date.valueOf("2024-01-01"), Seq.empty[Long], Row(null, null), Map.empty[String, Double]))
+  }
+
+  test("a driver-held table is written from the driver: the Spark writer's bytes, no job") {
+    val held = Files.createTempDirectory("jsonio-held").toString
+    val viaSpark = Files.createTempDirectory("jsonio-spark").toString
+    val df = heldTable(heldRows)
+    assert(jobsOf(JsonTableIO.write(df, held, "t")) == 0)
+    // a repartitioned local relation is not a LocalRelation: Spark writes it
+    assert(jobsOf(JsonTableIO.write(df.coalesce(1), viaSpark, "t")) > 0)
+    val (a, b) = (partsOf(held, "t"), partsOf(viaSpark, "t"))
+    assert(a.size == 1 && b.size == 1, s"$a $b")
+    assert(new String(Files.readAllBytes(a.head), "UTF-8") ==
+      new String(Files.readAllBytes(b.head), "UTF-8"))
+    assert(a.head.getFileName.toString.matches(raw"part-00000-[0-9a-f-]{36}-c000\.json"))
+    assert(Files.isRegularFile(Paths.get(s"$held/t/data/_SUCCESS")))
+    assert(Files.readString(Paths.get(s"$held/t/manifest.json")) ==
+      Files.readString(Paths.get(s"$viaSpark/t/manifest.json")))
+    // and it reads back like any artifact, overwriting in place
+    assert(JsonTableIO.write(heldTable(heldRows.take(1)), held, "t") == 1L)
+    assert(partsOf(held, "t").size == 1 &&
+      JsonTableIO.read(spark, held, "t", Some(df.schema)).count() == 1L)
+  }
+
+  test("an empty driver-held table writes one empty part, as Spark does") {
+    val held = Files.createTempDirectory("jsonio-held0").toString
+    val viaSpark = Files.createTempDirectory("jsonio-spark0").toString
+    val df = heldTable(Nil)
+    assert(jobsOf(assert(JsonTableIO.write(df, held, "t") == 0L)) == 0)
+    assert(JsonTableIO.write(df.coalesce(1), viaSpark, "t") == 0L)
+    val (a, b) = (partsOf(held, "t"), partsOf(viaSpark, "t"))
+    assert(a.size == 1 && b.size == 1 && Files.size(a.head) == 0L && Files.size(b.head) == 0L)
+    assert(Files.readString(Paths.get(s"$held/t/manifest.json")) ==
+      Files.readString(Paths.get(s"$viaSpark/t/manifest.json")))
+  }
+
+  test("compressed or not driver-held, an artifact still goes through the Spark writer") {
+    val gz = Files.createTempDirectory("jsonio-heldgz").toString
+    assert(jobsOf(JsonTableIO.write(heldTable(heldRows), gz, "t", Some("gzip"))) > 0)
+    assert(partsOf(gz, "t").map(_.getFileName.toString).forall(_.endsWith(".json.gz")))
+    val scan = Files.createTempDirectory("jsonio-scan").toString
+    assert(jobsOf(JsonTableIO.write(spark.range(0, 100, 1, 4).toDF("id"), scan, "t")) > 0)
+    assert(partsOf(scan, "t").size == 4)
+  }
 }
 
 class MediaDownloaderSpec extends SparkSpec {
