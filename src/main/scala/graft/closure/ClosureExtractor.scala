@@ -7,25 +7,38 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.CollectionAccumulator
 
-import graft.meta.Catalog
+import graft.meta.{Catalog, FkEdge}
 
-/** Policy knobs for reference-key (reverse-edge) expansion, mirroring the
-  * reference's traversal gating (`/root/reference/etl/extractor.go:40-50`):
-  * ALL reverse edges are followed from depth-0 (seed) rows unless
-  * `omitReferenceKeys`; from deeper rows only edges whose constraint name is
-  * in `referenceKeyAllowlist` (≙ `config.Schema.ReferenceKeys`,
-  * `/root/reference/config/config.go:41-42`).
+/** Traversal gating of the closure, mirroring the reference's
+  * (`etl/extractor.go:40-50`): forward FKs are followed from every row
+  * when `followForeignKeys`; ALL reverse edges are followed from depth-0
+  * (seed) rows unless the row's table is in `omitReferenceKeysFor`; from
+  * deeper rows only edges whose constraint name is in
+  * `referenceKeyAllowlist` (≙ `config.Schema.ReferenceKeys`,
+  * `config/config.go:41-42`). Extract follows forward FKs; the forget
+  * verb's ownership cone ([[TraversalPolicy.ownership]]) does not.
   */
 final case class TraversalPolicy(
-    omitReferenceKeys: Boolean = false,
     referenceKeyAllowlist: Set[String] = Set.empty,
-    omitReferenceKeysFor: Set[String] = Set.empty) {
+    omitReferenceKeysFor: Set[String] = Set.empty,
+    followForeignKeys: Boolean = true) {
   /** Is depth-0 full reverse expansion suppressed for `table`? The
     * reference gates per the ROW's table, not the seed
     * (`etl/extractor.go:40-42`: `schema = e.schema[table.Name]`).
     */
-  def omitsFor(table: String): Boolean =
-    omitReferenceKeys || omitReferenceKeysFor.contains(table)
+  def omitsFor(table: String): Boolean = omitReferenceKeysFor.contains(table)
+}
+
+object TraversalPolicy {
+  /** The OWNERSHIP cone of a seed set, for right-to-be-forgotten
+    * deletes: every reverse key at every depth (a customer's orders,
+    * those orders' lineitems, the customer's events) and no forward FK,
+    * so shared dimensions (nation, part, supplier) that other rows still
+    * reference never enter it.
+    */
+  def ownership(catalog: Catalog): TraversalPolicy =
+    TraversalPolicy(referenceKeyAllowlist = catalog.edges.map(_.name).toSet,
+      followForeignKeys = false)
 }
 
 /** A config-driven templated query (ref J3: `config.Query`,
@@ -180,15 +193,39 @@ class ClosureExtractor(
     (order.toList, order.toSet)
   }
 
+  /** The forward FK edges the traversal follows out of `table`: all of
+    * them, or none when the policy does not follow forward FKs. Every
+    * traversal step reads them here; only the chain ORDER above reads
+    * the catalog's.
+    */
+  private def fksOf(table: String): Seq[FkEdge] =
+    if (policy.followForeignKeys) catalog.foreignKeysOf(table) else Nil
+
+  /** The reverse-key edges into `table` that its rows expand: at depth 0
+    * every edge unless omitted for the row's table, at every depth the
+    * allowlisted ones (the reference appends `schema.ReferenceKeys`
+    * unconditionally, `etl/extractor.go:44-50`). Key sets carry only pk
+    * columns, so an edge whose referenced column is outside the pk fails
+    * loudly rather than joining on a wrong column.
+    */
+  private def rksOf(table: String, depth0: Boolean): Seq[FkEdge] =
+    catalog.referenceKeysOf(table).filter(rk =>
+      (depth0 && !policy.omitsFor(table)) ||
+        policy.referenceKeyAllowlist.contains(rk.name)
+    ).map { rk =>
+      require(catalog.pkOf(table).contains(rk.parentCol),
+        s"RK edge ${rk.name}: referenced col ${rk.parentCol} not in $table pk ${catalog.pkOf(table)}")
+      rk
+    }
+
   /** Must `table` re-enter the BFS frontier once its rows are at depth
     * ≥ 1? Only reverse-allowlist edges, config queries, and the cycle
     * fallback need another iteration — chained forward FKs are already
     * walked the moment the keys are produced.
     */
   private def needsIteration(table: String): Boolean =
-    (!chainable(table) && catalog.foreignKeysOf(table).nonEmpty) ||
-      catalog.referenceKeysOf(table)
-        .exists(rk => policy.referenceKeyAllowlist.contains(rk.name)) ||
+    (!chainable(table) && fksOf(table).nonEmpty) ||
+      rksOf(table, depth0 = false).nonEmpty ||
       configQueries.exists(_.sourceTable == table)
 
   def runAll(seeds: Seq[(String, DataFrame)],
@@ -415,7 +452,7 @@ class ClosureExtractor(
           }
         }
         def expandFksLocal(t: String, rows: Array[Row]): Unit =
-          catalog.foreignKeysOf(t).foreach { fk =>
+          fksOf(t).foreach { fk =>
             require(catalog.pkOf(fk.parentTable) == Seq(fk.parentCol),
               s"FK ${fk.name} must reference the parent PK")
             val i = idxOf(t, fk.childCol)
@@ -435,13 +472,8 @@ class ClosureExtractor(
           }
         def expandRksLocal(t: String, keys: Seq[Seq[Any]], depth0: Boolean): Unit = {
           val pkPos = catalog.pkOf(t).zipWithIndex.toMap
-          catalog.referenceKeysOf(t).filter(rk =>
-            (depth0 && !policy.omitsFor(t)) ||
-              policy.referenceKeyAllowlist.contains(rk.name))
-          .foreach { rk =>
-            val i = pkPos.getOrElse(rk.parentCol,
-              abort(s"rk parent col outside pk: ${rk.name}"))
-            val vals = keys.map(_(i)).distinct
+          rksOf(t, depth0).foreach { rk =>
+            val vals = keys.map(_(pkPos(rk.parentCol))).distinct
             if (vals.nonEmpty)
               schedule(probeDf(rk.childTable, rk.childCol, vals)) { rs =>
                 addCand(rk.childTable, rs.iterator.map(keyOf(rk.childTable, _)), rs,
@@ -708,7 +740,7 @@ class ClosureExtractor(
         // frontier; chainable ones walk their forward FKs in the chain
         frontier = fresh.filter { case (t, _) => needsIteration(t) }
         chainRaw = fresh.filter { case (t, _) =>
-          chainable(t) && catalog.foreignKeysOf(t).nonEmpty }
+          chainable(t) && fksOf(t).nonEmpty }
         depth = h.depth
       case None =>
         frontier = seeds.groupBy(_._1).map { case (t, ss) =>
@@ -787,17 +819,11 @@ class ClosureExtractor(
       }
 
       // J2 reverse lookup, batched: child rows whose FK is in `keys`.
-      // Distinct deferred to the candidate stage (see J1). `depth0` rows
-      // follow ALL reverse edges unless omitted for this row's table;
-      // allowlisted edges are followed at every depth even under omit
-      // (the reference appends `schema.ReferenceKeys` unconditionally,
-      // `etl/extractor.go:44-50`).
+      // Distinct deferred to the candidate stage (see J1); the edges
+      // followed are [[rksOf]]'s.
       def expandRks(table: String, keys: DataFrame, size: Option[Long],
           depth0: Boolean): Unit =
-        catalog.referenceKeysOf(table).filter(rk =>
-          (depth0 && !policy.omitsFor(table)) ||
-            policy.referenceKeyAllowlist.contains(rk.name))
-        .foreach { rk =>
+        rksOf(table, depth0).foreach { rk =>
           val childPk = catalog.pkOf(rk.childTable)
           addKeys(rk.childTable,
             keyProjection(rk.childTable, (childPk :+ rk.childCol).distinct)
@@ -836,7 +862,7 @@ class ClosureExtractor(
 
       frontier.foreach { case (table, keys) =>
         val pk = catalog.pkOf(table)
-        val fks = catalog.foreignKeysOf(table)
+        val fks = fksOf(table)
         val keysH = hinted(keys, frontierSizes.get(table))
         if (fks.nonEmpty && !chainable(table)) {
           // cycle fallback: one scan of the table, semi-joined down to
@@ -913,7 +939,7 @@ class ClosureExtractor(
       // the keys a fast-path handoff left unexpanded) are fresh by
       // definition but sit inside `seen`, so they skip that anti-join.
       chainOrder.foreach { t =>
-        val fks = catalog.foreignKeysOf(t)
+        val fks = fksOf(t)
         if (fks.nonEmpty) {
           val pk = catalog.pkOf(t)
           val produced = chainAcc.get(t).map(keysT0 => seen.get(t).fold(keysT0)(s =>

@@ -234,10 +234,12 @@ class Engine(
     }
 
   /** Right-to-be-forgotten: delete the seed rows' OWNERSHIP cone from an
-    * artifact. [[graft.closure.ForgetCascade]] follows only reverse-key
-    * edges from the seeds (a customer's orders → their lineitems, the
-    * customer's events) — never forward FKs, so shared dimensions
-    * (nation, part, supplier) are untouched. Each affected artifact
+    * artifact. The closure runs under [[TraversalPolicy.ownership]]: it
+    * follows every reverse-key edge from the seeds at every depth (a
+    * customer's orders → their lineitems, the customer's events) and
+    * never a forward FK, so shared dimensions (nation, part, supplier)
+    * are untouched. A point cone closes on the driver-local fast path, a
+    * large purge on the distributed fixpoint. Each affected artifact
     * table is rewritten as a fresh GENERATION via
     * [[JsonTableIO.writeGen]] (atomic manifest-pointer commit: readers
     * never see a half-forgotten table, and an interrupted forget leaves
@@ -250,8 +252,8 @@ class Engine(
     val table = SeedQuery.drivingTable(seedQuery).getOrElse(
       throw new IllegalArgumentException(s"cannot parse driving table: $seedQuery"))
     loadTable(table).createOrReplaceTempView(table)
-    val cone = graft.closure.ForgetCascade.cascade(
-      spark, catalog, loadTable, table, spark.sql(seedQuery))
+    val cone = new ClosureExtractor(catalog, loadTable, TraversalPolicy.ownership(catalog))
+      .run(table, spark.sql(seedQuery))
     val artifact = load(artifactDir)
     cone.toSeq.sortBy(_._1).flatMap { case (t, delKeys) =>
       artifact.get(t).map { rows =>

@@ -102,9 +102,14 @@ object JsonTableIO {
 
   /** Options of every JSON artifact write: the Spark JSON writer and the
     * driver-side write of [[heldLines]] both take them, so the two paths
-    * can only render a value the same way.
+    * can only render a value the same way. Timestamps keep all six
+    * fraction digits: Spark's default patterns stop at milliseconds, so a
+    * microsecond value would not survive the round trip (reads parse any
+    * fraction up to microseconds without a pattern).
     */
-  private val JsonOptions: Map[String, String] = Map.empty
+  private val JsonOptions: Map[String, String] = Map(
+    "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
 
   /** The counted write behind [[write]], [[writeGen]] and [[compact]]:
     * refuse foreign data, write `rows` into `target` as `format` part
@@ -585,40 +590,6 @@ object JsonTableIO {
     } catch {
       case scala.util.control.NonFatal(_) => false
     }
-  }
-
-  /** Opt-in single-file export — byte-layout parity with the reference's
-    * `json.MarshalIndent(payload, "", "\t")` envelope
-    * (`/root/reference/etl/engine.go:152-158`): ONE pretty-printed
-    * `<table>.json` that mover's own loader can ingest. This funnels the
-    * table through the driver by design — use it only for small tables
-    * (config dims, lookup tables); [[write]] is the scale path.
-    *
-    * ENFORCED, not just documented: the collect is bounded at
-    * `maxRows + 1` and the write refuses loudly beyond `maxRows` — one
-    * misrouted call on a big table must fail fast, not OOM the driver.
-    */
-  def writeSingleFile(df: DataFrame, outDir: String, tableName: String,
-      maxRows: Int = 100000): Long = {
-    // limit(maxRows + 1): bounds driver memory for the oversize check
-    // itself AND detects overflow without a separate count job
-    val rows = df.toJSON.limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
-      s"writeSingleFile('$tableName') exceeds maxRows=$maxRows: this " +
-        "path collects to the driver and is for small tables only — " +
-        "use write() (partitioned artifact) for large tables")
-    val data =
-      if (rows.isEmpty) "[]"
-      else rows.map("\t\t" + _).mkString("[\n", ",\n", "\n\t]")
-    val out = s"{\n\t\"table_name\": ${quote(tableName)}," +
-      s"\n\t\"count\": ${rows.length},\n\t\"data\": $data\n}"
-    // atomic like the manifest: a crash never leaves a truncated envelope
-    SegmentLog.replaceAtomically(singleFilePath(outDir, tableName), out)
-    // mirror of write(): drop any partitioned artifact for this table so
-    // the layouts can never disagree about its contents
-    if (Files.isDirectory(Paths.get(s"$outDir/$tableName")))
-      SegmentLog.deleteRecursively(s"$outDir/$tableName")
-    rows.length.toLong
   }
 
   private def quote(s: String): String =

@@ -661,27 +661,27 @@ object CoreQueries {
   }
 
   /** The deletion dual of [[closureExtract]] under the driver gate:
-    * right-to-be-forgotten cone key counts for a seed customer set.
-    * [[graft.closure.ForgetCascade]] follows ONLY reverse-key edges
-    * (customer → orders/events → lineitem), never forward FKs — the
-    * shared dimensions (nation, part, supplier, region) must NOT appear
-    * in the cone, and the oracle's fixed four-table shape pins exactly
-    * that. Counts are DISTINCT pk tuples (what a delete statement would
+    * right-to-be-forgotten cone key counts for a seed customer set. The
+    * closure runs under [[TraversalPolicy.ownership]]: every reverse-key
+    * edge at every depth (customer → orders/events → lineitem) and never
+    * a forward FK — the shared dimensions (nation, part, supplier,
+    * region) must NOT appear in the cone, and the oracle's fixed
+    * four-table shape pins exactly that. Counts are DISTINCT pk tuples (what a delete statement would
     * target; the synthetic lineitem has duplicate pk pairs, so this is
     * NOT the row count).
     */
   def forgetCone(spark: SparkSession, dir: String): DataFrame = {
-    val cone = graft.closure.ForgetCascade.cascade(
-      spark, graft.meta.Catalog.tpch, t => Tables(spark, dir, t),
-      "customer", Tables(spark, dir, "customer").filter(col("c_custkey") <= 5))
+    val catalog = graft.meta.Catalog.tpch
+    val cone = ClosureExtractor.forDir(spark, dir, catalog, TraversalPolicy.ownership(catalog))
+      .run("customer", Tables(spark, dir, "customer").filter(col("c_custkey") <= 5))
     cone.toSeq.sortBy(_._1)
       .map { case (t, keys) =>
         keys.agg(count(lit(1)).as("n_keys"))
           .select(lit(t).as("table_name"), col("n_keys"))
       }
       .reduce(_.unionByName(_))
-      // the cascade always carries the SEED table's frame, even empty
-      // (non-seed frontiers are pruned); the oracle's n_keys > 0 keeps
+      // the closure always carries the SEED table's key set, even empty
+      // (other tables enter only with keys); the oracle's n_keys > 0 keeps
       // only populated cone tables — match it, or an empty seed set
       // diverges on the zero-count seed row
       .filter(col("n_keys") > 0)

@@ -82,8 +82,11 @@ class MainSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("graft-cli-compact2").toString
     val n = graft.io.JsonTableIO.write(
       Tables(spark, dsn, "region"), outDir, "region", Some("gzip"))
-    graft.io.JsonTableIO.writeSingleFile(
-      Tables(spark, dsn, "nation"), outDir, "nation")
+    // a mover-authored envelope (json.MarshalIndent(payload, "", "\t"))
+    Files.writeString(java.nio.file.Paths.get(s"$outDir/nation.json"),
+      "{\n\t\"table_name\": \"nation\",\n\t\"count\": 1,\n\t\"data\": [\n" +
+        "\t\t{\n\t\t\t\"n_nationkey\": 0,\n\t\t\t\"n_name\": \"ALGERIA\",\n" +
+        "\t\t\t\"n_regionkey\": 0\n\t\t}\n\t]\n}")
     def parts(t: String): Seq[String] = {
       import scala.jdk.CollectionConverters._
       // resolve through the manifest pointer — compact rotates generations

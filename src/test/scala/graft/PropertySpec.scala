@@ -99,7 +99,12 @@ class PropertySpec extends SparkSpec {
   private val genPolicy = for {
     omit <- Gen.oneOf(true, false)
     allow <- Gen.someOf("c_p", "c_a", "p_o", "u_bp")
-  } yield TraversalPolicy(omit, allow.toSet)
+  } yield policyOf(catalog.tables.keys, omit, allow)
+
+  // omit_reference_keys on every table, or on none
+  private def policyOf(tables: Iterable[String], omit: Boolean,
+      allow: Iterable[String]): TraversalPolicy =
+    TraversalPolicy(allow.toSet, if (omit) tables.toSet else Set.empty)
 
   test("closure is FK-closed, idempotent, and monotone in the seed") {
     val ps = cases(Gen.zip(genSeed, genPolicy), 5)
@@ -225,7 +230,7 @@ class PropertySpec extends SparkSpec {
       Gen.oneOf(true, false),
       Gen.someOf("e0", "e1", "e2", "e3", "e4", "e5")), 6)
     gs.foreach { case (g, seedIds0, omit, allow) =>
-      val policy = TraversalPolicy(omit, allow.toSet)
+      val policy = policyOf(g.tables, omit, allow)
       val cat = Catalog(
         g.tables.map(t => t -> TableMeta(t, Seq("id"))).toMap, g.edges)
       val dfs = graphDfs(g)
@@ -323,7 +328,7 @@ class PropertySpec extends SparkSpec {
       Gen.someOf("e0", "e1", "e2", "e3", "e4", "e5")), 6)
     var deviated = 0
     gs.foreach { case (g, seedIds0, omit, allow) =>
-      val policy = TraversalPolicy(omit, allow.toSet)
+      val policy = policyOf(g.tables, omit, allow)
       val cat = Catalog(
         g.tables.map(t => t -> TableMeta(t, Seq("id"))).toMap, g.edges)
       val dfs = graphDfs(g)
@@ -378,7 +383,7 @@ class PropertySpec extends SparkSpec {
       Gen.someOf("e0", "e1", "e2", "e3", "e4", "e5")), 6)
     var pruned = 0
     gs.foreach { case (g, seedIds0, prevIds0, omit, allow) =>
-      val policy = TraversalPolicy(omit, allow.toSet)
+      val policy = policyOf(g.tables, omit, allow)
       val cat = Catalog(
         g.tables.map(t => t -> TableMeta(t, Seq("id"))).toMap, g.edges)
       val dfs = graphDfs(g)
@@ -480,7 +485,7 @@ class PropertySpec extends SparkSpec {
     var grownInDelta = 0
     var grownSeeds = 0
     cases(gen, 6).foreach { case (g0, g1, prevIds0, addIds0, omit, allow) =>
-      val policy = TraversalPolicy(omit, allow.toSet)
+      val policy = policyOf(g1.tables, omit, allow)
       val cat = Catalog(
         g1.tables.map(t => t -> TableMeta(t, Seq("id"))).toMap, g1.edges)
       val prevIds = prevIds0.intersect(g0.data("t0").keySet)

@@ -138,9 +138,8 @@ class ReachabilitySpec extends AnyFunSuite {
     // The expression form MultimodalSpec compares resizeMedia against.
     "graft.ext.Multimodal.resize",
     // Interop with mover itself, for `describe -dsn jdbc:` and extract:
-    // mover's own `<table>.json` envelope, and its catalog introspection
-    // (ColumnMeta is built only by the introspectors).
-    "graft.io.JsonTableIO.writeSingleFile",
+    // its catalog introspection (ColumnMeta is built only by the
+    // introspectors).
     "graft.io.PgIntrospect.introspect",
     "graft.io.PgIntrospect.tablesSql",
     "graft.io.PgIntrospect.columnsSql",

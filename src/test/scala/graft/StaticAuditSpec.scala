@@ -54,7 +54,6 @@ class StaticAuditSpec extends AnyFunSuite {
   //   SimilarityQueries — centroids/codebooks/probe sets (literals)
   //   TextQueries     — merge tables / vocab shortlists (capped)
   //   ArtifactDiff    — per-table diff COUNTS
-  //   JsonTableIO     — manifest rows (one per table)
   //   CoreQueries     — closure_delta + closure_delta_artifact baseline
   //                     KEY SETS (seed-bounded memos)
   //   OlapQueries     — pivot value discovery (|statuses| strings)
@@ -70,7 +69,6 @@ class StaticAuditSpec extends AnyFunSuite {
     "graft/ext/SimilarityQueries.scala" -> 6,
     "graft/ext/TextQueries.scala" -> 5,
     "graft/io/ArtifactDiff.scala" -> 1,
-    "graft/io/JsonTableIO.scala" -> 1,
     "graft/queries/CoreQueries.scala" -> 2,
     "graft/queries/OlapQueries.scala" -> 1)
 
@@ -148,6 +146,28 @@ class StaticAuditSpec extends AnyFunSuite {
   test("driver-written part files only in JsonTableIO, from one JSON options value") {
     assert(filesWith("part-0") == Map("graft/io/JsonTableIO.scala" -> 1))
     assert(filesWith("JsonOptions") == Map("graft/io/JsonTableIO.scala" -> 3))
+  }
+
+  // one traversal engine: extract and the forget verb's ownership cone
+  // both walk the catalog through ClosureExtractor's policy-gated edge
+  // lists, so a traversal gets its fast path, handoff, counting-job
+  // discipline and releases in one place; Engine.describe only prints
+  // the edges, and Catalog defines the two accessors
+  test("one traversal engine: only ClosureExtractor and Engine.describe read catalog edges") {
+    assert(filesWith("foreignKeysOf(") == Map(
+      "graft/closure/ClosureExtractor.scala" -> 2,
+      "graft/engine/Engine.scala" -> 1,
+      "graft/meta/Catalog.scala" -> 1))
+    assert(filesWith("referenceKeysOf(") == Map(
+      "graft/closure/ClosureExtractor.scala" -> 1,
+      "graft/engine/Engine.scala" -> 1,
+      "graft/meta/Catalog.scala" -> 1))
+    val engine = java.nio.file.Files.readString(mainRoot.resolve("graft/engine/Engine.scala"))
+    val from = engine.indexOf("def describe(")
+    val next = engine.indexOf("\n  def ", from)
+    val describe = engine.substring(from max 0, if (next < 0) engine.length else next)
+    assert(from >= 0 && describe.contains("foreignKeysOf(") &&
+      describe.contains("referenceKeysOf("), "Engine reads catalog edges outside describe")
   }
 
   test("no env-gated stderr tracers") {

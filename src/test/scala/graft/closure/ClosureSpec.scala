@@ -47,12 +47,15 @@ class ClosureSpec extends SparkSpec {
   private def extractor(policy: TraversalPolicy) =
     new ClosureExtractor(catalog, tables(_), policy)
 
+  // omit_reference_keys on every table
+  private val omitAll = TraversalPolicy(omitReferenceKeysFor = catalog.tables.keySet)
+
   private def ids(df: DataFrame): Set[Long] =
     df.select("id").collect().map(_.getLong(0)).toSet
 
   test("cycle-safe fixpoint terminates; forward FKs + null-skip") {
     // seed user 1: best_project 10 -> project 10 -> owner 1 (cycle, seen)
-    val out = extractor(TraversalPolicy(omitReferenceKeys = true))
+    val out = extractor(omitAll)
       .extract("user", user.filter(col("id") === 1))
     assert(ids(out("user")) == Set(1L))
     assert(ids(out("project")) == Set(10L))
@@ -60,7 +63,7 @@ class ClosureSpec extends SparkSpec {
   }
 
   test("null FK values are skipped (ref extractor.go:107-109)") {
-    val out = extractor(TraversalPolicy(omitReferenceKeys = true))
+    val out = extractor(omitAll)
       .extract("user", user.filter(col("id") === 2))
     assert(ids(out("user")) == Set(2L))
     assert(!out.contains("project")) // best_project_id is null
@@ -86,7 +89,7 @@ class ClosureSpec extends SparkSpec {
   }
 
   test("omitReferenceKeys suppresses all reverse expansion") {
-    val out = extractor(TraversalPolicy(omitReferenceKeys = true))
+    val out = extractor(omitAll)
       .extract("user", user.filter(col("id") === 3))
     assert(!out.contains("comment"))
     assert(ids(out("project")) == Set(30L))
@@ -186,7 +189,7 @@ class ClosureSpec extends SparkSpec {
   }
 
   test("seed with multiple rows unions frontiers") {
-    val out = extractor(TraversalPolicy(omitReferenceKeys = true))
+    val out = extractor(omitAll)
       .extract("user", user.filter(col("id").isin(1, 3)))
     assert(ids(out("project")) == Set(10L, 30L))
   }

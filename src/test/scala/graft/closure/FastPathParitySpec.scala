@@ -96,13 +96,15 @@ class FastPathParitySpec extends SparkSpec {
   }
 
   test("parity across RK policies on the cyclic micro-fixture") {
+    val every = catalog.tables.keySet
     val policies = Seq(
       TraversalPolicy(),
-      TraversalPolicy(omitReferenceKeys = true),
+      TraversalPolicy(omitReferenceKeysFor = every),
       TraversalPolicy(referenceKeyAllowlist = Set("comment_project_fkey")),
-      TraversalPolicy(omitReferenceKeys = true,
+      TraversalPolicy(omitReferenceKeysFor = every,
         referenceKeyAllowlist = Set("comment_author_fkey")),
-      TraversalPolicy(omitReferenceKeysFor = Set("project")))
+      TraversalPolicy(omitReferenceKeysFor = Set("project")),
+      TraversalPolicy.ownership(catalog))
     policies.foreach { p =>
       val out = allRegimes(catalog, tables(_), p,
         Seq("user" -> user.filter(col("id") === 1)))

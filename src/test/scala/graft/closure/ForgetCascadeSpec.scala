@@ -1,18 +1,41 @@
 package graft.closure
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, rng}
 import graft.SparkSpec
 import graft.meta.{Catalog, FkEdge, TableMeta}
 
-/** [[ForgetCascade]] vs a naive in-memory model on random ownership
-  * graphs: the cascade must return EXACTLY the RK-reachable rows (the
-  * model BFS over materialized edges), for random seed sets, shared
+/** The forget verb's ownership cone — [[ClosureExtractor]] under
+  * [[TraversalPolicy.ownership]] — vs a naive in-memory model on random
+  * ownership graphs: the cone must return EXACTLY the RK-reachable rows
+  * (the model BFS over materialized edges), for random seed sets, shared
   * children (diamonds), and multi-level chains — and never a row
-  * reachable only via a forward FK.
+  * reachable only via a forward FK. Every cone runs in three regimes
+  * that must agree: the driver-local fast path, the distributed fixpoint
+  * (`fastPathBudget = 0`), and a fast path that aborts mid-run and hands
+  * its last completed boundary to the distributed fixpoint.
   */
 class ForgetCascadeSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The ownership cone's key sets, asserted equal across the regimes. */
+  private def ownershipCone(cat: Catalog, load: String => DataFrame,
+      seedTable: String, seed: DataFrame): Map[String, Set[Seq[Any]]] = {
+    def extractor(budget: Long) = new ClosureExtractor(cat, load,
+      TraversalPolicy.ownership(cat), fastPathBudget = budget)
+    def run(budget: Long): Map[String, Set[Seq[Any]]] =
+      extractor(budget).run(seedTable, seed)
+        .map { case (t, df) => t -> df.collect().map(_.toSeq).toSet }
+    val local = run(ClosureExtractor.FastPathBudget)
+    val rows = extractor(ClosureExtractor.FastPathBudget)
+      .fastPathRows(Seq(seedTable -> seed)).getOrElse(fail("fast path did not finish"))
+    Seq(0L, rows / 2).foreach { budget =>
+      val other = run(budget)
+      assert(other == local, s"budget $budget of $rows:\n got=$other\n local=$local")
+    }
+    local
+  }
 
   private def cases[T](g: Gen[T], n: Int): Seq[T] = {
     val seed0 = rng.Seed(4242L)
@@ -52,10 +75,10 @@ class ForgetCascadeSpec extends SparkSpec {
       val tc = bRefs.zipWithIndex
         .map { case (bRef, i) => (i + 1L, bRef) }.toDF("c_id", "b_ref")
       val td = Seq(1L, 2L).toDF("d_id")
-      val load: String => org.apache.spark.sql.DataFrame =
+      val load: String => DataFrame =
         Map("ta" -> ta, "tb" -> tb, "tc" -> tc, "td" -> td)
 
-      val cone = ForgetCascade.cascade(spark, catalog, load,
+      val cone = ownershipCone(catalog, load,
         "ta", ta.filter(col("a_id").isin(seeds.toSeq: _*)))
 
       // naive model: b rows owned by seed a's; c rows owned by those b's
@@ -64,12 +87,11 @@ class ForgetCascadeSpec extends SparkSpec {
       val modelC = bRefs.zipWithIndex.collect {
         case (bRef, i) if modelB.contains(bRef) => i + 1L }.toSet
 
-      def keys(t: String, c: String): Set[Long] =
-        cone.get(t).map(_.select(c).collect().map(_.getLong(0)).toSet)
-          .getOrElse(Set.empty)
-      assert(keys("ta", "a_id") == seeds, s"case $ci seeds")
-      assert(keys("tb", "b_id") == modelB, s"case $ci b cone")
-      assert(keys("tc", "c_id") == modelC, s"case $ci c cone")
+      def keys(t: String): Set[Long] =
+        cone.getOrElse(t, Set.empty).map(_.head.asInstanceOf[Long])
+      assert(keys("ta") == seeds, s"case $ci seeds")
+      assert(keys("tb") == modelB, s"case $ci b cone")
+      assert(keys("tc") == modelC, s"case $ci c cone")
       assert(!cone.contains("td"), s"case $ci: forward dim td must never enter the cone")
     }
   }
@@ -84,9 +106,9 @@ class ForgetCascadeSpec extends SparkSpec {
     val cat = Catalog(
       tables = Map("p" -> TableMeta("p", Seq("id")), "ch" -> TableMeta("ch", Seq("id"))),
       edges = Seq(FkEdge("ch_p", "ch", "parent_id", "p", "id")))
-    val load: String => org.apache.spark.sql.DataFrame = Map("p" -> parent, "ch" -> child)
-    val cone = ForgetCascade.cascade(spark, cat, load, "p", parent.filter(col("id") === 1L))
-    val childKeys = cone("ch").select("id").collect().map(_.getLong(0)).toSet
+    val load: String => DataFrame = Map("p" -> parent, "ch" -> child)
+    val cone = ownershipCone(cat, load, "p", parent.filter(col("id") === 1L))
+    val childKeys = cone("ch").map(_.head)
     assert(childKeys == Set(10L, 11L), s"expected ch cone {10,11}, got $childKeys")
   }
 }

@@ -327,18 +327,6 @@ class JsonTableIOSpec extends SparkSpec {
     assert(e.getMessage.contains("invalid dir pointer"))
   }
 
-  test("writeSingleFile refuses a table above its row ceiling") {
-    val out = Files.createTempDirectory("jsonio-wsf-big").toString
-    val big = spark.range(0, 50).toDF("id")
-    val e = intercept[IllegalArgumentException] {
-      JsonTableIO.writeSingleFile(big, out, "big", maxRows = 10)
-    }
-    assert(e.getMessage.contains("maxRows"))
-    assert(!Files.exists(Paths.get(s"$out/big.json")), "no partial file")
-    // at exactly the ceiling it still writes
-    assert(JsonTableIO.writeSingleFile(big.limit(10), out, "ok", maxRows = 10) == 10L)
-  }
-
   test("compact of an empty artifact is a clean no-op") {
     val out = Files.createTempDirectory("jsonio-compact-empty").toString
     val empty = spark.range(0, 0).toDF("id")
@@ -366,28 +354,16 @@ class JsonTableIOSpec extends SparkSpec {
     val typed = JsonTableIO.read(spark, out, "project",
       Some(Seq((0L, "")).toDF("id", "title").schema))
     assert(typed.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(10L, 20L))
-  }
-
-  test("writeSingleFile emits the reference envelope and round-trips") {
-    val out = Files.createTempDirectory("jsonio-wsf").toString
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
-    assert(JsonTableIO.writeSingleFile(df, out, "user") == 2L)
-    val txt = Files.readString(Paths.get(s"$out/user.json"))
-    // envelope keys as the reference's jsonPayload tags (engine.go:60-64)
-    assert(txt.contains("\"table_name\": \"user\""))
-    assert(txt.contains("\"count\": 2"))
-    assert(txt.contains("\"data\": ["))
-    val back = JsonTableIO.read(spark, out, "user", Some(df.schema))
-    assert(back.orderBy("id").collect().map(_.toSeq).toSeq ==
-      df.orderBy("id").collect().map(_.toSeq).toSeq)
     // mixed layouts list together
     JsonTableIO.write(Seq((1L, 1.0)).toDF("id", "v"), out, "score")
-    assert(JsonTableIO.listTables(out) == Seq("score", "user"))
+    assert(JsonTableIO.listTables(out) == Seq("project", "score"))
   }
 
   test("stray non-envelope json files are not listed as tables") {
     val out = Files.createTempDirectory("jsonio-stray").toString
-    JsonTableIO.writeSingleFile(Seq((1L, "a")).toDF("id", "name"), out, "user")
+    Files.writeString(Paths.get(s"$out/user.json"),
+      "{\n\t\"table_name\": \"user\",\n\t\"count\": 1,\n\t\"data\": [\n" +
+        "\t\t{\n\t\t\t\"id\": 1,\n\t\t\t\"name\": \"a\"\n\t\t}\n\t]\n}")
     // the kinds of files that actually land in export dirs
     Files.writeString(Paths.get(s"$out/oracle_sql.json"),
       """{"q1_agg": "SELECT 1"}""")
@@ -526,25 +502,48 @@ class JsonTableIOSpec extends SparkSpec {
     assert(jobsOf(JsonTableIO.write(spark.range(0, 100, 1, 4).toDF("id"), scan, "t")) > 0)
     assert(partsOf(scan, "t").size == 4)
   }
+
+  test("microsecond timestamps survive both write paths and Engine.load") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.meta.{Catalog, TableMeta}
+    val schema = new StructType().add("id", LongType)
+      .add("ts", TimestampType).add("ntz", TimestampNTZType)
+    val rows = Seq(
+      Row(1L, java.sql.Timestamp.valueOf("2024-02-29 23:59:58.123456"),
+        java.time.LocalDateTime.parse("1999-12-31T08:00:00.000001")),
+      Row(2L, java.sql.Timestamp.valueOf("1970-01-01 00:00:00.000999"),
+        java.time.LocalDateTime.parse("2038-01-19T03:14:07.999999")))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val out = Files.createTempDirectory("jsonio-micros").toString
+    // driver-side write of a local relation, and Spark's writer
+    assert(jobsOf(JsonTableIO.write(df, out, "held")) == 0)
+    assert(jobsOf(JsonTableIO.write(df.coalesce(1), out, "spark")) > 0)
+    val engine = new graft.engine.Engine(spark, Catalog(Seq("held", "spark")
+      .map(t => t -> TableMeta(t, Seq("id"))).toMap, Nil), _ => df)
+    val back = engine.load(out)
+    Seq("held", "spark").foreach { t =>
+      assert(back(t).orderBy("id").collect().toSeq == rows, t)
+    }
+  }
 }
 
 class MediaDownloaderSpec extends SparkSpec {
   import spark.implicits._
 
-  test("each layout's write overwrites the other — no stale shadowing") {
+  test("a partitioned write replaces a mover-authored envelope") {
     val out = Files.createTempDirectory("jsonio-ow").toString
-    val v1 = Seq((1L, "old")).toDF("id", "name")
+    Files.writeString(Paths.get(s"$out/user.json"),
+      "{\n\t\"table_name\": \"user\",\n\t\"count\": 1,\n\t\"data\": [\n" +
+        "\t\t{\n\t\t\t\"id\": 1,\n\t\t\t\"name\": \"old\"\n\t\t}\n\t]\n}")
+    assert(JsonTableIO.readManifest(out, "user").count == 1L)
+    // the fresh partitioned artifact must win (readers prefer the
+    // envelope, so write() deletes it)
     val v2 = Seq((1L, "new"), (2L, "newer")).toDF("id", "name")
-    // single-file then partitioned: the fresh partitioned artifact must
-    // win (readers prefer the envelope, so write() deletes it)
-    JsonTableIO.writeSingleFile(v1, out, "user")
     JsonTableIO.write(v2, out, "user")
+    assert(!Files.exists(Paths.get(s"$out/user.json")))
     assert(JsonTableIO.readManifest(out, "user").count == 2L)
     assert(JsonTableIO.read(spark, out, "user", Some(v2.schema)).count() == 2L)
-    // partitioned then single-file: the envelope must be the only artifact
-    JsonTableIO.writeSingleFile(v1, out, "user")
-    assert(JsonTableIO.readManifest(out, "user").count == 1L)
-    assert(!Files.isDirectory(Paths.get(s"$out/user")))
     assert(JsonTableIO.listTables(out) == Seq("user"))
   }
 
