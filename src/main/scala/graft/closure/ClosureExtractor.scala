@@ -195,11 +195,18 @@ class ClosureExtractor(
 
   /** The forward FK edges the traversal follows out of `table`: all of
     * them, or none when the policy does not follow forward FKs. Every
-    * traversal step reads them here; only the chain ORDER above reads
-    * the catalog's.
+    * traversal step reads them here; only the chain ORDER above and the
+    * key projections below read the catalog's. A parent is keyed by the
+    * referenced column, so an FK that does not reference the parent's
+    * whole pk fails loudly rather than keying it by a wrong column.
     */
   private def fksOf(table: String): Seq[FkEdge] =
-    if (policy.followForeignKeys) catalog.foreignKeysOf(table) else Nil
+    if (!policy.followForeignKeys) Nil
+    else catalog.foreignKeysOf(table).map { fk =>
+      require(catalog.pkOf(fk.parentTable) == Seq(fk.parentCol),
+        s"FK ${fk.name} must reference the parent PK")
+      fk
+    }
 
   /** The reverse-key edges into `table` that its rows expand: at depth 0
     * every edge unless omitted for the row's table, at every depth the
@@ -227,10 +234,6 @@ class ClosureExtractor(
     (!chainable(table) && fksOf(table).nonEmpty) ||
       rksOf(table, depth0 = false).nonEmpty ||
       configQueries.exists(_.sourceTable == table)
-
-  def runAll(seeds: Seq[(String, DataFrame)],
-      preSeen: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] =
-    runAllWithSizes(seeds, preSeen)._1
 
   /** Driver-local BFS fast path for SMALL closures — the dominant
     * production shape at 100 TB: a point extract (one customer's cone,
@@ -453,8 +456,6 @@ class ClosureExtractor(
         }
         def expandFksLocal(t: String, rows: Array[Row]): Unit =
           fksOf(t).foreach { fk =>
-            require(catalog.pkOf(fk.parentTable) == Seq(fk.parentCol),
-              s"FK ${fk.name} must reference the parent PK")
             val i = idxOf(t, fk.childCol)
             // pre-filter seen parents driver-side: an already-seen key
             // neither re-probes nor re-enters (the distributed anti-join)
@@ -607,8 +608,7 @@ class ClosureExtractor(
       case _ => None
     }
 
-  /** [[runAll]] plus each table's exact key count — free, because the
-    * fixpoint's final checkpoint-forcing job is already a count.
+  /** The closure's key sets: table → DataFrame of the table's pk columns.
     *
     * `preSeen` turns the run INCREMENTAL: table → pk key sets of a
     * PREVIOUS closure (e.g. a prior export) that pre-populate the BFS
@@ -646,11 +646,11 @@ class ClosureExtractor(
     * ([[graft.engine.Engine.extractDelta]] with `incremental = false`;
     * CLI `extract -delta ... -delta-full`).
     */
-  def runAllWithSizes(seeds: Seq[(String, DataFrame)],
-      preSeen: Map[String, DataFrame] = Map.empty): (Map[String, DataFrame], Map[String, Long]) =
+  def runAll(seeds: Seq[(String, DataFrame)],
+      preSeen: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] =
     fastPath(seeds, preSeen) match {
-      case d: ClosureExtractor.LocalDone => (d.keys, d.sizes)
-      case o => runDistributed(seeds, preSeen, handoffOf(o))
+      case d: ClosureExtractor.LocalDone => d.keys
+      case o => runDistributed(seeds, preSeen, handoffOf(o))._1
     }
 
   /** SMALL-CLOSURE FAST PATH: when the whole traversal fits the local row
@@ -671,8 +671,10 @@ class ClosureExtractor(
       case _ => None
     }
 
-  /** The distributed fixpoint behind [[runAllWithSizes]]: from the seeds,
-    * or from the last iteration boundary a fast-path `handoff` completed.
+  /** The distributed fixpoint behind [[runAll]] and [[extractAll]]: from
+    * the seeds, or from the last iteration boundary a fast-path `handoff`
+    * completed. Returns the key sets with each table's exact key count —
+    * free, because the fixpoint's final checkpoint-forcing job is a count.
     */
   private def runDistributed(seeds: Seq[(String, DataFrame)],
       preSeen: Map[String, DataFrame],
@@ -785,15 +787,20 @@ class ClosureExtractor(
         chainRaw = acc.filter { case (t, _) => chainable(t) }
     }
 
-    // Run-scoped cache of each table's key projection (pk + edge
-    // columns): the BFS touches the same projections every iteration, and
-    // re-planning + re-scanning parquet per (edge, iteration) dominates
-    // cold-run cost (~9s → ~1s at sf0.1). Released after the fixpoint —
-    // by then every frontier is materialized.
-    val projCache = scala.collection.mutable.Map.empty[(String, Seq[String]), DataFrame]
-    def keyProjection(table: String, cols0: Seq[String]): DataFrame =
-      projCache.getOrElseUpdate((table, cols0),
-        loadTable(table).select(cols0.map(col): _*)
+    // Run-scoped cache of each table's key projection: its pk and every
+    // catalog FK column, which covers every reverse key into another
+    // table (an edge's child column is an FK of its child table) and
+    // every forward FK out of it — so a table both reverse keys and
+    // forward FKs touch is scanned once, not once per column list. The
+    // BFS touches the same projections every iteration, and re-planning
+    // + re-scanning parquet per (edge, iteration) dominates cold-run cost
+    // (~9s → ~1s at sf0.1). Released after the fixpoint — by then every
+    // frontier is materialized.
+    val projCache = scala.collection.mutable.Map.empty[String, DataFrame]
+    def keyProjection(table: String): DataFrame =
+      projCache.getOrElseUpdate(table,
+        loadTable(table).select((catalog.pkOf(table) ++
+            catalog.foreignKeysOf(table).map(_.childCol)).distinct.map(col): _*)
           .persist(StorageLevel.MEMORY_AND_DISK))
 
     while (frontier.nonEmpty || chainRaw.nonEmpty) {
@@ -826,7 +833,7 @@ class ClosureExtractor(
         rksOf(table, depth0).foreach { rk =>
           val childPk = catalog.pkOf(rk.childTable)
           addKeys(rk.childTable,
-            keyProjection(rk.childTable, (childPk :+ rk.childCol).distinct)
+            keyProjection(rk.childTable)
               .join(hinted(keys.withColumnRenamed(rk.parentCol, rk.childCol),
                 size), Seq(rk.childCol), "left_semi")
               .select(childPk.map(col): _*))
@@ -860,29 +867,26 @@ class ClosureExtractor(
         }
       }
 
-      frontier.foreach { case (table, keys) =>
-        val pk = catalog.pkOf(table)
-        val fks = fksOf(table)
-        val keysH = hinted(keys, frontierSizes.get(table))
-        if (fks.nonEmpty && !chainable(table)) {
-          // cycle fallback: one scan of the table, semi-joined down to
-          // frontier rows (chainable tables expand their FKs in the chain
-          // phase below instead — exactly once, when the keys appear)
-          val rows = keyProjection(table, (pk ++ fks.map(_.childCol)).distinct)
-            .join(keysH, pk, "left_semi")
-          fks.foreach { fk =>
-            // J1 forward lookup, batched: null FKs skipped as in the
-            // reference (etl/extractor.go:107-109). No per-edge distinct:
-            // the candidate stage below distincts the per-table union once
-            // — a distinct here would add one shuffle per edge per depth
-            // for rows the union dedups anyway.
-            require(catalog.pkOf(fk.parentTable) == Seq(fk.parentCol),
-              s"FK ${fk.name} must reference the parent PK")
-            addKeys(fk.parentTable,
-              rows.select(col(fk.childCol).as(fk.parentCol))
-                .where(col(fk.parentCol).isNotNull))
-          }
+      // J1 forward lookup, batched: the table's rows for `keys`, then
+      // one parent key set per FK, null FKs skipped as in the reference
+      // (etl/extractor.go:107-109). No per-edge distinct: the candidate
+      // stage below distincts the per-table union once — a distinct here
+      // would add one shuffle per edge per depth for rows the union
+      // dedups anyway.
+      def expandFks(table: String, keys: DataFrame): Unit = {
+        val rows = keyProjection(table).join(keys, catalog.pkOf(table), "left_semi")
+        fksOf(table).foreach { fk =>
+          addKeys(fk.parentTable,
+            rows.select(col(fk.childCol).as(fk.parentCol))
+              .where(col(fk.parentCol).isNotNull))
         }
+      }
+
+      frontier.foreach { case (table, keys) =>
+        val keysH = hinted(keys, frontierSizes.get(table))
+        // cycle fallback (chainable tables expand their FKs in the chain
+        // phase below instead — exactly once, when the keys appear)
+        if (fksOf(table).nonEmpty && !chainable(table)) expandFks(table, keysH)
         expandRks(table, keys, frontierSizes.get(table), depth0 = depth == 0)
         runConfigs(table, keysH)
       }
@@ -939,22 +943,11 @@ class ClosureExtractor(
       // the keys a fast-path handoff left unexpanded) are fresh by
       // definition but sit inside `seen`, so they skip that anti-join.
       chainOrder.foreach { t =>
-        val fks = fksOf(t)
-        if (fks.nonEmpty) {
-          val pk = catalog.pkOf(t)
+        if (fksOf(t).nonEmpty) {
           val produced = chainAcc.get(t).map(keysT0 => seen.get(t).fold(keysT0)(s =>
-            keysT0.distinct().join(hinted(s, seenSizes.get(t)), pk, "left_anti")))
-          (chainRaw.get(t) ++ produced).reduceOption(_.union(_)).foreach { keysT =>
-            val rows = keyProjection(t, (pk ++ fks.map(_.childCol)).distinct)
-              .join(keysT, pk, "left_semi")
-            fks.foreach { fk =>
-              require(catalog.pkOf(fk.parentTable) == Seq(fk.parentCol),
-                s"FK ${fk.name} must reference the parent PK")
-              addKeys(fk.parentTable,
-                rows.select(col(fk.childCol).as(fk.parentCol))
-                  .where(col(fk.parentCol).isNotNull))
-            }
-          }
+            keysT0.distinct().join(hinted(s, seenSizes.get(t)), catalog.pkOf(t), "left_anti")))
+          (chainRaw.get(t) ++ produced).reduceOption(_.union(_))
+            .foreach(expandFks(t, _))
         }
       }
       chainRaw = Map.empty
@@ -1035,7 +1028,7 @@ object ClosureExtractor {
     new ClosureExtractor(catalog, t => graft.Tables(spark, sfDir, t), policy)
 
   /** Row budget for the driver-local BFS fast path (see
-    * [[ClosureExtractor.runAllWithSizes]]): the local traversal may
+    * [[ClosureExtractor.runAll]]): the local traversal may
     * collect at most this many source rows TOTAL across the whole run —
     * whole rows since probes fetch every column, plus the seed and
     * preSeen key rows; one row more and it aborts, handing its last
@@ -1202,7 +1195,6 @@ object ClosureExtractor {
       tables: Map[String, LocalTable], collected: Long) extends LocalOutcome {
     def keys: Map[String, DataFrame] = tables.map { case (t, lt) =>
       t -> localDf(spark, lt.keySchema, lt.keys.map(Row.fromSeq)) }
-    def sizes: Map[String, Long] = tables.map { case (t, lt) => t -> lt.keys.size.toLong }
   }
 
   /** A local relation of driver-held rows. */

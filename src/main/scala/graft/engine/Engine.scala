@@ -98,7 +98,7 @@ class Engine(
     * since the last export, not the world again).
     *
     * `incremental = true` (default) feeds the previous key sets into the
-    * BFS itself ([[graft.closure.ClosureExtractor.runAllWithSizes]]
+    * BFS itself ([[graft.closure.ClosureExtractor.runAll]]
     * `preSeen`): the traversal prunes at every already-exported key, so
     * the recurring cost is the seed depth-0 expansion, one
     * allowlisted-RK/config probe per previously-exported table that has

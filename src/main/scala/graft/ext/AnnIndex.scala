@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * AnnIndex.search(spark, dir, cents, probes, 2, 5) // per query batch
   * }}}
   *
-  * `build` assigns cells with the SAME argmax-cosine fold as the
-  * registered query ([[SimilarityQueries.bestCellStruct]] over the
-  * centroid literal — zero corpus exchange) and writes
+  * `build` assigns cells with the SAME nearest-centroid projection as
+  * the registered query ([[SimilarityQueries.assignCellStruct]] — zero
+  * corpus exchange) and writes
   * `cell=<id>/part-*.parquet`. `search` turns each query's probe list
   * into a `cell IN (...)` partition filter: Spark prunes the non-probed
   * directories at PLANNING time, so the scan touches nprobe/nlist of
@@ -66,10 +66,9 @@ object AnnIndex {
   }
 
   /** Partition the corpus by its assigned cell. `vecs`: (vec_id, v).
-    * Assignment goes through the literal/broadcast crossover
-    * ([[SimilarityQueries.assignCellStruct]]): small nlist constant-folds
-    * the centroids into codegen, production nlist rides an executor
-    * broadcast — both pure projections, zero corpus exchange.
+    * Assignment is [[SimilarityQueries.assignCellStruct]]: the centroids
+    * ride an executor broadcast, a pure projection with zero corpus
+    * exchange.
     */
   def build(vecs: DataFrame, cents: Seq[(Long, Seq[Double])], dir: String): Long = {
     val r = root(dir)
@@ -115,14 +114,13 @@ object AnnIndex {
 
   /** Top-k cosine results per probe query, reading ONLY the probed
     * cells' partitions. `probes`: (query_id, qv); probe cells per query
-    * come from the same top-nprobe fold as `ann_ivf`.
+    * come from the same top-nprobe list as `ann_ivf` ([[SimilarityQueries.topProbeCells]]).
     */
   def search(spark: SparkSession, dir: String, cents: Seq[(Long, Seq[Double])],
       probes: DataFrame, nprobe: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // general top-nprobe per query, ordered score DESC / cell ASC — the
-    // tie order ann_ivf's first-wins fold implies, valid for any nprobe;
-    // behind the same literal/broadcast crossover as build()
+    // same probe list as ann_ivf, valid for any nprobe
     val probed = probes
       .select(col("query_id"), col("qv"),
         explode(SimilarityQueries.topProbeCells(spark, cents, col("qv"),

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The persisted form of [[DedupQueries.dedupIncremental]]'s "old side":
@@ -143,7 +143,10 @@ object DedupIndex {
     * with no remaining cause is emitted and leaves pending. Steady
     * state (no bucket crosses — the designed regime) pays one
     * per-touched-bucket count on top of the dedupe scan; the re-check
-    * pipeline runs only when a crossing actually strands candidates.
+    * pipeline runs only when a crossing actually strands candidates,
+    * and the pending set is rewritten only when it changes (a
+    * resurrection, or a new near-only drop) — otherwise the new segment
+    * commits beside the current `pending` pointer, or beside none.
     */
   def ingest(spark: SparkSession, batch: DataFrame, dir: String): DataFrame = {
     val r = root(dir)
@@ -189,7 +192,8 @@ object DedupIndex {
       .write.mode("overwrite").parquet(s"$r/$seg")
     def bandsOf(df: DataFrame) = DedupQueries.bandedKeys(
       df.filter(col("sig").isNotNull).select("doc_id", "sig"))
-    val resurrected: DataFrame =
+    // None when nothing can have been resurrected
+    val resurrected: Option[DataFrame] =
       if (mayCross) {
         // a bucket "crossed" iff its index-side population was cap-legal
         // ([2,64]) and the batch pushed the union past the cap; tot > 64
@@ -206,14 +210,14 @@ object DedupIndex {
         // here for the cost of one count over the shared bucket frame;
         // the pending-candidate pipeline below runs only when a crossing
         // can actually strand candidates
-        if (crossed.isEmpty) pendingOld.limit(0)
+        if (crossed.isEmpty) None
         else {
         val candidates = pendingOld.join(
             bandsOf(pendingOld).join(crossed, Seq("band", "bucket"), "left_semi")
               .select("doc_id").distinct(),
             Seq("doc_id"), "left_semi")
           .localCheckpoint(false)
-        if (candidates.isEmpty) candidates
+        if (candidates.isEmpty) None
         else {
           val newIdx = idx.unionByName(
             b.select("doc_id", "fp", "sig").withColumn("seed", lit(false)))
@@ -227,23 +231,41 @@ object DedupIndex {
                 .select("doc_id").distinct(),
               Seq("doc_id"), "left_semi")
             .select(col("doc_id"), col("seed").as("is_old"), col("fp"), col("sig"))
-          candidates.join(DedupQueries.nearDroppedIds(reFrame),
-            Seq("doc_id"), "left_anti")
+          // eager: the emit rows and the pending rewrite read it after
+          // a rewrite's cleanup deletes the old pending file, and its
+          // emptiness decides whether the pending set changed
+          Some(candidates.join(DedupQueries.nearDroppedIds(reFrame),
+            Seq("doc_id"), "left_anti").localCheckpoint(true))
+            .filterNot(_.isEmpty)
         }
         }
-      } else pendingOld.limit(0)
-    // eager: the emit rows read the OLD pending file, which the commit
-    // below supersedes and cleanup deletes
-    val emitted = b.join(survivors, Seq("doc_id"), "left_semi")
-      .select("doc_id", "text")
-      .unionByName(resurrected.select("doc_id", "text"))
+      } else None
+    // ONE eager job: the batch rows the exact rule keeps, flagged by
+    // the near rule — survivors emit, near-only rows join the pending
+    // set — with the near-only count observed on the way, so an
+    // unchanged pending set is known without another job
+    val nearOnlyRows = Observation(s"graft_dedup_near_only_$gen")
+    val kept = b.join(survivors, Seq("doc_id"), "left_semi").withColumn("near", lit(false))
+      .unionByName(b.join(nearOnly, Seq("doc_id"), "left_semi").withColumn("near", lit(true)))
+      .observe(nearOnlyRows, count(when(col("near"), 1)).as("n"))
       .localCheckpoint(true)
-    pendingOld.join(resurrected.select("doc_id"), Seq("doc_id"), "left_anti")
-      .unionByName(b.join(nearOnly, Seq("doc_id"), "left_semi"))
-      .select("doc_id", "text", "fp", "sig")
-      .write.mode("overwrite").parquet(s"$r/$pen")
-    SegmentLog.commit(r, SegmentLog.State(gen, st.segments :+ seg,
-      st.extras + ("pending" -> pen)))
+    val survived = kept.filter(!col("near")).select("doc_id", "text")
+    val emitted = resurrected
+      .fold(survived)(res => survived.unionByName(res.select("doc_id", "text")))
+    // the pending set changes only when a doc was resurrected or the
+    // batch adds a near-only row; otherwise the segment commits beside
+    // the current pointer, or beside none
+    val extras =
+      if (resurrected.isEmpty && nearOnlyRows.get("n") == 0L) st.extras
+      else {
+        resurrected
+          .fold(pendingOld)(res => pendingOld.join(res.select("doc_id"), Seq("doc_id"), "left_anti"))
+          .unionByName(kept.filter(col("near")).select("doc_id", "text", "fp", "sig"))
+          .select("doc_id", "text", "fp", "sig")
+          .write.mode("overwrite").parquet(s"$r/$pen")
+        st.extras + ("pending" -> pen)
+      }
+    SegmentLog.commit(r, SegmentLog.State(gen, st.segments :+ seg, extras))
     SegmentLog.cleanup(r)
     if (mayCross) graft.SparkUtil.release(buckets)
     graft.SparkUtil.release(b)

@@ -807,8 +807,8 @@ object DedupQueries {
     * n-grams.
     *
     * Stages: (1) every vector joins its nearest of 16 deterministic
-    * centroids via the [[SimilarityQueries.bestCellStruct]] argmax fold —
-    * a pure projection, zero shuffles over the corpus (production swaps
+    * centroids via [[SimilarityQueries.assignCellStruct]] — a pure
+    * projection, zero shuffles over the corpus (production swaps
     * k-means centroids, same dataflow); (2) within each cell, rank
     * members by centroid-similarity ASC (the paper keeps the
     * LOW-similarity example of a duplicate group — cluster-atypical
@@ -831,15 +831,16 @@ object DedupQueries {
   }
 
   /** The assignment→rank→prune pipeline over any `(vec_id, v)` base and
-    * centroid literal — SemDedupSpec drives it with crafted fixtures (the
+    * centroid set — SemDedupSpec drives it with crafted fixtures (the
     * chain fixture that pins the near-ANY-earlier drop rule) and with
     * spark.ml-trained KMeans centroids (the production path).
     */
-  private[ext] def semDedupCore(base: DataFrame, centArr: org.apache.spark.sql.Column,
+  private[ext] def semDedupCore(base: DataFrame, cents: Seq[(Long, Seq[Double])],
       eps: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val assigned = base
-      .withColumn("bc", SimilarityQueries.bestCellStruct(centArr, col("v")))
+      .withColumn("bc",
+        SimilarityQueries.assignCellStruct(base.sparkSession, cents, col("v")))
       .select(col("vec_id"), col("v"),
         col("bc.cell").as("cell"), col("bc.best").as("cent_sim"))
     val ranked = assigned

@@ -31,9 +31,8 @@ import org.apache.spark.sql.functions._
   * partial aggregate, so the exchange carries at most
   * `partitions × k × dim` rows regardless of corpus size. Assignment is
   * a pure projection over a bounded centroid literal (k×dim = 512
-  * doubles here), the same crossover story as
-  * [[SimilarityQueries.assignCellStruct]]: past 64k doubles the matrix
-  * would ride a broadcast variable instead. The k×dim driver collect per
+  * doubles here); a production k would ride a broadcast variable, as
+  * [[SimilarityQueries.assignCellStruct]]'s centroids do. The k×dim driver collect per
   * iteration is bounded by the model size, not the data — the same
   * bounded-literal convention as [[SimilarityQueries.centroidLit]].
   */
@@ -55,8 +54,8 @@ object KMeans {
 
   /** Nearest-centroid cell for integer vector column `qcol`: transform
     * scores each centroid exactly once into `(d, cell)` structs (HOF
-    * lambdas get no CSE — same reasoning as
-    * [[SimilarityQueries.scoredCents]]), then `array_min`'s lexicographic
+    * lambdas get no common-subexpression elimination, so a comparison
+    * that embedded the distance would recompute it), then `array_min`'s lexicographic
     * struct ordering IS the `ORDER BY d, cell` argmin, ties included.
     * Squares are never −0.0, and inputs are finite by construction, so
     * the fold is total.
@@ -194,8 +193,8 @@ object KMeans {
     * centroids live in quantized space (×10⁶); cosine is scale-invariant,
     * so cell geometry is unchanged and both engines score the identical
     * scaled doubles. Same shapes as annIvf: assignment and probe lists
-    * are pure projections over the bounded centroid model (literal /
-    * broadcast crossover via [[SimilarityQueries.assignCellStruct]] and
+    * are pure projections over the bounded centroid model, broadcast to
+    * the executors ([[SimilarityQueries.assignCellStruct]] and
     * [[SimilarityQueries.topProbeCells]]), and the probe join broadcasts
     * the query side.
     */

@@ -38,121 +38,46 @@ object SimilarityQueries {
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> cast(x AS double))").as("v"))
 
-  /** The first `k` vectors (by vec_id) as a driver-side centroid literal
-    * `array<struct<_1: cell_id, _2: vector>>` — bounded (nlist rows), the
+  /** The first `k` vectors (by vec_id) as a driver-side centroid set
+    * `(cell_id, vector)`, sorted by cell id — bounded (nlist rows), the
     * same deterministic stand-in for trained k-means centroids that the
-    * IVF oracle replays. Shared by [[annIvf]] and
+    * IVF oracle replays. Shared by [[annIvf]], [[annJoin]] and
     * [[DedupQueries.semDedup]].
     */
-  private[ext] def centroidLit(base: DataFrame, k: Int): Column = {
-    val cents: Seq[(Long, Seq[Double])] = base.filter(col("vec_id") < k)
+  private[ext] def centroidLit(base: DataFrame, k: Int): Seq[(Long, Seq[Double])] =
+    base.filter(col("vec_id") < k)
       .select(col("vec_id"), col("v")).collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1)
-    typedLit(cents)
-  }
 
-  /** Per-centroid `(cell, score)` structs for vector column `vcol` —
-    * SCORE FIRST, fold second: HOF lambdas get no common-subexpression
-    * elimination, so a fold whose branches each embed the cosine would
-    * re-run the 64-dim dot product up to 4× per centroid. `transform`
-    * evaluates each cosine exactly once into a (cell, score) array; the
-    * fold then compares plain struct fields. NULL cosine (zero-norm
-    * vector) coalesces BELOW the init score, matching the oracle window's
-    * DESC-nulls-last: an all-null row still lands in its first-by-cent_id
-    * cell instead of silently vanishing.
-    */
-  private[ext] def scoredCents(centArr: Column, vcol: Column): Column =
-    transform(centArr, c =>
-      struct(c.getField("_1").as("cell"),
-        // nanvl: a NaN element (corrupt embedding/centroid) scores the
-        // same degenerate −2.0 as a zero-norm vector — otherwise NaN's
-        // always-false comparisons make the fold return (−1, −3.0) while
-        // the broadcast path crashes; both paths now agree
-        // (CentroidPathSpec NaN case).
-        coalesce(nanvl(round(graft.functions.CosineSimilarity.cosine_sim(
-          c.getField("_2"), vcol), 6), lit(-2.0)), lit(-2.0)).as("s")))
-
-  /** Cell assignment as a per-row argmax-cosine fold over the centroid
-    * literal — a pure projection with ZERO joins or exchanges over the
-    * corpus. Returns `struct(cell, best)`; strict `>` with centroids in
-    * cent_id order makes the fold's first-wins tie-break identical to the
-    * oracle's ORDER BY cos DESC, cent_id ASC.
-    */
-  private[graft] def bestCellStruct(centArr: Column, vcol: Column): Column =
-    aggregate(scoredCents(centArr, vcol),
-      struct(lit(-1L).as("cell"), lit(-3.0).as("best")),
-      (acc, c) =>
-        when(c.getField("s") > acc.getField("best"),
-          struct(c.getField("cell").as("cell"), c.getField("s").as("best")))
-        .otherwise(acc))
-
-  /** Crossover between the centroid-LITERAL fold and the
-    * broadcast-variable expression ([[graft.functions.CentroidTopK]]),
-    * in total doubles (nlist × dim). Below: the literal wins — constant-
-    * folded into codegen, zero setup. Above: a literal expression tree
-    * (and the generated code embedding it) does not survive planning at
-    * production IVF sizes (nlist 10⁴–10⁵ × dim 10²–10³ = 10⁶–10⁸
-    * doubles), so the matrix rides an executor broadcast instead. 64k
-    * doubles ≈ 512 KB of plan payload — comfortably plannable, well
-    * under codegen limits. CentroidPathSpec pins result equality of the
-    * two paths; see SCALE.md "IVF centroid crossover".
-    */
-  val CentroidLiteralMaxDoubles: Long = 64 * 1024
-
-  private def centroidPayload(cents: Seq[(Long, Seq[Double])]): Long =
-    cents.iterator.map(_._2.size.toLong).sum
-
-  /** `struct(cell, best)` of the nearest centroid — the [[bestCellStruct]]
-    * semantics behind the literal/broadcast crossover. Identical results
-    * on both paths (CentroidPathSpec).
-    */
-  /** NULL-vector parity shim for the broadcast path: the literal fold
-    * scores a null vector −2.0 against every centroid (null cosine →
-    * coalesce) and assigns the first cell, but [[graft.functions.CentroidTopK]]
-    * is a null-intercepting UnaryExpression — null in, null out. An
-    * empty array scores −2.0 everywhere (length mismatch), reproducing
-    * the fold's behavior exactly (CentroidPathSpec pins it).
+  /** A null vector reads as the empty array, which scores −2.0 against
+    * every centroid (length mismatch), so it lands in the first cell by
+    * cell id at −2.0 — the oracle's DESC-nulls-last order over an
+    * all-null score column — instead of vanishing through
+    * [[graft.functions.CentroidTopK]]'s null-in, null-out.
     */
   private def nullSafeVec(vcol: Column): Column =
     coalesce(vcol, typedLit(Seq.empty[Double]))
 
+  /** `struct(cell, best)` of the nearest centroid: the top-1 of
+    * [[graft.functions.CentroidTopK]] — a pure projection with ZERO
+    * joins or exchanges over the corpus. Ties go to the smaller cell
+    * id, as in the oracle's ORDER BY cos DESC, cent_id ASC.
+    */
   private[graft] def assignCellStruct(spark: SparkSession,
-      cents: Seq[(Long, Seq[Double])], vcol: Column,
-      maxLiteralDoubles: Long = CentroidLiteralMaxDoubles): Column = {
-    val sorted = cents.sortBy(_._1)
-    if (centroidPayload(sorted) <= maxLiteralDoubles)
-      bestCellStruct(typedLit(sorted), vcol)
-    else {
-      val top1 = element_at(
-        graft.functions.CentroidTopK.centroid_topk(spark, sorted, nullSafeVec(vcol), 1), 1)
-      struct(top1.getField("cell").as("cell"), top1.getField("s").as("best"))
-    }
+      cents: Seq[(Long, Seq[Double])], vcol: Column): Column = {
+    val top1 = element_at(
+      graft.functions.CentroidTopK.centroid_topk(spark, cents, nullSafeVec(vcol), 1), 1)
+    struct(top1.getField("cell").as("cell"), top1.getField("s").as("best"))
   }
 
   /** `array<bigint>` of the `nprobe` nearest cells for a query vector,
     * ordered score DESC then cell ASC — the probe-list dual of
-    * [[assignCellStruct]], same crossover. The literal path is the
-    * comparator sort AnnIndex.search once used inline.
+    * [[assignCellStruct]].
     */
   private[graft] def topProbeCells(spark: SparkSession,
-      cents: Seq[(Long, Seq[Double])], vcol: Column, nprobe: Int,
-      maxLiteralDoubles: Long = CentroidLiteralMaxDoubles): Column = {
-    val sorted = cents.sortBy(_._1)
-    if (centroidPayload(sorted) <= maxLiteralDoubles) {
-      val sortedCells = array_sort(
-        scoredCents(typedLit(sorted), vcol),
-        (l, r) =>
-          when(l.getField("s") > r.getField("s"), -1)
-          .when(l.getField("s") < r.getField("s"), 1)
-          .when(l.getField("cell") < r.getField("cell"), -1)
-          .when(l.getField("cell") > r.getField("cell"), 1)
-          .otherwise(0))
-      slice(transform(sortedCells, c => c.getField("cell")), 1, nprobe)
-    } else
-      transform(
-        graft.functions.CentroidTopK.centroid_topk(spark, sorted, nullSafeVec(vcol), nprobe),
-        c => c.getField("cell"))
-  }
+      cents: Seq[(Long, Seq[Double])], vcol: Column, nprobe: Int): Column =
+    graft.functions.CentroidTopK.centroid_topk(spark, cents, nullSafeVec(vcol), nprobe)
+      .getField("cell")
 
   /** Exact brute-force cosine top-5 for query vectors (vec_id < 5). */
   def knnBrute(spark: SparkSession, dir: String): DataFrame = {
@@ -261,50 +186,30 @@ object SimilarityQueries {
     * 2 nearest cells and rank top-5 within them.
     *
     * The centroid set is BOUNDED (nlist rows — 16 here, a few thousand in
-    * production) and lives driver-side as a literal, exactly like the SRP
-    * plane matrix: cell assignment is a per-row `aggregate()` argmin fold
-    * over that literal — a pure projection with ZERO joins or exchanges
-    * over the corpus. (An earlier form crossJoined the corpus against a
-    * broadcast centroid DataFrame and took argmin via a row_number window,
-    * which planned an Exchange of the 16×-inflated rows — correct, but
-    * not the plan you'd run at 100 TB.) Strict `>` with centroids in
-    * cent_id order makes the fold's first-wins tie-break identical to the
-    * oracle's ORDER BY cos DESC, cent_id ASC.
+    * production) and is collected to the driver, then broadcast to the
+    * executors: cell assignment and the probe list are per-row top-k
+    * projections ([[assignCellStruct]], [[topProbeCells]]) with ZERO
+    * joins or exchanges over the corpus. (An earlier form crossJoined the
+    * corpus against a broadcast centroid DataFrame and took argmin via a
+    * row_number window, which planned an Exchange of the 16×-inflated
+    * rows — correct, but not the plan you'd run at 100 TB.) Ties go to
+    * the smaller cell id, as in the oracle's ORDER BY cos DESC, cent_id.
     */
-  /** Top-2 probe cells for query vector `qcol` via one fold carrying
-    * (best, second-best) — shared by [[annIvf]] (fixed probe set) and
-    * [[annJoin]] (corpus-scale query side). */
-  private def probeTop2Fold(centArr: Column, qcol: Column): Column =
-    aggregate(scoredCents(centArr, qcol),
-      struct(lit(-1L).as("c1"), lit(-3.0).as("s1"),
-             lit(-1L).as("c2"), lit(-3.0).as("s2")),
-      (acc, c) => {
-        val s = c.getField("s")
-        when(s > acc.getField("s1"),
-          struct(c.getField("cell").as("c1"), s.as("s1"),
-                 acc.getField("c1").as("c2"), acc.getField("s1").as("s2")))
-        .when(s > acc.getField("s2"),
-          struct(acc.getField("c1").as("c1"), acc.getField("s1").as("s1"),
-                 c.getField("cell").as("c2"), s.as("s2")))
-        .otherwise(acc)
-      })
-
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = vecs(spark, dir)
     // bounded driver-side collect (nlist=16 rows), like the J3 tuples
-    val centArr = centroidLit(base, 16)
+    val cents = centroidLit(base, 16)
 
-    // cell assignment: per-row argmax-cosine fold, no shuffle
+    // cell assignment: per-row top-1 centroid, no shuffle
     val assigned = base
-      .withColumn("cell", bestCellStruct(centArr, col("v")).getField("cell"))
+      .withColumn("cell", assignCellStruct(spark, cents, col("v")).getField("cell"))
       .select(col("vec_id"), col("v"), col("cell"))
 
     val probes = base.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      .withColumn("pf", probeTop2Fold(centArr, col("qv")))
       .select(col("query_id"), col("qv"),
-        explode(array(col("pf.c1"), col("pf.c2"))).as("cell"))
+        explode(topProbeCells(spark, cents, col("qv"), 2)).as("cell"))
 
     // search only within probed cells
     val wRank = Window.partitionBy(col("query_id"))
@@ -367,15 +272,14 @@ object SimilarityQueries {
   def annJoin(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = vecs(spark, dir)
-    val centArr = centroidLit(base, 16)
+    val cents = centroidLit(base, 16)
     val corpus = base.filter(col("vec_id") % 10 =!= 0)
-      .withColumn("cell", bestCellStruct(centArr, col("v")).getField("cell"))
+      .withColumn("cell", assignCellStruct(spark, cents, col("v")).getField("cell"))
       .select(col("vec_id"), col("v"), col("cell"))
     val queries = base.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      .withColumn("pf", probeTop2Fold(centArr, col("qv")))
       .select(col("query_id"), col("qv"),
-        explode(array(col("pf.c1"), col("pf.c2"))).as("cell"))
+        explode(topProbeCells(spark, cents, col("qv"), 2)).as("cell"))
     val wRank = Window.partitionBy("query_id").orderBy(desc("cos"), asc("vec_id"))
     corpus.join(queries, Seq("cell"))
       .withColumn("cos", round(cosineExpr("qv", "v"), 6))
@@ -569,9 +473,7 @@ object SimilarityQueries {
     // projection, where an earlier form joined a broadcast codebook DataFrame
     // and argmin'ed via a row_number window, planning an Exchange of the
     // k×-inflated corpus rows.
-    val cbRows: Seq[(Long, Seq[Double])] = base.filter(col("vec_id") < k)
-      .select(col("vec_id"), col("v")).collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1)
+    val cbRows = centroidLit(base, k)
     val cbLit = typedLit((0 until m).map(s =>
       cbRows.map { case (code, v) => (code, v.slice(s * sub, (s + 1) * sub)) }))
     // native fused loop (graft.functions.SqL2): bitwise-equal to the
@@ -580,9 +482,9 @@ object SimilarityQueries {
     // squared-difference array; round(.., 6) readout unchanged
     val l2c = (a: Column, b: Column) =>
       round(graft.functions.SqL2.sq_l2(a, b), 6)
-    // SCORE FIRST, fold second (same rationale as annIvf's scoredCents):
-    // HOF lambdas get no common-subexpression elimination, so embedding
-    // l2c in both the condition and the result struct would run the
+    // SCORE FIRST, fold second: HOF lambdas get no common-subexpression
+    // elimination, so embedding l2c in both the condition and the
+    // result struct would run the
     // 16-dim distance twice per code. `transform` evaluates each distance
     // exactly once; strict < with codes in code order ≡ ORDER BY d2 ASC,
     // code ASC.
@@ -666,8 +568,8 @@ object SimilarityQueries {
     * fraction; compared to [[annIvf]] alone, the per-candidate cost
     * drops from a 64-dim cosine to 4 table lookups.
     *
-    * ONE corpus pass computes BOTH the cell assignment (argmax-cosine
-    * fold, [[assignCellStruct]] crossover) and the PQ codes (argmin-L2
+    * ONE corpus pass computes BOTH the cell assignment (top-1 centroid,
+    * [[assignCellStruct]]) and the PQ codes (argmin-L2
     * fold) in the same projection — the plan keeps pq_topk's two-scan
     * shape (corpus + filter-pushed query side) with zero extra reads.
     * The broadcast side is (query × probed-cell × subspace × code) LUT
@@ -784,9 +686,7 @@ object SimilarityQueries {
   private def annIvfPqAdc(spark: SparkSession, dir: String): DataFrame = {
     val m = 4; val sub = dims / m; val kCodes = 16; val nprobe = 2
     val base = vecs(spark, dir)
-    val cents: Seq[(Long, Seq[Double])] = base.filter(col("vec_id") < 16)
-      .select(col("vec_id"), col("v")).collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1)
+    val cents = centroidLit(base, 16)
     val cbLit = typedLit((0 until m).map(s =>
       cents.take(kCodes).map { case (code, v) => (code, v.slice(s * sub, (s + 1) * sub)) }))
     // native fused loop (graft.functions.SqL2): bitwise-equal to the
@@ -1138,9 +1038,7 @@ object SimilarityQueries {
     */
   def annIndexSearch(spark: SparkSession, dir: String): DataFrame = {
     val base = vecs(spark, dir)
-    val cents: Seq[(Long, Seq[Double])] = base.filter(col("vec_id") < 16)
-      .select("vec_id", "v")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
+    val cents = centroidLit(base, 16)
     val loc = graft.SparkUtil.oncePerJvm("ann-index", dir) { d =>
       AnnIndex.build(base, cents, d)
       ()

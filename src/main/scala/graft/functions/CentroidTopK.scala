@@ -3,38 +3,39 @@ package graft.functions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Top-k nearest IVF centroids for a vector — the LARGE-nlist form of
-  * [[graft.ext.SimilarityQueries.bestCellStruct]]'s centroid-literal fold.
+/** Top-k nearest IVF centroids for a vector — the one nearest-centroid
+  * path behind [[graft.ext.SimilarityQueries.assignCellStruct]] (top-1
+  * cell assignment) and [[graft.ext.SimilarityQueries.topProbeCells]]
+  * (top-nprobe probe lists).
   *
-  * The literal fold embeds nlist×dim doubles in the expression tree:
-  * unbeatable at nlist ≈ 16 (zero corpus exchange, constant-folded), but
-  * a production IVF wants nlist in the 10⁴–10⁵ range at dim 10²–10³,
-  * where a 10⁷-element literal breaks planning and codegen. Here the
-  * centroid matrix instead rides an executor [[Broadcast]] — shipped once
-  * per executor, never serialized into the plan, task binaries stay
-  * bytes-sized — and the scoring loop is compiled Scala referenced from
-  * generated code via `addReferenceObj`, so the expression still
-  * participates in whole-stage codegen. Cell assignment remains a pure
-  * projection: ZERO joins or exchanges over the corpus, same as the
-  * literal fold it replaces above the crossover (SCALE.md "IVF centroid
-  * crossover").
+  * The centroid matrix rides an executor [[Broadcast]] — shipped once per
+  * executor, never serialized into the plan, so task binaries stay
+  * bytes-sized at production IVF sizes (nlist 10⁴–10⁵ × dim 10²–10³) —
+  * and the scoring loop is compiled Scala referenced from generated code
+  * via `addReferenceObj`, so the expression still participates in
+  * whole-stage codegen. Cell assignment is a pure projection: ZERO joins
+  * or exchanges over the corpus. A HOF fold over a centroid literal
+  * would not be cheaper even at nlist 16: `transform` and `aggregate`
+  * are `CodegenFallback`, so their lambdas run interpreted per row and
+  * per centroid (SCALE.md "IVF centroid scoring").
   *
-  * Scoring contract (bitwise-identical to the literal fold — pinned by
-  * CentroidPathSpec): score = round(cosine, 6) with HALF_UP BigDecimal
-  * rounding (Spark's `round`), null cosine (zero-norm or length mismatch)
-  * → −2.0, ranking by score DESC then cell ASC (≡ the fold's strict-`>`
-  * first-wins over cells in ascending cent_id order). Returns the top
-  * `k` as `array<struct<cell: bigint, s: double>>`, shorter iff k > nlist.
+  * Scoring contract (CentroidPathSpec pins it against a reference HOF
+  * fold): score = round(cosine, 6) with HALF_UP
+  * BigDecimal rounding (Spark's `round`), null cosine (zero-norm or
+  * length mismatch) or a NaN/infinite one → −2.0, ranking by score DESC
+  * then cell ASC (the oracle's ORDER BY cos DESC, cent_id). Returns the
+  * top `k` as `array<struct<cell: bigint, s: double>>`, shorter iff
+  * k > nlist.
   */
 case class CentroidTopK(
     child: Expression,
-    bc: Broadcast[(Array[Long], Array[Array[Double]])],
+    bc: Broadcast[(Array[Long], Array[ArrayData])],
     k: Int)
   extends UnaryExpression {
 
@@ -81,7 +82,7 @@ object CentroidTopK {
     * in any sane configuration, so the O(nlist·k) worst case is the
     * probe-list case k = nprobe ≪ nlist.
     */
-  def compute(cents: (Array[Long], Array[Array[Double]]), a: ArrayData,
+  def compute(cents: (Array[Long], Array[ArrayData]), a: ArrayData,
               aIsFloat: Boolean, k: Int): ArrayData = {
     val (cells, vecs) = cents
     val n = math.min(k, cells.length)
@@ -111,30 +112,13 @@ object CentroidTopK {
     new GenericArrayData(rows)
   }
 
-  /** round(cosine, 6) with null→−2.0 — the literal fold's
-    * `coalesce(round(cosine_sim(...), 6), -2.0)` contract. The cosine
-    * accumulation is element-order sequential, identical to
-    * [[CosineSimilarity.nullSafeEval]].
+  /** round(cosine, 6), with a null, NaN or infinite cosine → −2.0: NaN
+    * elements (a corrupt embedding or centroid) make the quotient NaN,
+    * and `BigDecimal.valueOf(NaN)` throws (CentroidPathSpec NaN case).
     */
-  private def score(cent: Array[Double], a: ArrayData, aIsFloat: Boolean): Double = {
-    val n = cent.length
-    if (n != a.numElements()) return -2.0
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = cent(i)
-      val y = if (a.isNullAt(i)) 0.0 else if (aIsFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) return -2.0
-    val cos = dot / denom
-    // NaN elements (corrupt embedding or centroid) make the quotient NaN,
-    // and BigDecimal.valueOf(NaN) throws — map to the degenerate no-match
-    // score instead, matching the literal fold's nanvl(…, -2.0)
-    // (CentroidPathSpec pins parity on NaN vectors).
-    if (java.lang.Double.isNaN(cos) || java.lang.Double.isInfinite(cos)) -2.0
+  private def score(cent: ArrayData, a: ArrayData, aIsFloat: Boolean): Double = {
+    val cos = CosineSimilarity.compute(cent, false, a, aIsFloat)
+    if (cos == null || cos.isNaN || cos.isInfinite) -2.0
     else java.math.BigDecimal.valueOf(cos)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
   }
@@ -143,8 +127,8 @@ object CentroidTopK {
   def centroid_topk(spark: org.apache.spark.sql.SparkSession,
                     cents: Seq[(Long, Seq[Double])], v: Column, k: Int): Column = {
     val sorted = cents.sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(
-      (sorted.map(_._1).toArray, sorted.map(_._2.toArray).toArray))
+    val bc = spark.sparkContext.broadcast((sorted.map(_._1).toArray,
+      sorted.map(c => UnsafeArrayData.fromPrimitiveArray(c._2.toArray): ArrayData).toArray))
     ColumnBridge.column(CentroidTopK(ColumnBridge.expression(v), bc, k))
   }
 }

@@ -45,47 +45,18 @@ case class CosineSimilarity(left: Expression, right: Expression)
     case _ => false
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    val af = isFloat(left); val bf = isFloat(right)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (a.isNullAt(i)) 0.0 else if (af) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (b.isNullAt(i)) 0.0 else if (bf) b.getFloat(i).toDouble else b.getDouble(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    CosineSimilarity.compute(l.asInstanceOf[ArrayData], isFloat(left),
+      r.asInstanceOf[ArrayData], isFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val getA = if (isFloat(left)) "getFloat" else "getDouble"
-    val getB = if (isFloat(right)) "getFloat" else "getDouble"
+    val (af, bf) = (isFloat(left), isFloat(right))
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb"); val x = ctx.freshName("x")
-      val y = ctx.freshName("y"); val denom = ctx.freshName("denom")
+      val boxed = ctx.freshName("boxed")
       s"""
-       |final int $n = $a.numElements();
-       |if ($n != $b.numElements()) {
-       |  ${ev.isNull} = true;
-       |} else {
-       |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-       |  for (int $i = 0; $i < $n; $i++) {
-       |    final double $x = $a.isNullAt($i) ? 0.0 : (double) $a.$getA($i);
-       |    final double $y = $b.isNullAt($i) ? 0.0 : (double) $b.$getB($i);
-       |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-       |  }
-       |  final double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-       |  if ($denom == 0.0) { ${ev.isNull} = true; }
-       |  else { ${ev.value} = $dot / $denom; }
-       |}
+       |java.lang.Double $boxed = graft.functions.CosineSimilarity.compute($a, $af, $b, $bf);
+       |if ($boxed == null) { ${ev.isNull} = true; }
+       |else { ${ev.value} = $boxed.doubleValue(); }
       """.stripMargin
     })
   }
@@ -96,13 +67,30 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+
+  /** The one cosine loop — interpreted eval, generated code and
+    * [[CentroidTopK]]'s centroid scoring all call it. Each side is read
+    * as float or double per its flag; a null element reads as 0.0.
+    * Returns null (boxed) on a length mismatch or a zero norm.
+    */
+  def compute(a: ArrayData, aIsFloat: Boolean,
+              b: ArrayData, bIsFloat: Boolean): java.lang.Double = {
+    val n = a.numElements()
+    if (n != b.numElements()) return null
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = if (a.isNullAt(i)) 0.0 else if (aIsFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (b.isNullAt(i)) 0.0 else if (bIsFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
+  }
+
   /** Column-level entry point: `cosine_sim($"a", $"b")`. */
   def cosine_sim(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimilarity(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Register `cosine_sim` for SQL use on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
 }

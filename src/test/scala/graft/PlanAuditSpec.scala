@@ -27,8 +27,8 @@ class PlanAuditSpec extends SparkSpec {
     "pack_chunks" -> 1,
     "train_test_split" -> 1,
     "knn_brute" -> 2,      // base + broadcast query side
-    "ann_ivf" -> 2,        // corpus + probe side; assignment is a fold over
-                           // the centroid literal, never a join
+    "ann_ivf" -> 2,        // corpus + probe side; assignment is a top-1
+                           // over the broadcast centroids, never a join
     "pq_topk" -> 2,        // corpus + query side; encode fold over the
                            // codebook literal, ADC via broadcast LUT
     "ann_ivf_pq" -> 2,     // ONE corpus pass computing cell + codes
@@ -71,8 +71,8 @@ class PlanAuditSpec extends SparkSpec {
                             // means the CC pipeline crept back in)
     "semdedup" -> 1,       // ranked (cell,rank,v) projection persisted once;
                            // the pair join's both sides and the keep-flag
-                           // join all read that cache; assignment is the
-                           // centroid-literal fold, never a join
+                           // join all read that cache; assignment is a
+                           // top-1 over the broadcast centroids, never a join
     "chunk_overlap" -> 1,  // per-doc explode, no join-backs
     "table_profile" -> 1,  // ONE scan + one aggregate for every metric;
                            // the result row explodes per column — never a
@@ -128,8 +128,8 @@ class PlanAuditSpec extends SparkSpec {
     "golden_record" -> 2,      // documents + the persisted ClusterIndex;
                                // a 3rd scan means the CC loop crept back
     "curation_report" -> 2,    // same pair as golden_record
-    "ann_join" -> 2,           // corpus side + query side; cells are
-                               // centroid-literal folds, never a join
+    "ann_join" -> 2,           // corpus side + query side; cells come from
+                               // the broadcast centroids, never a join
     "q8_market_share" -> 8,    // 7 tables with nation scanned twice (two
                                // dimension roles) — all dims broadcast
     "lsh_param_plan" -> 0,     // bounded scalar math, no table access

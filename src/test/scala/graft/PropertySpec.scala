@@ -366,7 +366,7 @@ class PropertySpec extends SparkSpec {
 
   // ---- incremental delta: preSeen pruning == full closure minus prev ----
   //
-  // The incremental contract (`ClosureExtractor.runAllWithSizes` scaladoc):
+  // The incremental contract (`ClosureExtractor.runAll` scaladoc):
   // seeding the BFS with preSeen = the key closure of a PRIOR run under
   // the same policy prunes the traversal at every previously-exported key
   // yet returns EXACTLY closure(seeds) \ preSeen. Seeds are never pruned

@@ -66,7 +66,7 @@ class StaticAuditSpec extends AnyFunSuite {
     "graft/ext/GraphQueries.scala" -> 2,
     "graft/ext/KMeans.scala" -> 2,
     "graft/ext/SearchIndex.scala" -> 1,
-    "graft/ext/SimilarityQueries.scala" -> 6,
+    "graft/ext/SimilarityQueries.scala" -> 3,
     "graft/ext/TextQueries.scala" -> 5,
     "graft/io/ArtifactDiff.scala" -> 1,
     "graft/queries/CoreQueries.scala" -> 2,
@@ -152,10 +152,11 @@ class StaticAuditSpec extends AnyFunSuite {
   // both walk the catalog through ClosureExtractor's policy-gated edge
   // lists, so a traversal gets its fast path, handoff, counting-job
   // discipline and releases in one place; Engine.describe only prints
-  // the edges, and Catalog defines the two accessors
+  // the edges, and Catalog defines the two accessors (ClosureExtractor's
+  // three: the chain order, fksOf and the per-table key projection)
   test("one traversal engine: only ClosureExtractor and Engine.describe read catalog edges") {
     assert(filesWith("foreignKeysOf(") == Map(
-      "graft/closure/ClosureExtractor.scala" -> 2,
+      "graft/closure/ClosureExtractor.scala" -> 3,
       "graft/engine/Engine.scala" -> 1,
       "graft/meta/Catalog.scala" -> 1))
     assert(filesWith("referenceKeysOf(") == Map(
@@ -168,6 +169,24 @@ class StaticAuditSpec extends AnyFunSuite {
     val describe = engine.substring(from max 0, if (next < 0) engine.length else next)
     assert(from >= 0 && describe.contains("foreignKeysOf(") &&
       describe.contains("referenceKeysOf("), "Engine reads catalog edges outside describe")
+  }
+
+  // one nearest-centroid path and one cosine loop: the column-level
+  // cosine is built only by cosineExpr, so centroid scoring cannot grow
+  // a second path beside CentroidTopK, and the loop itself lives only
+  // in CosineSimilarity.compute (eval, generated code, CentroidTopK)
+  test("one cosine: cosine_sim only behind cosineExpr, one compute loop") {
+    assert(filesWith("cosine_sim(") == Map(
+      "graft/functions/CosineSimilarity.scala" -> 2, // its def and doc
+      "graft/ext/SimilarityQueries.scala" -> 1))
+    val sq = java.nio.file.Files.readString(
+      mainRoot.resolve("graft/ext/SimilarityQueries.scala"))
+    assert(sq.contains("def cosineExpr(a: String, b: String): Column =\n" +
+      "    graft.functions.CosineSimilarity.cosine_sim("),
+      "cosine_sim is called outside SimilarityQueries.cosineExpr")
+    assert(filesWith("CosineSimilarity.compute(") == Map(
+      "graft/functions/CosineSimilarity.scala" -> 2, // eval, generated code
+      "graft/functions/CentroidTopK.scala" -> 1))
   }
 
   test("no env-gated stderr tracers") {

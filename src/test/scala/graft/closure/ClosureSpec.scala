@@ -295,4 +295,64 @@ class ClosureSpec extends SparkSpec {
       .map { case (t, df) => t -> ids(df) }.filter(_._2.nonEmpty)
     assert(delta == Map("c_table" -> Set(103L)), s"delta=$delta")
   }
+
+  test("a distributed closure scans a table once for its reverse key and forward FKs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart, SparkListenerTaskEnd}
+    // par 1's reverse key reaches 30 of item's 3000 rows, whose forward
+    // FKs then reach sup: item's key projection serves both edges, so
+    // its 3000 rows are read once (a second scan would read 6000)
+    val dir = java.nio.file.Files.createTempDirectory("closure-scan-once").toString
+    val itemRows = 3000L
+    (1L to 100L).toDF("id").write.parquet(s"$dir/par")
+    (1L to 5L).toDF("id").write.parquet(s"$dir/sup")
+    (1L to itemRows).map(i => (i, i % 100 + 1, i / 100 % 5 + 1)).toDF("id", "par_id", "sup_id")
+      .write.parquet(s"$dir/item")
+    val cat = Catalog(
+      Seq("par", "sup", "item").map(t => t -> TableMeta(t, Seq("id"))).toMap,
+      Seq(FkEdge("item_par_fkey", "item", "par_id", "par", "id"),
+        FkEdge("item_sup_fkey", "item", "sup_id", "sup", "id")))
+    val tables = Seq("par", "sup", "item").map(t => t -> spark.read.parquet(s"$dir/$t")).toMap
+    val ex = new ClosureExtractor(cat, tables(_), fastPathBudget = 0L)
+    val (tag, marker) = ("graft.spec.scan-once", "graft.spec.scan-once.marker")
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val read = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    @volatile var markerJob = -1
+    val rec = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def is(k: String) = Option(e.properties).exists(_.getProperty(k) == "on")
+        if (is(tag)) e.stageIds.foreach(stages.add)
+        if (is(marker)) markerJob = e.jobId
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => read.add((e.stageId, m.inputMetrics.recordsRead)))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(rec)
+    try {
+      sc.setLocalProperty(tag, "on")
+      val keys =
+        try ex.runAll(Seq("par" -> tables("par").filter(col("id") === 1)))
+        finally sc.setLocalProperty(tag, null)
+      // the listener bus is FIFO: once a later marker job has ended,
+      // every event of the closure has been delivered
+      sc.setLocalProperty(marker, "on")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!(markerJob >= 0 && ended.contains(markerJob)) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      import scala.jdk.CollectionConverters._
+      val records = read.asScala.collect { case (st, n) if stages.contains(st) => n }.sum
+      assert(records >= itemRows && records < itemRows * 3 / 2,
+        s"closure input records: $records for a $itemRows-row item table")
+      assert(keys.map { case (t, df) => t -> df.count() } ==
+        Map("par" -> 1L, "item" -> 30L, "sup" -> 5L))
+    } finally {
+      sc.removeSparkListener(rec)
+      graft.io.SegmentLog.deleteRecursively(dir)
+    }
+  }
 }

@@ -108,9 +108,15 @@ class DedupIndexSpec extends SparkSpec {
 
     // and a third, non-crossing batch behaves (bucket already over cap:
     // no near causes, distinct fps → all survive; nothing re-resurrects)
+    val root = s"$idxDir/dedup_index"
+    val pendingBefore = graft.io.SegmentLog.read(root).get.extras.get("pending")
     val b3 = (71L to 75L).map(doc)
     val e3 = DedupIndex.ingest(spark, df(b3), idxDir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(e3 == (71L to 75L).toSet)
+    // it leaves the pending set as it was: its segment commits beside
+    // the same pointer, with no rewrite
+    val st = graft.io.SegmentLog.read(root).get
+    assert(st.segments.size == 4 && st.extras.get("pending") == pendingBefore)
   }
 }

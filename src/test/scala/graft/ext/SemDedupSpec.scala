@@ -36,9 +36,9 @@ class SemDedupSpec extends SparkSpec {
     def at(deg: Double): Seq[Double] = Seq(math.cos(deg * rad), math.sin(deg * rad))
     val base = Seq((1L, at(0)), (2L, at(30)), (3L, at(60)))
       .toDF("vec_id", "v")
-    val centArr = typedLit(Seq((0L, at(0))))
+    val cents = Seq((0L, at(0)))
 
-    val out = DedupQueries.semDedupCore(base, centArr, eps)
+    val out = DedupQueries.semDedupCore(base, cents, eps)
       .select("vec_id", "keep").as[(Long, Int)].collect().toMap
     assert(out === Map(1L -> 0, 2L -> 0, 3L -> 1))
   }
@@ -53,10 +53,10 @@ class SemDedupSpec extends SparkSpec {
     val model = new KMeans().setK(8).setSeed(42L)
       .setFeaturesCol("features").setPredictionCol("cell")
       .fit(base.withColumn("features", array_to_vector(col("v"))))
-    val centArr = typedLit(model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toArray.toSeq) }.toSeq.sortBy(_._1))
+    val cents = model.clusterCenters.zipWithIndex
+      .map { case (c, i) => (i.toLong, c.toArray.toSeq) }.toSeq
 
-    val out = DedupQueries.semDedupCore(base, centArr, specEps)
+    val out = DedupQueries.semDedupCore(base, cents, specEps)
       .persist()
     val dropped = out.filter(col("keep") === 0).count()
     info(s"dropped $dropped of ${out.count()}")

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.scalacheck.{Gen, rng}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,7 +51,8 @@ class CentroidTopKPropertySpec extends AnyFunSuite {
 
   test("compute == sort-model on random centroids/vectors incl. ties and zero norms") {
     cases(genCase, 400).foreach { case (cells, vecs, v, k) =>
-      val got = CentroidTopK.compute((cells, vecs), new GenericArrayData(v), aIsFloat = false, k)
+      val got = CentroidTopK.compute((cells, vecs.map(c => new GenericArrayData(c): ArrayData)),
+        new GenericArrayData(v), aIsFloat = false, k)
       val gotSeq = (0 until got.numElements()).map { i =>
         val r = got.getStruct(i, 2); (r.getLong(0), r.getDouble(1))
       }

@@ -38,7 +38,13 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("self-similarity is 1.0 (within fp) and SQL registration works") {
-    CosineSimilarity.register(spark)
+    // the SQL function comes from GraftExtensions, the session extension
+    // that registers it: its injected functions go into this live
+    // session's registry (GraftExtensionsSpec builds a fresh session)
+    new GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit =
+        spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3)
+    })
     emb.limit(5).createOrReplaceTempView("emb5")
     val vals = spark.sql("SELECT cosine_sim(embedding, embedding) c FROM emb5")
       .collect().map(_.getDouble(0))
